@@ -25,9 +25,36 @@ import scala.jdk.CollectionConverters._
   *    state materialized as parquet (one action per row), so a reader
   *    needn't replay from zero; `_last_checkpoint` names the latest.
   *
-  * Resolution is checkpoint-then-tail: start from the newest
-  * single-part checkpoint at or below the target version, then apply
-  * the JSON tail. FILE STATE IS TIERED ([[FileIndex]]): below the
+  * Resolution ([[snapshotAt]]) takes the first of three paths that
+  * applies:
+  *
+  *  1. CACHE — the JVM keeps, per table (keyed by its absolute path),
+  *     the latest small-tier state it replayed; a read at that version
+  *     returns it.
+  *  2. INCREMENTAL TAIL — a read at a newer version, with every commit
+  *     in between still present as JSON, forks the cached state and
+  *     applies only those commits, then runs the same support checks
+  *     as a cold read.
+  *  3. CHECKPOINT + TAIL — otherwise: start from the newest whole
+  *     checkpoint at or below the target version, then apply the JSON
+  *     tail.
+  *
+  * A cache entry is trusted only while the commit file of its own
+  * version carries the stamp it had when cached (file key, size,
+  * mtime, and a CRC-32C of its bytes). Commits are immutable, so a
+  * stamp changes only when the table is deleted and re-created at the
+  * same path, and such an entry is dropped. The checksum is what makes
+  * this independent of the filesystem: a re-created commit may reuse
+  * the freed inode, keep the size and land in the same mtime tick, but
+  * it carries a new table id and commit clock. Not cached: time travel
+  * below the cached version (read cold, the newer entry kept), the
+  * Dataset tier, and the DvOnly replay vacuum's DV guard runs. The
+  * cache is a bounded LRU (see `SnapshotCache`) and has no
+  * configuration. A cold read of a checkpoint runs two Spark jobs: the
+  * parquet schema and ONE collect of all its actions (see
+  * `applyActionFrame`).
+  *
+  * FILE STATE IS TIERED ([[FileIndex]]): below the
   * [[DatasetThresholdKey]] file count the checkpoint's actions collect
   * to a driver Seq (the fast path — same driver-memory class as
   * Spark's own InMemoryFileIndex); above it the add rows STAY a Spark
@@ -770,6 +797,25 @@ object DeltaRead {
       case _ => files.remove(path)
     }
 
+    /** A [[Replay.Full]] copy of this small-tier state — the seed the
+      * snapshot cache advances, so a cached state is never mutated. */
+    def fork(): Replay = {
+      require(mode == Replay.Full, s"only small-tier replays fork, not $mode")
+      val r = new Replay(Replay.Full)
+      r.files ++= files
+      r.schema = schema
+      r.partitionColumns = partitionColumns
+      r.metaId = metaId
+      r.minReaderVersion = minReaderVersion
+      r.minWriterVersion = minWriterVersion
+      r.readerFeatures = readerFeatures
+      r.writerFeatures = writerFeatures
+      r.configuration = configuration
+      r.txns ++= txns
+      r.domains ++= domains
+      r
+    }
+
     /** Refuse any table whose correct interpretation needs a feature
       * this reader does not implement — the alternative is silently
       * wrong rows (a deletion-vectored file read in full resurrects
@@ -795,7 +841,7 @@ object DeltaRead {
   }
 
   private def applyJsonCommit(table: String, v: Long, r: Replay): Unit = {
-    val p = logDir(table).resolve(f"$v%020d.json")
+    val p = commitPath(table, v)
     require(Files.exists(p),
       s"$table: commit $v missing — log truncated past the last checkpoint")
     applyActionsFile(p, r)
@@ -981,11 +1027,8 @@ object DeltaRead {
         if (sideN != null) sidecars += sidecarPath(sideN.get("path").asText())
       }
     } else {
-      val cp = spark.read.parquet(manifest.toString)
-      applyActionFrame(cp, r)
-      if (cp.columns.contains("sidecar"))
-        cp.where(cp("sidecar").isNotNull).selectExpr("sidecar.path")
-          .collect().foreach(row => sidecars += sidecarPath(row.getString(0)))
+      applyActionFrame(spark.read.parquet(manifest.toString), r)
+        .foreach(p => sidecars += sidecarPath(p))
     }
     sidecars.foreach { sc =>
       require(Files.exists(sc),
@@ -995,76 +1038,83 @@ object DeltaRead {
   }
 
   /** Apply one checkpoint-shaped action frame (protocol / txn /
-    * metaData / add columns, any subset) to the replay. */
-  private def applyActionFrame(cp: DataFrame, r: Replay): Unit = {
+    * domainMetadata / metaData / add / sidecar columns, any subset) to
+    * the replay in ONE collect: every action kind projects into one
+    * flat row (optional fields a foreign writer omitted as typed
+    * nulls) and the rows dispatch driver-side in file order. Which adds
+    * ride the collect follows the replay's tier: all of them (Full),
+    * the dv-bearing ones (DvOnly), none (Dataset — there the add
+    * projection stays a frame for the [[DatasetIndex]]). Returns the
+    * `sidecar` paths a v2 manifest names, as logged. */
+  private def applyActionFrame(cp: DataFrame, r: Replay): Seq[String] = {
     val cols = cp.columns.toSet
-    def struct(name: String) = cp.schema(name).dataType.asInstanceOf[StructType]
-    def has(parent: String, field: String) = struct(parent).fieldNames.contains(field)
-    if (cols("protocol")) {
-      cp.where(cp("protocol").isNotNull)
-        .selectExpr("protocol.minReaderVersion",
-          if (has("protocol", "readerFeatures")) "protocol.readerFeatures"
-          else "CAST(NULL AS ARRAY<STRING>) AS readerFeatures",
-          if (has("protocol", "minWriterVersion")) "protocol.minWriterVersion"
-          else "CAST(NULL AS INT) AS minWriterVersion",
-          if (has("protocol", "writerFeatures")) "protocol.writerFeatures"
-          else "CAST(NULL AS ARRAY<STRING>) AS writerFeatures")
-        .collect().foreach { row =>
-          r.protocol(if (row.isNullAt(0)) 1 else row.getInt(0),
-            Option(row.getSeq[String](1)).map(_.toSet).getOrElse(Set.empty),
-            if (row.isNullAt(2)) 2 else row.getInt(2),
-            Option(row.getSeq[String](3)).map(_.toSet).getOrElse(Set.empty))
-        }
-    }
-    if (cols("txn")) {
-      cp.where(cp("txn").isNotNull)
-        .selectExpr("txn.appId", "txn.version")
-        .collect().foreach(row => r.txn(row.getString(0), row.getLong(1)))
-    }
-    if (cols("domainMetadata")) {
-      cp.where(cp("domainMetadata").isNotNull)
-        .selectExpr("domainMetadata.domain", "domainMetadata.configuration",
-          if (has("domainMetadata", "removed")) "domainMetadata.removed"
-          else "CAST(false AS BOOLEAN) AS removed")
-        .collect().foreach(row => r.domain(row.getString(0),
-          Option(row.getString(1)).getOrElse(""),
-          !row.isNullAt(2) && row.getBoolean(2)))
-    }
-    if (cols("metaData")) {
-      cp.where(cp("metaData").isNotNull)
-        .selectExpr("metaData.schemaString", "metaData.partitionColumns",
-          if (has("metaData", "id")) "metaData.id" else "CAST(NULL AS STRING) AS id",
-          if (has("metaData", "configuration")) "metaData.configuration"
-          else "CAST(NULL AS MAP<STRING,STRING>) AS configuration")
-        .collect().foreach { row =>
-          r.metaData(row.getString(0),
-            Option(row.getSeq[String](1)).map(_.toSeq).getOrElse(Nil),
-            Option(row.getString(2)),
-            Option(row.getMap[String, String](3)).map(_.toMap).getOrElse(Map.empty))
-        }
-    }
-    if (cols("add")) {
-      // checkpoint state holds only LIVE adds (tombstoned removes are
-      // retained for vacuum only and carry no reader-visible files)
-      r.mode match {
-        case Replay.Dataset =>
-          // the large tier's whole point: the add rows NEVER collect —
-          // the projection itself becomes the index's backing frame
-          r.cpAddFrames += canonicalAddFrame(cp)
+    def has(parent: String, field: String) =
+      cp.schema(parent).dataType.asInstanceOf[StructType].fieldNames.contains(field)
+    // each present action kind → its (field, SQL type) projection
+    val actions: Seq[(String, Seq[(String, String)])] = Seq(
+      "protocol" -> Seq("minReaderVersion" -> "INT", "readerFeatures" -> "ARRAY<STRING>",
+        "minWriterVersion" -> "INT", "writerFeatures" -> "ARRAY<STRING>"),
+      "txn" -> Seq("appId" -> "STRING", "version" -> "BIGINT"),
+      "domainMetadata" -> Seq("domain" -> "STRING", "configuration" -> "STRING",
+        "removed" -> "BOOLEAN"),
+      "metaData" -> Seq("schemaString" -> "STRING", "partitionColumns" -> "ARRAY<STRING>",
+        "id" -> "STRING", "configuration" -> "MAP<STRING,STRING>"),
+      "sidecar" -> Seq("path" -> "STRING")
+    ).filter { case (a, _) => cols(a) }
+    val fieldExprs = actions.flatMap { case (a, fs) => fs.map { case (f, t) =>
+      if (has(a, f)) s"CAST($a.$f AS $t) AS ${a}_$f" else s"CAST(NULL AS $t) AS ${a}_$f"
+    } }
+    // checkpoint state holds only LIVE adds (tombstoned removes are
+    // retained for vacuum only and carry no reader-visible files)
+    val addCond: Option[String] =
+      if (!cols("add")) None
+      else r.mode match {
+        case Replay.Full => Some("add IS NOT NULL")
         case Replay.DvOnly =>
-          // dv-bearing rows only — the collect is O(dv-carrying files)
-          canonicalAddFrame(cp).where(col("dvStorageType").isNotNull)
-            .collect().foreach { row =>
-              val e = rowToFileEntry(row)
-              r.add(e.copy(path = decodePath(e.path)))
-            }
-        case Replay.Full =>
-          canonicalAddFrame(cp).collect().foreach { row =>
-            val e = rowToFileEntry(row)
-            r.add(e.copy(path = decodePath(e.path)))
-          }
+          // O(dv-carrying files) on the driver
+          if (has("add", "deletionVector")) Some("add.deletionVector.storageType IS NOT NULL")
+          else None
+        case Replay.Dataset =>
+          // the large tier's whole point: the add rows NEVER collect
+          r.cpAddFrames += canonicalAddFrame(cp)
+          None
+      }
+    val conds = actions.map { case (a, _) => a -> s"$a IS NOT NULL" } ++
+      addCond.map("add" -> _)
+    if (conds.isEmpty) return Nil
+    val rows = cp.where(conds.map(c => s"(${c._2})").mkString(" OR "))
+      .selectExpr(conds.map { case (a, c) => s"$c AS ${a}_present" } ++
+        fieldExprs ++ addCond.map(_ => canonicalAddExprs(cp)).getOrElse(Nil): _*)
+      .collect()
+    val sidecars = Seq.newBuilder[String]
+    rows.foreach { row =>
+      def get[T](name: String): Option[T] = {
+        val i = row.fieldIndex(name)
+        if (row.isNullAt(i)) None else Some(row.getAs[T](i))
+      }
+      def strings(name: String): Option[Seq[String]] =
+        get[scala.collection.Seq[String]](name).map(_.toSeq)
+      def on(a: String) = conds.exists(_._1 == a) && row.getAs[Boolean](s"${a}_present")
+      if (on("protocol")) r.protocol(get[Int]("protocol_minReaderVersion").getOrElse(1),
+        strings("protocol_readerFeatures").map(_.toSet).getOrElse(Set.empty),
+        get[Int]("protocol_minWriterVersion").getOrElse(2),
+        strings("protocol_writerFeatures").map(_.toSet).getOrElse(Set.empty))
+      if (on("txn")) r.txn(row.getAs[String]("txn_appId"), row.getAs[Long]("txn_version"))
+      if (on("domainMetadata")) r.domain(row.getAs[String]("domainMetadata_domain"),
+        get[String]("domainMetadata_configuration").getOrElse(""),
+        get[Boolean]("domainMetadata_removed").getOrElse(false))
+      if (on("metaData")) r.metaData(row.getAs[String]("metaData_schemaString"),
+        strings("metaData_partitionColumns").getOrElse(Nil),
+        get[String]("metaData_id"),
+        get[scala.collection.Map[String, String]]("metaData_configuration")
+          .map(_.toMap).getOrElse(Map.empty))
+      if (on("sidecar")) sidecars += row.getAs[String]("sidecar_path")
+      if (on("add")) {
+        val e = rowToFileEntry(row)
+        r.add(e.copy(path = decodePath(e.path)))
       }
     }
+    sidecars.result()
   }
 
   /** The [[CanonicalFileSchema]]-shaped projection of an action
@@ -1072,7 +1122,11 @@ object DeltaRead {
     * decode driver-side via [[decodePath]] or SQL-side in
     * [[DatasetIndex]]). Optional protocol fields a foreign writer
     * omitted project as typed nulls. */
-  private[io] def canonicalAddFrame(cp: DataFrame): DataFrame = {
+  private[io] def canonicalAddFrame(cp: DataFrame): DataFrame =
+    cp.where(cp("add").isNotNull).selectExpr(canonicalAddExprs(cp): _*)
+
+  /** The select list of [[canonicalAddFrame]] (null on non-add rows). */
+  private def canonicalAddExprs(cp: DataFrame): Seq[String] = {
     def struct(name: String) = cp.schema(name).dataType.asInstanceOf[StructType]
     def has(field: String) = struct("add").fieldNames.contains(field)
     val dvExprs =
@@ -1100,39 +1154,137 @@ object DeltaRead {
     val mtimeExpr =
       if (has("modificationTime")) "CAST(add.modificationTime AS BIGINT) AS modificationTime"
       else "CAST(NULL AS BIGINT) AS modificationTime"
-    cp.where(cp("add").isNotNull)
-      .selectExpr(Seq("add.path AS path", "add.partitionValues AS pv") ++
-        dvExprs ++ (statsExpr +: rowIdExprs) ++ Seq(sizeExpr, mtimeExpr): _*)
+    Seq("add.path AS path", "add.partitionValues AS pv") ++
+      dvExprs ++ (statsExpr +: rowIdExprs) ++ Seq(sizeExpr, mtimeExpr)
   }
 
-  /** The live state at `version`: checkpoint (if any) + JSON tail.
-    * Under column mapping, `partitionValues` keys are translated
-    * physical → logical here, ONCE — every consumer downstream
-    * ([[assemble]]'s partition re-attachment, [[readVersionWhere]]'s
-    * `keep` predicate) sees logical names only. */
-  /** `_last_checkpoint`'s advertised `numOfAddFiles`, only when the
-    * pointer names exactly this checkpoint version — the zero-extra-IO
-    * signal the tier decision reads (a stale or absent pointer means
-    * the small tier, which is always correct). */
-  private def advertisedAddCount(table: String, cpV: Long): Option[Long] =
+  /** `_last_checkpoint`'s (version, advertised `numOfAddFiles`) — the
+    * zero-extra-IO signal the tier decision reads (a stale or absent
+    * pointer means the small tier, which is always correct). */
+  private def lastCheckpointHint(table: String): Option[(Long, Option[Long])] =
     try {
       val p = logDir(table).resolve("_last_checkpoint")
       if (!Files.exists(p)) None
       else {
         val node = mapper.readTree(Files.readAllBytes(p))
-        if (Option(node.get("version")).exists(_.asLong() == cpV))
-          Option(node.get("numOfAddFiles")).filterNot(_.isNull).map(_.asLong())
-        else None
+        Option(node.get("version")).map(v => (v.asLong(),
+          Option(node.get("numOfAddFiles")).filterNot(_.isNull).map(_.asLong())))
       }
     } catch { case _: Exception => None }
 
+  private def commitPath(table: String, v: Long): Path =
+    logDir(table).resolve(f"$v%020d.json")
+
+  /** The snapshot cache (resolution order in the header): per table,
+    * keyed by its absolute path, the latest replayed small-tier state
+    * — the [[Replay]] in PHYSICAL names, before the column-mapping
+    * translation, so an advance applies commits in the names they are
+    * logged in — together with the snapshot built from it. Bounded LRU
+    * over [[MaxTables]] tables. */
+  private object SnapshotCache {
+    val MaxTables = 32
+
+    /** (file key, size, mtime, CRC-32C of the bytes) of one commit
+      * file. Commits are immutable, so a stamp changes only when the
+      * file is replaced — a table deleted and re-created at the same
+      * path. */
+    final case class Stamp(fileKey: Any, size: Long, mtimeNanos: Long, crc: Long)
+    final case class Entry(version: Long, stamp: Stamp, state: Replay,
+        snapshot: DeltaSnapshot)
+
+    private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+
+    def stamp(table: String, v: Long): Option[Stamp] =
+      try {
+        val p = commitPath(table, v)
+        val a = Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+        val crc = new java.util.zip.CRC32C()
+        crc.update(Files.readAllBytes(p))
+        Some(Stamp(a.fileKey(), a.size(),
+          a.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS), crc.getValue))
+      } catch { case _: java.io.IOException => None }
+
+    /** The entry for `key` while its version's commit file still
+      * carries its stamp; a stale entry is dropped. */
+    def valid(key: String, table: String): Option[Entry] =
+      synchronized(Option(entries.get(key))).filter { e =>
+        stamp(table, e.version).contains(e.stamp) || { drop(key, e); false }
+      }
+
+    /** Keep `e` unless a newer state of the table is already cached
+      * (time travel never evicts the head). */
+    def offer(key: String, e: Entry): Unit = synchronized {
+      val cur = entries.get(key)
+      if (cur == null || cur.version <= e.version) {
+        entries.put(key, e)
+        val it = entries.values().iterator()
+        while (entries.size > MaxTables) { it.next(); it.remove() }
+      }
+    }
+
+    private def drop(key: String, e: Entry): Unit = synchronized { entries.remove(key, e) }
+
+    def clear(): Unit = synchronized { entries.clear() }
+
+    /** Cached version for `key`, without touching the LRU order. */
+    def versionOf(key: String): Option[Long] = synchronized {
+      entries.entrySet().asScala.find(_.getKey == key).map(_.getValue.version)
+    }
+  }
+
+  private def cacheKey(table: String): String =
+    Paths.get(table).toAbsolutePath.normalize().toString
+
+  /** TEST SEAM: empty the snapshot cache, so the next resolution of
+    * every table takes the cold path (checkpoint + tail) — the specs
+    * that prove the checkpoint path read through this. */
+  private[graft] def clearSnapshotCache(): Unit = SnapshotCache.clear()
+
+  /** TEST SEAM: the version the snapshot cache holds for `table`. */
+  private[graft] def cachedSnapshotVersion(table: String): Option[Long] =
+    SnapshotCache.versionOf(cacheKey(table))
+
+  /** How many tables the snapshot cache keeps. */
+  private[graft] def snapshotCacheTables: Int = SnapshotCache.MaxTables
+
+  /** The live state at `version` (resolution order in the header):
+    * the cached state when it is at `version`; the cached state
+    * advanced by the newer commits when it is older and every commit
+    * between survives as JSON; otherwise checkpoint (if any) + tail.
+    * Under column mapping, `partitionValues` keys are translated
+    * physical → logical here, ONCE — every consumer downstream
+    * ([[assemble]]'s partition re-attachment, [[readVersionWhere]]'s
+    * `keep` predicate) sees logical names only. */
   def snapshotAt(spark: SparkSession, table: String, version: Long): DeltaSnapshot = {
+    val key = cacheKey(table)
+    // a pointer advertising the Dataset tier sends the read cold: that
+    // tier is decided there and never cached
+    val cached = SnapshotCache.valid(key, table).filter(e => e.version <= version &&
+      !lastCheckpointHint(table).exists { case (cpV, adds) =>
+        cpV <= version && adds.exists(_ >= datasetThreshold(spark))
+      })
+    cached match {
+      case Some(e) if e.version == version => e.snapshot
+      case Some(e) if (e.version + 1 to version).forall(v => Files.exists(commitPath(table, v))) =>
+        // stamp BEFORE reading: a file replaced mid-read then fails the
+        // next lookup instead of pinning what was read
+        val stamp = SnapshotCache.stamp(table, version)
+        val r = e.state.fork()
+        (e.version + 1 to version).foreach(v => applyJsonCommit(table, v, r))
+        remember(spark, table, key, version, stamp, r)
+      case _ => coldSnapshotAt(spark, table, version, key)
+    }
+  }
+
+  private def coldSnapshotAt(spark: SparkSession, table: String, version: Long,
+      key: String): DeltaSnapshot = {
+    val stamp = SnapshotCache.stamp(table, version)
     val cp = checkpointAtOrBelow(table, version)
     // TIER DECISION: past the threshold the checkpoint's add rows stay
     // a DataFrame (see [[FileIndex]]) — resolution itself is then
     // O(tail) on the driver instead of O(table files)
-    val datasetTier = cp.exists(v =>
-      advertisedAddCount(table, v).exists(_ >= datasetThreshold(spark)))
+    val datasetTier = cp.exists(v => lastCheckpointHint(table)
+      .exists { case (cpV, adds) => cpV == v && adds.exists(_ >= datasetThreshold(spark)) })
     val r = new Replay(if (datasetTier) Replay.Dataset else Replay.Full)
     cp.foreach(v => applyCheckpoint(spark, table, v, r))
     // tail replay prefers minor log compactions ({x}.{y}.compacted.json,
@@ -1151,6 +1303,22 @@ object DeltaRead {
         case None => applyJsonCommit(table, tv, r); tv += 1
       }
     }
+    if (datasetTier) buildSnapshot(spark, table, version, r)
+    else remember(spark, table, key, version, stamp, r)
+  }
+
+  /** Build the small-tier snapshot of `r` and offer it to the cache
+    * (when `version`'s commit file could be stamped). */
+  private def remember(spark: SparkSession, table: String, key: String, version: Long,
+      stamp: Option[SnapshotCache.Stamp], r: Replay): DeltaSnapshot = {
+    val snap = buildSnapshot(spark, table, version, r)
+    stamp.foreach(s => SnapshotCache.offer(key, SnapshotCache.Entry(version, s, r, snap)))
+    snap
+  }
+
+  /** Validate a replayed state and build its snapshot. */
+  private def buildSnapshot(spark: SparkSession, table: String, version: Long,
+      r: Replay): DeltaSnapshot = {
     r.validateSupported(table)
     val mappingActive = ColumnMapping.active(
       r.configuration.getOrElse("delta.columnMapping.mode", "none"))
@@ -1158,7 +1326,7 @@ object DeltaRead {
       if (!mappingActive) Map.empty
       else r.schema.map(ColumnMapping.physByLogical(_).map(_.swap)).getOrElse(Map.empty)
     val index: FileIndex =
-      if (datasetTier)
+      if (r.mode == Replay.Dataset)
         // mapping (pv rekey in the frame, stats rekey at entry
         // materialization) is the index's own concern on this tier
         new DatasetIndex(spark, table, r.cpAddFrames.toSeq, r.journal.toSeq,

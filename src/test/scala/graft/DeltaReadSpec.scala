@@ -157,6 +157,7 @@ class DeltaReadSpec extends SparkTestBase {
       // so a correct read PROVES the checkpoint path is taken
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
       Files.delete(Paths.get(t, "_delta_log", f"${1L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val got = DeltaRead.read(spark, t)
       assert(got.count() == 15, "checkpoint live set {b} + tail add {c}")
       assert(got.agg(sum($"id")).collect()(0).getLong(0) ==

@@ -78,6 +78,7 @@ class DeltaStatsSpec extends SparkTestBase {
       DeltaWrite.checkpoint(spark, t)
       // force checkpoint resolution: the JSON commit is gone
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.filesAfterSkipping(spark, t, 0L,
         Seq(StatRange.eq("id", 555L))).size == 1)
       assert(DeltaRead.readVersionWhereStats(spark, t, 0L,
@@ -118,6 +119,7 @@ class DeltaStatsSpec extends SparkTestBase {
         mapper.readTree(s).get("minValues").fieldNames().asScala.forall(_.startsWith("col-"))
       })
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.filesAfterSkipping(spark, t, 0L,
         Seq(StatRange.eq("id", 42L))).size == hit.size)
     } finally cleanup(t)

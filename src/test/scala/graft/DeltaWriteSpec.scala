@@ -186,6 +186,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // destroy replay-from-zero: only the checkpoint path can now work
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
       Files.delete(Paths.get(t, "_delta_log", f"${1L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val got = DeltaRead.read(spark, t)
       assert(got.count() == 25 &&
         got.agg(sum($"id")).collect()(0).getLong(0) == (1 to 25).sum.toLong)
@@ -202,6 +203,7 @@ class DeltaWriteSpec extends SparkTestBase {
       DeltaWrite.append(df, t, partitionBy = Seq("lang"))
       DeltaWrite.checkpoint(spark, t)
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val got = DeltaRead.read(spark, t)
       assert(got.groupBy($"lang").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap == Map("es" -> 2L, "fr" -> 1L))
@@ -496,6 +498,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // drop the JSON history: resolution must come from the checkpoint
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
       Files.delete(Paths.get(t, "_delta_log", f"${1L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val s = DeltaRead.snapshot(spark, t)
       assert(s.configuration == Map(
         "delta.appendOnly" -> "true", "custom.owner" -> "team-x"))
@@ -513,6 +516,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // force checkpoint-only resolution
       (0L to cpv).foreach(v =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val got = DeltaRead.read(spark, t)
       assert(got.count() == 30L && got.where($"id" % 4 === 0).count() == 0L,
         "checkpoint must carry the DVs — masked rows resurrected")
@@ -679,6 +683,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // force the checkpoint path: JSON prefix gone
       Files.delete(ld.resolve(f"${0L}%020d.json"))
       Files.delete(ld.resolve(f"${1L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.read(spark, t).agg(sum($"id")).collect()(0).getLong(0) ==
         (1 to 20).sum.toLong, "complete multi-part checkpoint must read as one")
       // an INCOMPLETE set must become invisible, not half-read
@@ -712,6 +717,7 @@ class DeltaWriteSpec extends SparkTestBase {
       val cpV = DeltaRead.latestVersion(t)
       (0L until cpV).foreach(v =>
         Files.delete(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaWrite.lastTxnVersion(spark, t, "app") == Some(1L),
         "txn high-water mark must survive history truncation")
       assert(DeltaWrite.appendOnce(b1, t, "app", 1L).isEmpty)
@@ -749,6 +755,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // checkpoint written: read resolves after deleting the JSON prefix
       assert(Files.exists(Paths.get(dl, "_delta_log", "_last_checkpoint")))
       (0L to 2L).foreach(v => Files.delete(Paths.get(dl, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.read(spark, dl).count() == 30)
       // a second export into the same target must refuse
       val e = intercept[IllegalArgumentException](DeltaBridge.exportTxLog(spark, tx, dl))
@@ -1082,6 +1089,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // resolution works with the whole JSON prefix gone
       (0L to v).foreach(x =>
         Files.delete(Paths.get(t, "_delta_log", f"$x%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.read(spark, t).count() == 6L)
       assert(DeltaRead.read(spark, t).agg(sum($"id")).collect()(0).getLong(0) == 15L)
       // an INCOMPLETE part set is invisible: with one part gone and the
@@ -1116,6 +1124,7 @@ class DeltaWriteSpec extends SparkTestBase {
       // truncated prefixes bound timestamp travel but not version travel
       DeltaWrite.checkpoint(spark, t)
       Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.readVersion(spark, t, 2).count() == 1L)
       val e2 = intercept[IllegalArgumentException](
         DeltaRead.readAsOf(spark, t, h(0)._2))

@@ -131,6 +131,7 @@ class ProtocolFeaturesSpec extends SparkTestBase {
       // replay must come from the v2 checkpoint alone
       (0L to cv).foreach(v =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val after = DeltaRead.snapshot(spark, t)
       assert(after.files.map(_.path).toSet == before.files.map(_.path).toSet)
       assert(after.files.forall(_.baseRowId.isDefined))
@@ -167,6 +168,7 @@ class ProtocolFeaturesSpec extends SparkTestBase {
         s"empty sidecar $p"))
       (0L to cv).foreach(v =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val after = DeltaRead.snapshot(spark, t)
       assert(after.files.map(_.path).toSet == before.files.map(_.path).toSet,
         "replay from sharded sidecars must resolve the full file set")
@@ -212,6 +214,7 @@ class ProtocolFeaturesSpec extends SparkTestBase {
       val cv = DeltaWrite.checkpoint(spark, t)
       (0L to cv).foreach(v =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaWrite.clusteringColumns(DeltaRead.snapshot(spark, t)) == Seq("x", "y"))
       val c = Files.createTempDirectory("clusclone").resolve("t").toString
       DeltaWrite.clone(spark, t, c)

@@ -156,6 +156,7 @@ class RowTrackingSpec extends SparkTestBase {
       // from the checkpoint parquet alone
       (0L to cv).foreach(v =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val s = DeltaRead.snapshot(spark, t)
       assert(s.files.forall(_.baseRowId.isDefined))
       assert(s.liveDomains.contains("delta.rowTracking"))
@@ -177,6 +178,7 @@ class RowTrackingSpec extends SparkTestBase {
       val cv = DeltaWrite.checkpoint(spark, t)
       (0L to cv).foreach(v =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$v%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val s2 = DeltaRead.snapshot(spark, t)
       assert(s2.domains.get("app.pipeline").exists(_._2), // tombstone retained
         s"expected removed tombstone, got ${s2.domains}")

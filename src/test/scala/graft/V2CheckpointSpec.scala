@@ -116,12 +116,14 @@ class V2CheckpointSpec extends SparkTestBase {
         .as[(Long, String)].collect().toSet
       val v = authorV2Checkpoint(t, jsonManifest = false)
       // the checkpoint (newest ≤ head) now drives resolution
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val viaCp = DeltaRead.read(spark, t).select($"id", $"lang")
         .as[(Long, String)].collect().toSet
       assert(viaCp == before, s"v2 checkpoint resolved $viaCp, replay said $before")
       // truncate the JSON prefix: only the v2 checkpoint can resolve now
       (0L to v).foreach(x =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$x%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val truncated = DeltaRead.read(spark, t).select($"id", $"lang")
         .as[(Long, String)].collect().toSet
       assert(truncated == before)
@@ -141,6 +143,7 @@ class V2CheckpointSpec extends SparkTestBase {
       val v = authorV2Checkpoint(t, jsonManifest = true)
       (0L to v).foreach(x =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$x%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       assert(DeltaRead.read(spark, t).select($"id").as[Long].collect().toSet == before)
     } finally cleanup(t)
   }
@@ -155,6 +158,7 @@ class V2CheckpointSpec extends SparkTestBase {
       Files.delete(sc)
       (0L to v).foreach(x =>
         Files.deleteIfExists(Paths.get(t, "_delta_log", f"$x%020d.json")))
+      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
       val e = intercept[IllegalArgumentException](DeltaRead.read(spark, t))
       assert(e.getMessage.contains("sidecar"))
     } finally cleanup(t)
