@@ -100,7 +100,9 @@ object Main {
       val report = spark.createDataFrame(
         java.util.Arrays.asList(reportRows: _*), Validator.reportSchema)
       Sinks.csv(report, s"$outDir/validation_report")
-      val bad = reportRows.count(_.getAs[Long]("n_bad") != 0L).toLong
+      // getLong, not getAs[Long]: a null counter throws instead of
+      // unboxing to 0 and passing as "no violation"
+      val bad = reportRows.count(r => r.getLong(r.fieldIndex("n_bad")) != 0L).toLong
       Sinks.jsonReport(Await.result(volumetry, Duration.Inf),
         s"$outDir/volumetry_report.json")
       bad

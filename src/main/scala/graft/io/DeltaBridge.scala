@@ -52,6 +52,7 @@ object DeltaBridge {
 
     Files.createDirectories(Paths.get(deltaTable))
     val now = System.currentTimeMillis()
+    val conf = spark.sessionState.newHadoopConf()
     var prev = Set.empty[String]
     var deltaV = 0L
     intact.foreach { s =>
@@ -69,7 +70,7 @@ object DeltaBridge {
       val adds = added.map { f =>
         val p = Paths.get(deltaTable, f)
         DeltaWrite.addAction(DeltaWrite.Staged(f, Map.empty, Files.size(p),
-          Files.getLastModifiedTime(p).toMillis, DeltaWrite.parquetStats(p)))
+          Files.getLastModifiedTime(p).toMillis, DeltaWrite.parquetStats(p, conf)))
       }
       val removes = removed.map(f => DeltaWrite.removeAction(f, now))
       require(DeltaWrite.tryPublish(deltaTable, deltaV, header ++ removes ++ adds),

@@ -2280,7 +2280,7 @@ object DeltaRead {
         val first = dataPath(table, s.files.head.path)
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(first.toUri),
-          new org.apache.hadoop.conf.Configuration())
+          spark.sessionState.newHadoopConf())
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         val footer = try r.getFooter.getFileMetaData.getSchema finally r.close()
         val resolved = ColumnMapping.resolveByFieldId(dataSchema.get, footer)

@@ -88,12 +88,15 @@ object DeltaWrite {
     * format-sensitive and a wrong bound would make data skipping DROP
     * matching files. This is what turns the log into an index: at
     * 100 TB, [[DeltaRead.readVersionWhereStats]] prunes files from
-    * footer facts the writer already had, before any scan is planned. */
-  private[io] def parquetStats(p: Path): Option[String] =
+    * footer facts the writer already had, before any scan is planned.
+    * `conf` is the session's Hadoop conf, built once per batch of files
+    * (`sessionState.newHadoopConf()`): a fresh `Configuration` per file
+    * re-parses the XML defaults and ignores session Hadoop settings. */
+  private[io] def parquetStats(p: Path,
+      conf: org.apache.hadoop.conf.Configuration): Option[String] =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri),
-        new org.apache.hadoop.conf.Configuration())
+        new org.apache.hadoop.fs.Path(p.toUri), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val md = r.getFooter
@@ -195,6 +198,7 @@ object DeltaWrite {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmpDir.toString)
     val staged = scala.collection.mutable.ArrayBuffer.empty[Staged]
+    val conf = df.sparkSession.sessionState.newHadoopConf()
     // materialize the walk BEFORE moving anything: mutating a directory
     // tree during lazy Files.walk iteration is unspecified (can skip
     // entries or throw on some filesystems) — vacuum() does the same
@@ -219,7 +223,7 @@ object DeltaWrite {
       Files.createDirectories(dest.getParent)
       Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
       staged += Staged(relPath, pv, Files.size(dest),
-        Files.getLastModifiedTime(dest).toMillis, parquetStats(dest))
+        Files.getLastModifiedTime(dest).toMillis, parquetStats(dest, conf))
     }
     org.apache.commons.io.FileUtils.deleteDirectory(tmpDir.toFile)
     staged.toSeq
@@ -2748,6 +2752,7 @@ object DeltaWrite {
       finally st.close()
     require(files.nonEmpty, s"convertToDelta: no parquet files under $dir")
     val partCols = partitionSchema.map(_.fields.toSeq).getOrElse(Nil)
+    val conf = spark.sessionState.newHadoopConf()
     val adds = files.map { p =>
       val rel = root.relativize(p)
       val segs = rel.iterator().asScala.map(_.toString).toSeq.dropRight(1)
@@ -2765,7 +2770,7 @@ object DeltaWrite {
           s"(${pv.keys.mkString(",")}) but PARTITIONED BY declares " +
           s"(${partCols.map(_.name).mkString(",")})")
       Staged(rel.toString, pv, Files.size(p),
-        Files.getLastModifiedTime(p).toMillis, parquetStats(p))
+        Files.getLastModifiedTime(p).toMillis, parquetStats(p, conf))
     }
     // data schema from the footers (partition columns are NOT in the
     // files — they are directory metadata, appended as declared).
@@ -3405,42 +3410,6 @@ object DeltaWrite {
     throw new IllegalStateException(s"deleteWhere: lost 10 commit races on $table")
   }
 
-  /** Delta MERGE upsert — `WHEN MATCHED UPDATE SET *` + `WHEN NOT
-    * MATCHED INSERT *` on equality of `keys`: the full `ON CONFLICT DO
-    * UPDATE` story the reference's loader only half-has
-    * (loader_NeonDB.py:364-371 is insert-only `DO NOTHING`; graft's
-    * [[Sinks.jdbcConflictSkip]] / [[appendOnce]] mirror that — this
-    * closes the update half). Re-ingesting a batch with changed rows
-    * converges the table to the updated state and is idempotent on
-    * re-run.
-    *
-    * Touch-then-rewrite shape, the one that scales: pass 1 is a
-    * KEY-COLUMN-ONLY scan (Catalyst prunes the parquet read to the key
-    * columns) joined against the distinct source keys to find (a) the
-    * touched file set — metadata-sized, one path per file holding a
-    * matched row — and (b) the not-matched inserts; pass 2 re-reads
-    * ONLY the touched files ([[DeltaRead.readFilesWithLineage]]),
-    * splits them into kept rows (anti-join on keys) and replaced rows
-    * (the matching source row per matched target row), and stages kept
-    * ∪ replaced ∪ inserts. The commit removes the touched files and
-    * adds the staged batch — cost O(touched + source), never O(table).
-    * A lost commit CAS re-plans from scratch against the winner's
-    * snapshot (the touched set may have changed), so concurrent
-    * appends/merges serialize correctly.
-    *
-    * Preconditions, mirroring Delta's own MERGE: the source schema
-    * must match the table (SET * semantics), and duplicate source keys
-    * are refused — two source rows matching one target row have no
-    * deterministic update. Multiple TARGET rows sharing a key each
-    * update to the one source row (multiplicity preserved). Deletion
-    * vectors on touched files are honored: masked rows do not
-    * resurrect into the rewrite. Returns the committed version, or the
-    * current version unchanged when the merge is a no-op. An optional
-    * `txn` (appId, version) pair rides in the SAME commit as a
-    * SetTransaction action and makes the merge exactly-once under
-    * replay, appendOnce-style: a pair at or below the table's recorded
-    * mark skips the merge entirely — the primitive incremental view
-    * maintenance ([[graft.views.IncrementalView]]) resumes on. */
   /** Optional MERGE clause conditions, Delta's three-clause surface:
     * `WHEN MATCHED [AND updateWhen] UPDATE SET *`, `WHEN MATCHED AND
     * deleteWhen DELETE`, `WHEN NOT MATCHED [AND insertWhen] INSERT *`.
@@ -3454,183 +3423,72 @@ object DeltaWrite {
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
       insertWhen: Option[org.apache.spark.sql.Column] = None)
 
+  /** Delta MERGE upsert — `WHEN MATCHED UPDATE SET *` + `WHEN NOT
+    * MATCHED INSERT *` on equality of `keys`: the full `ON CONFLICT DO
+    * UPDATE` story the reference's loader only half-has
+    * (loader_NeonDB.py:364-371 is insert-only `DO NOTHING`; graft's
+    * [[Sinks.jdbcConflictSkip]] / [[appendOnce]] mirror that — this
+    * closes the update half). Re-ingesting a batch with changed rows
+    * converges the table to the updated state and is idempotent on
+    * re-run.
+    *
+    * A thin adapter over [[mergeAdvanced]], the one merge engine (its
+    * doc has the two-pass execution and the cost). The three
+    * [[MergeClauses]] conditions are evaluated once over the source as
+    * flag columns and become `WHEN MATCHED AND del DELETE`, `WHEN
+    * MATCHED AND upd UPDATE SET <every non-key column>` (delete wins
+    * over update; a matched row satisfying neither keeps its file
+    * untouched) and `WHEN NOT MATCHED AND ins INSERT <every column>`.
+    *
+    * Preconditions, mirroring Delta's own MERGE: the source schema
+    * must match the table (SET * semantics; extra source columns are
+    * allowed as clause-condition carriers and never reach the table),
+    * and duplicate source keys are refused — two source rows matching
+    * one target row have no deterministic update. Multiple TARGET rows
+    * sharing a key each update to the one source row (multiplicity
+    * preserved); a null source key never matches, so it inserts.
+    * Deletion vectors on touched files are honored: masked rows do not
+    * resurrect into the rewrite. Returns the committed version, or the
+    * current version unchanged when the merge is a no-op. An optional
+    * `txn` (appId, version) pair rides in the SAME commit as a
+    * SetTransaction action and makes the merge exactly-once under
+    * replay, appendOnce-style: a pair at or below the table's recorded
+    * mark skips the merge entirely — the primitive incremental view
+    * maintenance ([[graft.views.IncrementalView]]) resumes on. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], maxRetries: Int = 10,
       clauses: MergeClauses = MergeClauses(),
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, count => fcount, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(keys.nonEmpty, "merge: keys must be non-empty")
     require(keys.forall(source.columns.contains),
       s"merge: keys ${keys.mkString(",")} not all in source columns " +
         source.columns.mkString(","))
-    val dupKeys = source.groupBy(keys.map(col): _*).agg(fcount(lit(1)).as("n"))
-      .where(col("n") > 1).limit(1).count()
-    require(dupKeys == 0L,
-      s"merge: source has duplicate keys on ${keys.mkString(",")} — " +
-        "two source rows matching one target row have no deterministic update")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = DeltaRead.latestVersion(table)
-      val snap = DeltaRead.snapshotAt(spark, table, v)
-      // exactly-once replay guard (same contract as appendOnce): a
-      // (appId, version) already at or below the table's recorded
-      // SetTransaction mark means this batch landed — skip BEFORE
-      // staging anything, re-checked on every CAS retry so two racing
-      // replays cannot both commit
-      txn.foreach { case (appId, ver) =>
-        if (snap.txns.get(appId).exists(_ >= ver)) return v
-      }
-      validateWriterSupport(table, snap, removesData = true)
-      val committed = snap.schema.getOrElse(throw new IllegalStateException(
-        s"merge: $table has no committed schema"))
-      // identity tables refuse MERGE: SET-*/INSERT-* semantics would
-      // write caller-chosen identity values without advancing the
-      // high-water mark — a quieter corruption than any refusal
-      if (committed.fields.exists(_.metadata.contains(IdStartKey)))
-        throw new UnsupportedOperationException(
-          s"merge: $table carries identity columns — use append " +
-            "(writer-allocated values) and deleteWhere instead")
-      // SET-*/INSERT-* semantics need every table column in the source;
-      // EXTRA source columns are allowed as clause-condition carriers
-      // (the CDC `_change_type`) and never reach the table
-      val dataOnly = StructType(source.schema.fields
-        .filter(f => committed.fieldNames.contains(f.name)))
-      require(schemaMatches(committed, dataOnly) &&
-          committed.fieldNames.forall(source.columns.contains),
-        s"merge: source must carry every table column with matching types " +
-          s"(UPDATE SET * semantics) — committed ${committed.json}, " +
-          s"incoming ${source.schema.json}")
-      val mapCtx =
-        if (!DeltaRead.ColumnMapping.active(snap.columnMappingMode)) None
-        else {
-          val startMax = snap.configuration.get(WriteMapping.MaxIdKey)
-            .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(committed))
-          Some(WriteMapping.Ctx(snap.columnMappingMode, committed, startMax))
-        }
-      val outCols = committed.fields.toSeq.map(f => col(f.name))
-      // per-source-row clause flags (evaluated once, over source cols).
-      // NULL conditions coalesce to FALSE — SQL clause semantics (only
-      // TRUE fires); an uncoalesced NULL __m_del would drag the row
-      // into activeKeys via __m_upd yet keep it out of updKeys
-      // (!NULL is NULL), silently DROPPING the matched row from the
-      // rewrite instead of updating or keeping it
-      val act = source
-        .withColumn("__m_del",
-          org.apache.spark.sql.functions.coalesce(
-            clauses.deleteWhen.getOrElse(lit(false)), lit(false)))
-        .withColumn("__m_upd",
-          org.apache.spark.sql.functions.coalesce(
-            clauses.updateWhen.getOrElse(lit(true)), lit(false)))
-        .withColumn("__m_ins",
-          org.apache.spark.sql.functions.coalesce(
-            clauses.insertWhen.getOrElse(lit(true)), lit(false)))
-      // only delete- or update-active keys can change a target file; a
-      // matched row satisfying neither clause is left untouched and
-      // must not drag its file into the rewrite
-      val activeKeys = act.where(col("__m_del") || col("__m_upd"))
-        .select(keys.map(col): _*).distinct()
-      // pass 1: key-only scan — active keys' files + the global key set
-      val targetKeys = DeltaRead.readVersionWithLineage(spark, table, v)
-        .select(keys.map(col) :+ col(DeltaRead.LineageFile): _*)
-      val touchedAbs = targetKeys.join(activeKeys, keys, "left_semi")
-        .select(col(DeltaRead.LineageFile)).distinct()
-        .collect().map(_.getString(0)).toSet // one path per touched file
-      val touched: Seq[DeltaRead.FileEntry] =
-        touchedEntries(table, snap, touchedAbs, "merge")
-      // a row-tracking table's rewrite must PRESERVE the stable ids of
-      // kept/updated rows (materialized columns); inserted rows carry
-      // null and resolve positionally against their new file's block
-      val matPair: Option[(String, String)] =
-        if (rowTrackingOn(snap))
-          snap.configuration.get(MatRowIdKey).zip(snap.configuration.get(MatRcvKey))
-        else None
-      val matSel = matPair.toSeq.flatMap { case (a, b) => Seq(col(a), col(b)) }
-      val inserts0 = act.where(col("__m_ins"))
-        .join(targetKeys.drop(DeltaRead.LineageFile).distinct(), keys, "left_anti")
-        .select(outCols: _*)
-      val inserts = matPair.fold(inserts0) { case (a, b) =>
-        inserts0.withColumn(a, lit(null).cast("long"))
-          .withColumn(b, lit(null).cast("long"))
-      }
-      // pass 2: rewrite ONLY the touched files — kept rows (unmatched
-      // or matched-but-no-clause), updated rows (source values, per
-      // matched target row), while delete-marked rows simply vanish.
-      // CDF-obligated tables also record the EXACT change rows as cdc:
-      // reconstruction from this commit's add/remove would mis-report
-      // every kept row as a spurious delete+insert pair
-      val wantCdc = cdcEnabled(snap.configuration)
-      val ctCol = DeltaRead.ChangeTypeCol
-      def tagged(df: DataFrame, ct: String): DataFrame =
-        df.withColumn(ctCol, lit(ct))
-      val (batch, cdcRows: Option[DataFrame]) =
-        if (touched.isEmpty) {
-          if (inserts0.isEmpty) return v // nothing matched, nothing new
-          (inserts, if (wantCdc) Some(tagged(inserts0, "insert")) else None)
-        } else {
-          val tTouched = matPair match {
-            case Some(_) => DeltaRead.readFilesForRewrite(spark, table, v,
-              touched.map(_.path).toSet)
-            case None => DeltaRead.readFilesWithLineage(spark, table, v,
-              touched.map(_.path).toSet)
-          }
-          val keep = tTouched.join(activeKeys, keys, "left_anti")
-            .select(outCols ++ matSel: _*)
-          val updKeys = act.where(!col("__m_del") && col("__m_upd"))
-          val replaced = tTouched.join(activeKeys, keys, "left_semi")
-            .select(keys.map(col) ++ matSel: _*)
-            .join(updKeys, keys, "inner")
-            .select(outCols ++ matSel: _*)
-          val cdc =
-            if (!wantCdc) None
-            else {
-              val tRows = tTouched.select(outCols: _*)
-              val deleted = tRows.join(
-                act.where(col("__m_del")).select(keys.map(col): _*).distinct(),
-                keys, "left_semi")
-              val pre = tRows.join(
-                updKeys.select(keys.map(col): _*).distinct(), keys, "left_semi")
-              Some(tagged(deleted, "delete")
-                .unionByName(tagged(pre, "update_preimage"))
-                .unionByName(tagged(replaced.select(outCols: _*), "update_postimage"))
-                .unionByName(tagged(inserts0, "insert")))
-            }
-          (keep.unionByName(replaced).unionByName(inserts), cdc)
-        }
-      enforceConstraints(batch, snap.configuration, table)
-      enforceInvariants(batch, committed, table)
-      // merge batches always carry every column: generated ones are
-      // validated (never recomputed — the kept rows already conform)
-      applyGeneratedColumns(batch, committed, table)
-      // the materialized row-id columns are PASSENGERS, not schema
-      // columns: under column mapping they ride physicalizeDf's
-      // passthrough (they already carry their final physical-only
-      // names) instead of being select-dropped with the rename
-      val stagedDf = mapCtx.map(c => WriteMapping.physicalizeDf(batch, c.schema,
-          passthrough = matPair.toSeq.flatMap { case (a, b) => Seq(a, b) }))
-        .getOrElse(batch)
-      val stagedPartitionBy = mapCtx.map(c => snap.partitionColumns.map(c.physByLogical))
-        .getOrElse(snap.partitionColumns)
-      val staged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        stage(stagedDf, table, stagedPartitionBy))
-      val cdcStaged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        cdcRows.map(stageCdc(_, table, snap)).getOrElse(Nil))
-      val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction("MERGE", now)) ++
-        txn.map { case (appId, ver) => txnAction(appId, ver, now) } ++
-        touched.map(f => removeAction(f.path, now)) ++
-        staged.map(s => addAction(s)) ++
-        cdcStaged.map(cdcAction)
-      if (publish(table, Some(snap), v + 1, lines)) {
-        // post-commit half of auto optimize (Databricks applies it to
-        // ANY file-adding write, row rewrites included)
-        maybeAutoCompact(spark, table, snap.configuration, staged)
-        return v + 1
-      }
-      dropStaged(table, staged)
-      dropStaged(table, cdcStaged)
-      attempt += 1 // lost the CAS race: replan against the winner
-    }
-    throw new IllegalStateException(s"merge: lost $maxRetries commit races on $table")
+    val committed = DeltaRead.snapshot(spark, table).schema.getOrElse(
+      throw new IllegalStateException(s"merge: $table has no committed schema"))
+    val dataOnly = StructType(source.schema.fields
+      .filter(f => committed.fieldNames.contains(f.name)))
+    require(schemaMatches(committed, dataOnly) &&
+        committed.fieldNames.forall(source.columns.contains),
+      s"merge: source must carry every table column with matching types " +
+        s"(UPDATE SET * semantics) — committed ${committed.json}, " +
+        s"incoming ${source.schema.json}")
+    // NULL conditions coalesce to FALSE — SQL clause semantics (only
+    // TRUE fires)
+    def flag(c: Option[org.apache.spark.sql.Column], absent: Boolean) =
+      coalesce(c.getOrElse(lit(absent)), lit(false))
+    val flagged = source
+      .withColumn("__m_del", flag(clauses.deleteWhen, absent = false))
+      .withColumn("__m_upd", flag(clauses.updateWhen, absent = true))
+      .withColumn("__m_ins", flag(clauses.insertWhen, absent = true))
+    val cols = committed.fieldNames.toSeq
+    mergeAdvanced(spark, table, flagged, keys,
+      matched = Seq(
+        MergeDeleteWhen(Some(mergeSrc("__m_del"))),
+        MergeUpdateWhen(Some(mergeSrc("__m_upd")),
+          cols.filterNot(keys.contains).map(c => c -> mergeSrc(c)))),
+      notMatched = Seq(MergeInsertWhen(Some(col("__m_ins")), cols.map(c => c -> col(c)))),
+      maxRetries = maxRetries, txn = txn)
   }
 
   /** Source-column prefix for [[mergeAdvanced]] clause expressions:
@@ -3646,8 +3504,8 @@ object DeltaWrite {
 
   /** One WHEN clause of the general merge ([[mergeAdvanced]]). `None`
     * condition means ALWAYS fires (SQL: a clause without AND) —
-    * uniformly across update/delete/insert, unlike the legacy
-    * [[MergeClauses]] whose deleteWhen None meant never. */
+    * uniformly across update/delete/insert, unlike [[merge]]'s
+    * [[MergeClauses]] whose deleteWhen None means never. */
   sealed trait MergeWhen
   /** UPDATE SET with a PARTIAL assignment list: named columns take the
     * assigned expression, every other column keeps its pre-image value;
@@ -3661,15 +3519,16 @@ object DeltaWrite {
   final case class MergeInsertWhen(condition: Option[org.apache.spark.sql.Column],
       assignments: Seq[(String, org.apache.spark.sql.Column)])
 
-  /** The GENERAL three-population MERGE — everything the star-shaped
-    * [[merge]] refuses: partial `SET col = expr` assignments (the SCD
-    * shape touching 2 of 30 columns), expression-bearing assignments
-    * over BOTH rows, clause conditions referencing the TARGET row,
-    * multiple ordered WHEN clauses (first-match-wins), partial-column
-    * INSERT, and `WHEN NOT MATCHED BY SOURCE` UPDATE/DELETE (the
-    * full-sync shape). Keys join target to source by name (`===`, so
-    * null keys never match — a null-keyed target row is "not matched
-    * by source", per SQL).
+  /** The merge engine — the GENERAL three-population MERGE, which
+    * [[merge]] (SET * / INSERT *) adapts onto: partial `SET col = expr`
+    * assignments (the SCD shape touching 2 of 30 columns),
+    * expression-bearing assignments over BOTH rows, clause conditions
+    * referencing the TARGET row, multiple ordered WHEN clauses
+    * (first-match-wins), partial-column INSERT, and `WHEN NOT MATCHED
+    * BY SOURCE` UPDATE/DELETE (the full-sync shape). Keys join target
+    * to source by name (`===`, so null keys never match — a null-keyed
+    * target row is "not matched by source", a null-keyed source row is
+    * "not matched", per SQL).
     *
     * Clause expression namespace: `matched` clauses see target columns
     * by plain name and source columns via [[mergeSrc]]; `notMatched`
@@ -3680,36 +3539,56 @@ object DeltaWrite {
     * Assigned values are store-assigned (cast) to the column's type —
     * ANSI mode makes a lossy cast throw rather than truncate.
     *
-    * Execution is the two-pass copy-on-write shape of [[merge]]/
-    * [[updateWhere]], COST O(touched files + source), never O(table) —
-    * except an unguarded BY SOURCE clause, which is inherently
-    * table-wide (every unmatched row fires): pass 1 scans keys (+ the
-    * columns BY SOURCE conditions name) with lineage and collects the
-    * files holding any row a clause could change — every matched key's
-    * file when matched clauses exist (conditions may reference the
-    * target, so activeness cannot be pre-filtered source-side; a file
-    * whose rows all miss their conditions is rewritten byte-identical,
-    * the standard conservative plan), plus every file holding an
-    * unmatched row some BY SOURCE condition accepts. Pass 2 re-reads
-    * ONLY those files, left-joins the prefixed source on the keys
-    * (shuffle on key columns; AQE broadcasts a small source), resolves
-    * each row's fate through the ordered when-chains, and stages
-    * kept ∪ updated ∪ inserted. Inserts anti-join the source against
-    * the global key set from pass 1. Row-tracking ids are preserved
-    * through the rewrite; CDF-obligated tables record exact
-    * update_preimage/update_postimage/delete/insert rows; constraints,
-    * invariants and generated columns are validated on the staged
-    * batch. Duplicate source keys refuse when matched clauses exist
-    * (two source rows updating one target row is nondeterministic).
-    * Returns the committed version. */
+    * Execution is two passes over the target (the Delta Lake MERGE
+    * shape: an inner join finds the touched files, an outer join
+    * rewrites only those):
+    *  - pass 1 materializes ONE frame with an eager `localCheckpoint`:
+    *    the target's `(keys, file)` key-only scan inner-joined with the
+    *    source keys (broadcast when small) and a per-row "some matched
+    *    clause can fire" flag. The distinct files of its firing rows
+    *    are the touched set; the inserts are the source rows an insert
+    *    clause accepts, anti-joined against this match set — O(source),
+    *    never a `distinct` over every target key. When every matched
+    *    condition reads the source only (no reference outside the
+    *    [[mergeSrc]] namespace), a source row whose conditions all
+    *    miss cannot fire, so its files are never rewritten; a condition
+    *    reading the target cannot be decided source-side, so every
+    *    matched file is rewritten (rows whose conditions miss go
+    *    through byte-identical — the standard conservative plan). A
+    *    BY SOURCE clause adds a table-wide sweep for the files holding
+    *    an unmatched row its conditions accept: every unmatched row may
+    *    fire, so that sweep is inherently O(table).
+    *  - pass 2 re-reads ONLY the touched files, left-joins the prefixed
+    *    source on the keys (broadcast when small), resolves each row's
+    *    fate through the ordered when-chains, and stages
+    *    kept ∪ updated ∪ inserted.
+    *
+    * Cost O(one key scan + source + touched files). Each source-derived
+    * frame (pass-1 keys, pass-2 join side, inserts) is evaluated once
+    * per attempt; a CDF table's change rows re-read the touched files
+    * and the inserts once more for the cdc staging. Row-tracking ids
+    * are preserved through the rewrite; CDF-obligated tables record
+    * exact update_preimage/update_postimage/delete/insert rows;
+    * constraints, invariants and generated columns are validated on
+    * the staged batch; identity tables refuse. Duplicate source keys
+    * refuse when matched clauses exist (two source rows updating one
+    * target row is nondeterministic). A lost commit CAS re-plans from
+    * scratch against the winner's snapshot. An optional `txn` (appId,
+    * version) pair rides in the commit as a SetTransaction action; a
+    * pair at or below the table's mark skips the merge (re-checked on
+    * every attempt). Returns the committed version, or the current one
+    * when there is nothing to do. */
   def mergeAdvanced(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String],
       matched: Seq[MergeWhen] = Nil,
       notMatched: Seq[MergeInsertWhen] = Nil,
       notMatchedBySource: Seq[MergeWhen] = Nil,
-      maxRetries: Int = 10): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count => fcount, lit, when}
+      maxRetries: Int = 10,
+      txn: Option[(String, Long)] = None): Long = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count => fcount, lit, when}
     import org.apache.spark.sql.Column
+    import graft.operators.Joins
+    import spark.implicits._
     require(keys.nonEmpty, "mergeAdvanced: keys must be non-empty")
     require(keys.forall(source.columns.contains),
       s"mergeAdvanced: keys ${keys.mkString(",")} not all in source columns " +
@@ -3726,21 +3605,22 @@ object DeltaWrite {
     // sources exactly as SQL does.
     if (matched.nonEmpty) {
       val dupKeys = source.groupBy(keys.map(col): _*).agg(fcount(lit(1)).as("n"))
-        .where(col("n") > 1).limit(1).count()
-      require(dupKeys == 0L,
+        .where(col("n") > 1)
+      require(dupKeys.isEmpty,
         s"mergeAdvanced: source has duplicate keys on ${keys.mkString(",")} — " +
           "two source rows matching one target row have no deterministic fate")
     }
     val FateCol = "__graft_fate"
+    val FireCol = "__graft_fire"
     val PresentCol = MergeSrcPrefix + "__present"
+    def condOf(m: MergeWhen): Option[Column] = m match {
+      case MergeUpdateWhen(c, _) => c
+      case MergeDeleteWhen(c) => c
+    }
+    def fires(c: Option[Column]): Column = coalesce(c.getOrElse(lit(true)), lit(false))
     def whenChain(actions: Seq[MergeWhen], base: Int): Column =
       actions.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
-        case (acc, (a, i)) =>
-          val c = a match {
-            case MergeUpdateWhen(cond, _) => cond
-            case MergeDeleteWhen(cond) => cond
-          }
-          acc.when(coalesce(c.getOrElse(lit(true)), lit(false)), lit(base + i))
+        case (acc, (a, i)) => acc.when(fires(condOf(a)), lit(base + i))
       }
     def fatesOf(actions: Seq[MergeWhen], base: Int)(
         pf: PartialFunction[MergeWhen, Unit]): Seq[Int] =
@@ -3759,15 +3639,52 @@ object DeltaWrite {
       } ++ notMatchedBySource.zipWithIndex.collect {
         case (MergeUpdateWhen(_, as), i) => (bySourceBase + i) -> as
       }).toMap
+    // the source under the matched-clause namespace ([[mergeSrc]])
+    def prefixed(df: DataFrame): DataFrame = df.toDF(df.columns.map(MergeSrcPrefix + _): _*)
+    def srcOnly(c: Column): Boolean = {
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      import org.apache.spark.sql.catalyst.expressions.AttributeReference
+      // catalystExpression, NOT expression: the lazy wrapper hides its
+      // ColumnNode children from collect and every condition would
+      // read as reference-free (= source-only) — pruning on a
+      // TARGET-referencing condition, which is a correctness bug
+      val refs = org.apache.spark.sql.GraftColumnBridge.catalystExpression(c)
+        .collect {
+          case ua: UnresolvedAttribute => ua.nameParts.head
+          case ar: AttributeReference => ar.name
+        }
+      refs.forall(_.startsWith(MergeSrcPrefix))
+    }
+    // pass-1 source side: the keys and whether some matched clause can
+    // fire. Engaged only when some clause HAS a condition and all of
+    // them read the source alone; otherwise every match may fire.
+    val matchedSrcOnly = matched.exists(condOf(_).isDefined) &&
+      matched.forall(m => condOf(m).forall(srcOnly))
+    val srcFire = prefixed(source).select(
+      keys.map(k => col(MergeSrcPrefix + k).as(k)) :+
+        (if (matchedSrcOnly) matched.map(m => fires(condOf(m))).reduce(_ || _)
+         else lit(true)).as(FireCol): _*)
+    val srcKeys = source.select(keys.map(col): _*).distinct()
     var attempt = 0
     while (attempt < maxRetries) {
       val v = DeltaRead.latestVersion(table)
       val snap = DeltaRead.snapshotAt(spark, table, v)
+      // exactly-once replay guard (same contract as appendOnce): a
+      // (appId, version) already at or below the table's recorded
+      // SetTransaction mark means this batch landed — skip BEFORE
+      // staging anything, re-checked on every CAS retry so two racing
+      // replays cannot both commit
+      txn.foreach { case (appId, ver) =>
+        if (snap.txns.get(appId).exists(_ >= ver)) return v
+      }
       validateWriterSupport(table, snap, removesData = true)
       val committed = snap.schema.getOrElse(throw new IllegalStateException(
         s"mergeAdvanced: $table has no committed schema"))
       require(committed.fieldNames.forall(!_.startsWith(MergeSrcPrefix)),
         s"mergeAdvanced: table columns may not start with $MergeSrcPrefix")
+      // identity tables refuse MERGE: caller-chosen identity values
+      // would land without advancing the high-water mark — a quieter
+      // corruption than any refusal
       if (committed.fields.exists(_.metadata.contains(IdStartKey)))
         throw new UnsupportedOperationException(
           s"mergeAdvanced: $table carries identity columns — use append " +
@@ -3786,114 +3703,69 @@ object DeltaWrite {
           Some(WriteMapping.Ctx(snap.columnMappingMode, committed, startMax))
         }
       val outCols = committed.fields.toSeq.map(f => col(f.name))
-      // --- pass 1: keys with lineage; BY SOURCE clauses widen the scan
-      // to every column (their conditions are opaque Columns over the
-      // target row — and an unmatched-row sweep is table-wide anyway;
-      // the matched-only hot path stays a key-only projection) ---
-      val p1cols =
-        (if (notMatchedBySource.isEmpty) keys.distinct.map(col)
-         else committed.fieldNames.toSeq.map(col)) :+ col(DeltaRead.LineageFile)
-      val p1 = DeltaRead.readVersionWithLineage(spark, table, v).select(p1cols: _*)
-      val srcKeys = source.select(keys.map(col): _*).distinct()
-      // when EVERY matched clause condition reads the SOURCE row only
-      // (references confined to the __graft_src__ namespace, or no
-      // condition at all), a source row whose conditions all miss
-      // cannot change any target row — pre-filter the matched key set
-      // to rows where some clause can fire, so files holding only
-      // non-firing keys are never rewritten (the r12 design note: the
-      // conservative plan rewrote every matched-key file even when all
-      // clause conditions missed). The insert side keeps the FULL key
-      // set — non-firing keys are still "matched" for NOT MATCHED
-      // purposes.
-      def srcOnly(c: org.apache.spark.sql.Column): Boolean = {
-        import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        import org.apache.spark.sql.catalyst.expressions.AttributeReference
-        // catalystExpression, NOT expression: the lazy wrapper hides its
-        // ColumnNode children from collect and every condition would
-        // read as reference-free (= source-only) — pruning on a
-        // TARGET-referencing condition, which is a correctness bug
-        val refs = org.apache.spark.sql.GraftColumnBridge.catalystExpression(c)
-          .collect {
-            case ua: UnresolvedAttribute => ua.nameParts.head
-            case ar: AttributeReference => ar.name
-          }
-        refs.forall(_.startsWith(MergeSrcPrefix))
-      }
-      def condOf(m: MergeWhen): Option[org.apache.spark.sql.Column] = m match {
-        case MergeUpdateWhen(c, _) => c
-        case MergeDeleteWhen(c) => c
-      }
-      // engage only when some clause actually HAS a condition — with
-      // every clause unconditional the filter keeps everything and the
-      // extra distinct is pure cost
-      val matchedSrcOnly = matched.exists(condOf(_).isDefined) &&
-        matched.forall(m => condOf(m).forall(srcOnly))
-      val matchedKeys =
-        if (!matchedSrcOnly) srcKeys
-        else {
-          val pfx = source.columns.foldLeft(source)((d, c) =>
-            d.withColumnRenamed(c, MergeSrcPrefix + c))
-          val anyFire = matched.map(m =>
-            coalesce(condOf(m).getOrElse(lit(true)), lit(false))).reduce(_ || _)
-          pfx.where(anyFire)
-            .select(keys.map(k => col(MergeSrcPrefix + k).as(k)): _*).distinct()
-        }
-      val touchedMatched =
-        if (matched.isEmpty) None
-        else Some(p1.join(matchedKeys, keys, "left_semi")
-          .select(col(DeltaRead.LineageFile)))
-      val touchedBySource =
-        if (notMatchedBySource.isEmpty) None
-        else {
-          val anyFire = notMatchedBySource.map {
-            case MergeUpdateWhen(c, _) => coalesce(c.getOrElse(lit(true)), lit(false))
-            case MergeDeleteWhen(c) => coalesce(c.getOrElse(lit(true)), lit(false))
-          }.reduce(_ || _)
-          Some(p1.join(srcKeys, keys, "left_anti").where(anyFire)
-            .select(col(DeltaRead.LineageFile)))
-        }
-      val touchedAbs = (touchedMatched.toSeq ++ touchedBySource.toSeq)
-        .reduceOption(_ unionByName _)
-        .map(_.distinct().collect().map(_.getString(0)).toSet)
-        .getOrElse(Set.empty[String])
-      val touched = touchedEntries(table, snap, touchedAbs, "mergeAdvanced")
+      val target = DeltaRead.readVersionWithLineage(spark, table, v)
+      // --- pass 1: the ONE key scan, materialized as the match set ---
+      val matchSet: Option[DataFrame] =
+        if (matched.isEmpty && notMatched.isEmpty) None
+        else Some(target.select(keys.map(col) :+ col(DeltaRead.LineageFile): _*)
+          .join(Joins.maybeBroadcast(srcFire), keys, "inner")
+          .localCheckpoint(true))
+      // one job over the match set: its row count (sizes the insert
+      // anti-join's broadcast) and the files of the rows that can fire
+      val (matchRows, firingFiles) = matchSet.map { ms =>
+        val perPartition = ms.select(col(DeltaRead.LineageFile), col(FireCol))
+          .mapPartitions { rows =>
+            var n = 0L
+            val files = scala.collection.mutable.Set.empty[String]
+            rows.foreach { r => n += 1; if (r.getBoolean(1)) files += r.getString(0) }
+            Iterator((n, files.toSeq))
+          }.collect()
+        (perPartition.map(_._1).sum, perPartition.flatMap(_._2).toSet)
+      }.getOrElse((0L, Set.empty[String]))
+      val touchedBySource: Set[String] =
+        if (notMatchedBySource.isEmpty) Set.empty
+        else target.select(committed.fieldNames.toSeq.map(col) :+
+            col(DeltaRead.LineageFile): _*)
+          .join(srcKeys, keys, "left_anti")
+          .where(notMatchedBySource.map(m => fires(condOf(m))).reduce(_ || _))
+          .select(col(DeltaRead.LineageFile)).distinct()
+          .collect().map(_.getString(0)).toSet
+      val touched = touchedEntries(table, snap,
+        (if (matched.isEmpty) Set.empty[String] else firingFiles) ++ touchedBySource,
+        "mergeAdvanced")
       val matPair: Option[(String, String)] =
         if (rowTrackingOn(snap))
           snap.configuration.get(MatRowIdKey).zip(snap.configuration.get(MatRcvKey))
         else None
       val matSel = matPair.toSeq.flatMap { case (a, b) => Seq(col(a), col(b)) }
-      // --- inserts: unmatched source rows through the insert chain ---
-      val inserts0Opt: Option[DataFrame] =
-        if (notMatched.isEmpty) None
-        else Some {
-          val targetKeys = p1.select(keys.map(col): _*).distinct()
-          val insFate = notMatched.zipWithIndex
-            .foldLeft(when(lit(false), lit(-1))) { case (acc, (cl, i)) =>
-              acc.when(coalesce(cl.condition.getOrElse(lit(true)), lit(false)), lit(i))
-            }
-          val firing = source.join(targetKeys, keys, "left_anti")
-            .withColumn(FateCol, insFate).where(col(FateCol).isNotNull)
-          def insVal(f: StructField): Column =
-            notMatched.zipWithIndex.foldLeft(
-                lit(null).cast(f.dataType): Column) { case (acc, (cl, i)) =>
-              val value = cl.assignments
-                .collectFirst { case (n, e) if n.equalsIgnoreCase(f.name) => e }
-                .map(_.cast(f.dataType))
-                .getOrElse(lit(null).cast(f.dataType))
-              when(col(FateCol) === i, value).otherwise(acc)
-            }
-          // PERSISTED for the attempt: this frame is acted on up to
-          // three times (the nothing-to-do probe, the staged batch, the
-          // CDC union) and its lineage re-runs the source scan + global
-          // key anti-join each time — on an expensive source that is 3×
-          // the insert-side cost, per CAS attempt. Unpersisted in the
-          // attempt's finally.
-          firing.select(committed.fields.toSeq.map(f => insVal(f).as(f.name)): _*)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        }
-      try {
-      val haveInserts = inserts0Opt.exists(!_.isEmpty)
-      if (touched.isEmpty && !haveInserts) return v // nothing to do
+      // --- inserts: source rows an insert clause accepts, minus the
+      // match set (O(matched rows): broadcast when its counted size fits)
+      val inserts0Opt: Option[DataFrame] = matchSet.filter(_ => notMatched.nonEmpty).map { ms =>
+        val matchedKeys = ms.select(keys.map(col): _*)
+        val build =
+          if (matchRows * matchedKeys.schema.defaultSize <= Joins.DefaultBroadcastBytes)
+            broadcast(matchedKeys)
+          else matchedKeys
+        val insFate = notMatched.zipWithIndex
+          .foldLeft(when(lit(false), lit(-1))) { case (acc, (cl, i)) =>
+            acc.when(fires(cl.condition), lit(i))
+          }
+        def insVal(f: StructField): Column =
+          notMatched.zipWithIndex.foldLeft(
+              lit(null).cast(f.dataType): Column) { case (acc, (cl, i)) =>
+            val value = cl.assignments
+              .collectFirst { case (n, e) if n.equalsIgnoreCase(f.name) => e }
+              .map(_.cast(f.dataType))
+              .getOrElse(lit(null).cast(f.dataType))
+            when(col(FateCol) === i, value).otherwise(acc)
+          }
+        source.withColumn(FateCol, insFate).where(col(FateCol).isNotNull)
+          .join(build, keys, "left_anti")
+          .select(committed.fields.toSeq.map(f => insVal(f).as(f.name)): _*)
+      }
+      // the emptiness probe runs only when no file is touched: otherwise
+      // the staged batch is the inserts' one evaluation
+      if (touched.isEmpty && inserts0Opt.forall(_.isEmpty)) return v // nothing to do
       val insertsOpt = inserts0Opt.map { i0 =>
         matPair.fold(i0) { case (a, b) =>
           i0.withColumn(a, lit(null).cast("long"))
@@ -3921,12 +3793,10 @@ object DeltaWrite {
           // source (legal in SQL for BY-SOURCE-only merges) cannot
           // multiply the kept matched rows
           val joinSrc = if (matched.nonEmpty) source else srcKeys
-          val srcPfx = joinSrc.columns.foldLeft(joinSrc)((d, c) =>
-            d.withColumnRenamed(c, MergeSrcPrefix + c))
-            .withColumn(PresentCol, lit(true))
+          val srcPfx = prefixed(joinSrc).withColumn(PresentCol, lit(true))
           val joinCond = keys.map(k => col(k) === col(MergeSrcPrefix + k))
             .reduce(_ && _)
-          val joined = tTouched.join(srcPfx, joinCond, "left_outer")
+          val joined = tTouched.join(Joins.maybeBroadcast(srcPfx), joinCond, "left_outer")
             .withColumn(FateCol,
               when(col(PresentCol).isNotNull, whenChain(matched, 0))
                 .otherwise(whenChain(notMatchedBySource, bySourceBase)))
@@ -3968,6 +3838,8 @@ object DeltaWrite {
         }
       enforceConstraints(batch, snap.configuration, table)
       enforceInvariants(batch, committed, table)
+      // merge batches always carry every column: generated ones are
+      // validated (never recomputed — the kept rows already conform)
       applyGeneratedColumns(batch, committed, table)
       // the materialized row-id columns are PASSENGERS, not schema
       // columns: under column mapping they ride physicalizeDf's
@@ -3984,6 +3856,7 @@ object DeltaWrite {
         cdcRows.map(stageCdc(_, table, snap)).getOrElse(Nil))
       val now = System.currentTimeMillis()
       val lines = Seq(commitInfoAction("MERGE", now)) ++
+        txn.map { case (appId, ver) => txnAction(appId, ver, now) } ++
         touched.map(f => removeAction(f.path, now)) ++
         staged.map(s => addAction(s)) ++
         cdcStaged.map(cdcAction)
@@ -3996,7 +3869,6 @@ object DeltaWrite {
       dropStaged(table, staged)
       dropStaged(table, cdcStaged)
       attempt += 1 // lost the CAS race: replan against the winner
-      } finally inserts0Opt.foreach(_.unpersist(blocking = false))
     }
     throw new IllegalStateException(
       s"mergeAdvanced: lost $maxRetries commit races on $table")
@@ -4975,6 +4847,7 @@ object DeltaWrite {
       // serializer; variant staging stays correct because shredGuard
       // owns its lock). The commit below is still ONE atomic publish
       // of every group's removes+adds.
+      val conf = spark.sessionState.newHadoopConf()
       def stageGroup(g: (Map[String, String], Seq[DeltaRead.FileEntry], Long))
           : (Seq[Staged], Seq[DeltaRead.FileEntry]) = g match {
         case (pv, fs, groupBytes) =>
@@ -5048,7 +4921,7 @@ object DeltaWrite {
           Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
           Staged(relPath, pv.map { case (k, x) => physBy.getOrElse(k, k) -> x },
             Files.size(dest),
-            Files.getLastModifiedTime(dest).toMillis, parquetStats(dest))
+            Files.getLastModifiedTime(dest).toMillis, parquetStats(dest, conf))
         }
         org.apache.commons.io.FileUtils.deleteDirectory(tmpDir.toFile)
         (outs, fs)

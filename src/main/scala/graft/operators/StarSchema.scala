@@ -405,13 +405,14 @@ object Validator {
 
   /** The report's (check_name: string, n_bad: long) output schema —
     * for orchestrators that rebuild the report frame from collected
-    * branch rows. */
+    * branch rows. Both fields are non-nullable, as in [[report]]'s own
+    * schema (every counter is count-based). */
   val reportSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("check_name",
         org.apache.spark.sql.types.StringType, nullable = false),
       org.apache.spark.sql.types.StructField("n_bad",
-        org.apache.spark.sql.types.LongType, nullable = true)))
+        org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** [[report]] decomposed into independent branches, each tagged with
     * the gold tables it reads — so an orchestrator can START each

@@ -1,0 +1,143 @@
+package graft
+
+import graft.io.{DeltaRead, DeltaWrite}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+/** What one [[DeltaWrite.merge]] costs on a multi-file table, observed
+  * from outside: a `SparkListener` counts the Spark jobs it starts and a
+  * `QueryExecutionListener` collects every parquet scan of its executed
+  * plans (checkpoint, broadcast and write sub-plans included). The
+  * target's key columns are scanned exactly once, only the touched
+  * files are re-read and rewritten, and an insert-only merge reads no
+  * data file after that one scan. */
+class MergeCostSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+  import spark.implicits._
+
+  private def newTable(): String = Files.createTempDirectory("mergecost").toString
+  private def cleanup(t: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
+
+  /** One parquet scan: the files (or directories) it lists and the
+    * columns it reads from them. */
+  private final case class Scan(paths: Set[String], columns: Seq[String])
+
+  /** Runs `body` and returns the Spark jobs it started from this thread
+    * plus every parquet scan its SQL executions planned. Listener
+    * delivery is asynchronous, so a marked sentinel action closes the
+    * window: once both listeners have seen it, they have seen all that
+    * came before. */
+  private def observed[A](body: => A): (A, Int, Seq[Scan]) = {
+    val tag = "graft.test.window"
+    val id = java.util.UUID.randomUUID().toString
+    val marker = s"sentinel_${id.replace('-', '_')}"
+    val jobs = new AtomicInteger(0)
+    val scans = new ConcurrentLinkedQueue[Scan]()
+    val jobsDone = new CountDownLatch(1)
+    val plansDone = new CountDownLatch(1)
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(tag)).foreach {
+          case `id` => jobs.incrementAndGet()
+          case s if s == s"$id-end" => jobsDone.countDown()
+          case _ => ()
+        }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) plansDone.countDown()
+        else collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .foreach { s =>
+            scans.add(Scan(s.relation.location.rootPaths.map(p =>
+              Paths.get(p.toUri).toAbsolutePath.normalize().toString).toSet,
+              s.requiredSchema.fieldNames.toSeq))
+          }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      sc.setLocalProperty(tag, id)
+      val out = try body finally sc.setLocalProperty(tag, s"$id-end")
+      try spark.range(1).toDF(marker).collect() finally sc.setLocalProperty(tag, null)
+      assert(jobsDone.await(30, TimeUnit.SECONDS) && plansDone.await(30, TimeUnit.SECONDS))
+      (out, jobs.get, scans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+  }
+
+  /** Scans of `t`'s data files (not its log or change-data files). */
+  private def dataScans(t: String, scans: Seq[Scan]): Seq[Scan] = {
+    val root = Paths.get(t).toAbsolutePath.normalize()
+    scans.filter(_.paths.exists { p =>
+      val path = Paths.get(p)
+      path.startsWith(root) && !path.startsWith(root.resolve("_delta_log")) &&
+        !path.startsWith(root.resolve("_change_data"))
+    })
+  }
+
+  private def livePaths(t: String): Set[String] =
+    DeltaRead.snapshot(spark, t).files
+      .map(f => DeltaRead.dataPath(t, f.path).toAbsolutePath.normalize().toString).toSet
+
+  /** Four range-laid files of 100 rows each: ids [0,100), [100,200), ... */
+  private def fourFileTable(): String = {
+    val t = newTable()
+    DeltaWrite.append((0 until 400).map(i => (i.toLong, s"v$i", i * 2L))
+      .toDF("id", "txt", "n").repartitionByRange(4, $"id"), t)
+    assert(DeltaRead.snapshot(spark, t).files.size == 4)
+    t
+  }
+
+  test("an upsert scans the target's keys once and re-reads and rewrites only the touched file") {
+    val t = fourFileTable()
+    try {
+      val before = livePaths(t)
+      val holding = DeltaRead.readVersionWithLineage(spark, t, 0L)
+        .where($"id" < 10).select(DeltaRead.LineageFile).distinct()
+        .as[String].collect().toSet
+      assert(holding.size == 1)
+      val src = ((0 until 10).map(i => (i.toLong, "upd", -1L)) ++
+        (1000 until 1005).map(i => (i.toLong, "new", 0L))).toDF("id", "txt", "n")
+      val (_, jobs, scans) = observed(DeltaWrite.merge(spark, t, src, Seq("id")))
+      val data = dataScans(t, scans)
+      info(s"$jobs Spark jobs; data scans: ${data.map(_.columns.mkString(",")).mkString(" | ")}")
+      val keyScans = data.filter(_.paths == before)
+      assert(keyScans.size == 1, s"one scan over the live files expected, got $keyScans")
+      assert(keyScans.head.columns == Seq("id"), s"key-only projection: $keyScans")
+      val rest = data.diff(keyScans)
+      assert(rest.nonEmpty && rest.forall(_.paths == holding),
+        s"after the key scan only the touched file may be read, got $rest")
+      val after = livePaths(t)
+      assert(before -- after == holding, "exactly the touched file is removed")
+      assert((before - holding.head).subsetOf(after), "untouched files stay live")
+      assert(jobs <= 9, s"merge ran $jobs Spark jobs")
+      val got = DeltaRead.read(spark, t)
+      assert(got.count() == 405L)
+      assert(got.where($"txt" === "upd").count() == 10L)
+    } finally cleanup(t)
+  }
+
+  test("an insert-only merge reads no data file after its one key scan") {
+    val t = fourFileTable()
+    try {
+      val before = livePaths(t)
+      val src = (2000 until 2005).map(i => (i.toLong, "new", 0L)).toDF("id", "txt", "n")
+      val (v, _, scans) = observed(DeltaWrite.merge(spark, t, src, Seq("id")))
+      val data = dataScans(t, scans)
+      info(s"data scans: ${data.map(_.columns.mkString(",")).mkString(" | ")}")
+      assert(data.size == 1 && data.head.paths == before && data.head.columns == Seq("id"),
+        s"exactly one key-only scan of the target expected, got $data")
+      assert(v == 1L && before.subsetOf(livePaths(t)), "no file rewritten")
+      assert(DeltaRead.read(spark, t).count() == 405L)
+    } finally cleanup(t)
+  }
+}

@@ -193,6 +193,82 @@ class MergeSpec extends SparkTestBase {
     } finally cleanup(t)
   }
 
+  test("adapter edges: null source keys insert, duplicate target keys all update, non-firing matches keep their file, txn replays skip") {
+    import graft.io.DeltaWrite.MergeClauses
+    val t = newTable()
+    try {
+      // file A holds key 1 twice; file B only keys whose clauses will not fire
+      DeltaWrite.append(Seq((Option(1L), "a"), (Option(1L), "a2"), (Option(2L), "b"))
+        .toDF("id", "txt").coalesce(1), t)
+      DeltaWrite.append(Seq((Option(10L), "x"), (Option(11L), "y")).toDF("id", "txt")
+        .coalesce(1), t)
+      val fileB = (DeltaRead.snapshotAt(spark, t, 1L).files.map(_.path).toSet --
+        DeltaRead.snapshotAt(spark, t, 0L).files.map(_.path)).head
+      val bBytes = Files.readAllBytes(Paths.get(t, fileB)).toSeq
+      val src = Seq((Option(1L), "upd", "u"), (Option.empty[Long], "nullkey", "u"),
+        (Option(10L), "ignored", "noop")).toDF("id", "txt", "op")
+      val clauses = MergeClauses(updateWhen = Some($"op" === "u"),
+        insertWhen = Some($"op" === "u"))
+      val v = DeltaWrite.merge(spark, t, src, Seq("id"), clauses = clauses,
+        txn = Some(("adapter-spec", 1L)))
+      val rows = DeltaRead.read(spark, t).as[(Option[Long], String)].collect().toSeq
+      assert(rows.filter(_._1.contains(1L)).map(_._2) == Seq("upd", "upd"),
+        "every target row sharing the key takes the update")
+      assert(rows.count(_._1.isEmpty) == 1, "a null source key never matches: it inserts")
+      assert(rows.toSet == Set((Some(1L), "upd"), (Some(2L), "b"), (Some(10L), "x"),
+        (Some(11L), "y"), (None, "nullkey")))
+      assert(DeltaRead.snapshot(spark, t).files.exists(_.path == fileB) &&
+        Files.readAllBytes(Paths.get(t, fileB)).toSeq == bBytes,
+        "a file whose matched rows fire no clause stays live and byte-identical")
+      assert(DeltaRead.snapshot(spark, t).txns.get("adapter-spec").contains(1L))
+      // replaying the same (appId, version) is skipped, even with a poisoned source
+      val poison = Seq((Option(2L), "poison", "u")).toDF("id", "txt", "op")
+      assert(DeltaWrite.merge(spark, t, poison, Seq("id"), clauses = clauses,
+        txn = Some(("adapter-spec", 1L))) == v)
+      assert(DeltaRead.read(spark, t).where($"txt" === "poison").count() == 0L)
+      // the next version of the batch applies
+      assert(DeltaWrite.merge(spark, t, poison, Seq("id"), clauses = clauses,
+        txn = Some(("adapter-spec", 2L))) == v + 1)
+      assert(DeltaRead.read(spark, t).where($"txt" === "poison").count() == 1L)
+    } finally cleanup(t)
+  }
+
+  test("CDC and row tracking through merge: delete, update, no-op and insert clauses") {
+    import graft.io.DeltaWrite.MergeClauses
+    val t = newTable()
+    try {
+      DeltaWrite.append((1 to 20).map(i => (i.toLong, s"v$i")).toDF("id", "txt")
+        .repartitionByRange(2, $"id"), t)
+      DeltaWrite.enableRowTracking(spark, t)
+      DeltaWrite.setProperties(spark, t, Map("delta.enableChangeDataFeed" -> "true"))
+      def ids: Map[Long, Long] = DeltaRead.readWithRowIds(spark, t)
+        .select($"id", col(DeltaRead.RowIdCol))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val before = ids
+      val src = Seq((3L, "upd3", "u"), (5L, "gone", "d"), (7L, "noop", "n"),
+        (99L, "new99", "u")).toDF("id", "txt", "op")
+      val v = DeltaWrite.merge(spark, t, src, Seq("id"), clauses = MergeClauses(
+        updateWhen = Some($"op" === "u"), deleteWhen = Some($"op" === "d"),
+        insertWhen = Some($"op" === "u")))
+      val raw = spark.read.parquet(t + "/_change_data")
+        .select($"id", $"txt", col(DeltaRead.ChangeTypeCol))
+        .as[(Long, String, String)].collect().toSet
+      assert(raw == Set((5L, "v5", "delete"), (3L, "v3", "update_preimage"),
+        (3L, "upd3", "update_postimage"), (99L, "new99", "insert")),
+        "exact change rows: the no-op match and kept rows never surface")
+      val feed = DeltaRead.changesBetween(spark, t, v - 1, v)
+        .select($"id", $"txt", col(DeltaRead.ChangeTypeCol))
+        .as[(Long, String, String)].collect().toSet
+      assert(feed == Set((5L, "v5", "delete"), (3L, "v3", "delete"),
+        (3L, "upd3", "insert"), (99L, "new99", "insert")))
+      val after = ids
+      assert(after.keySet == (1L to 20L).toSet - 5L + 99L)
+      (1L to 20L).filter(_ != 5L).foreach(k =>
+        assert(after(k) == before(k), s"row $k re-identified"))
+      assert(!before.values.toSet.contains(after(99L)), "the insert takes a fresh id")
+    } finally cleanup(t)
+  }
+
   test("applyChanges replays a feed batch as one merge: fold(source changes) lands in the mirror") {
     val src = newTable(); val dst = newTable()
     try {

@@ -13,6 +13,12 @@ class StarStreamingSpec extends SparkTestBase {
     assert(bad.isEmpty, s"integrity violations: ${bad.mkString(",")}")
   }
 
+  test("Validator.reportSchema is the report's own schema: non-null counters") {
+    val star = StarSchema.build(spark, sf)
+    assert(Validator.report(star).schema == Validator.reportSchema)
+    assert(Validator.reportSchema.fields.forall(!_.nullable))
+  }
+
   test("surrogate keys are deterministic across builds") {
     val a = StarSchema.build(spark, sf)("dim_customer").select("c_custkey", "customer_sk")
     val b = StarSchema.build(spark, sf)("dim_customer").select("c_custkey", "customer_sk")
