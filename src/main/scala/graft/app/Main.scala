@@ -47,8 +47,8 @@ object Main {
     // writes, the eight gold loads and the volumetry aggregation share
     // no data dependencies — submitted sequentially, each job's
     // straggler tail left the other 31 cores idle (~40% of pipeline
-    // wall at sf0.1). A small pool keeps 4 jobs in flight so the next
-    // load back-fills the current one's tail; outputs are byte-
+    // wall at sf0.1). A small pool keeps several jobs in flight so the
+    // next load back-fills the current one's tail; outputs are byte-
     // identical (distinct paths, FIFO scheduling, and the shared lazy
     // dims are synchronized in LazyStar). Validation still runs AFTER
     // the gold barrier — it audits the warehouse as written.

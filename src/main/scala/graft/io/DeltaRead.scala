@@ -10,12 +10,11 @@ import scala.jdk.CollectionConverters._
 /** Read-only Delta Lake `_delta_log` snapshot reader — the format the
   * reference's bronze layer actually lands in
   * (reference extractor_polymarket.py:208-223 writes Delta tables;
-  * main.py:128-163 reads them back). graft's own [[TxLog]] provides
-  * the equivalent commit protocol for tables graft WRITES; this
-  * reader closes the interop gap in the other direction: a user
-  * holding the reference's existing datalake points graft at the
-  * table directory and gets a correct snapshot — no Delta library,
-  * just the public protocol (github.com/delta-io/delta PROTOCOL.md):
+  * main.py:128-163 reads them back). [[DeltaWrite]] writes the same
+  * protocol for tables graft WRITES; this reader closes the interop
+  * gap in the other direction: a user holding the reference's
+  * existing datalake points graft at the table directory and gets a
+  * correct snapshot — no Delta library, just the public protocol (github.com/delta-io/delta PROTOCOL.md):
   *
   *  - `_delta_log/<v>%020d.json` — one commit per version; each line
   *    is one action object (`add`, `remove`, `metaData`, `protocol`,

@@ -22,12 +22,12 @@ import scala.jdk.CollectionConverters._
   *    (with `partitionValues`, `size`, `modificationTime`, and
   *    `stats.numRecords` so downstream readers can skip/plan), `remove`
   *    per replaced file on overwrite, and a `commitInfo` tag;
-  *  - commit publish is the same atomic create-if-absent CAS as
-  *    [[TxLog.tryCommit]]: write to a temp name, hard-link to the
-  *    version path (link(2) EEXIST is atomic on POSIX), retry the
-  *    replay on a lost race — so concurrent appenders serialize
-  *    correctly with no lock service, which is the property that
-  *    matters when 1000 executors' drivers share one table root;
+  *  - commit publish is an atomic create-if-absent CAS: write to a
+  *    temp name, hard-link to the version path (link(2) EEXIST is
+  *    atomic on POSIX), retry the replay on a lost race — so
+  *    concurrent appenders serialize correctly with no lock service,
+  *    which is the property that matters when 1000 executors' drivers
+  *    share one table root;
   *  - [[checkpoint]] materializes the replayed state as the single-file
   *    `<v>%020d.checkpoint.parquet` + `_last_checkpoint` pointer, so
   *    readers of a long-lived table scan one parquet instead of
@@ -37,9 +37,8 @@ import scala.jdk.CollectionConverters._
   *
   * Writer-side protocol is (minReaderVersion 1, minWriterVersion 2) —
   * the plain-parquet feature floor, readable by every Delta client.
-  * Schema drift on append is rejected with names (same contract as
-  * [[TxLog.appendNew]]); evolving the schema is an explicit
-  * [[overwrite]].
+  * Schema drift on append is rejected at commit time, with the
+  * column names; evolving the schema is an explicit [[overwrite]].
   */
 object DeltaWrite {
 
@@ -189,8 +188,7 @@ object DeltaWrite {
 
   /** Write `df` as parquet into a staging dir and move the part files
     * into the table root (partition dirs preserved). Invisible to any
-    * reader until a commit references them — same stage-then-publish
-    * shape as [[TxLog]]. */
+    * reader until a commit references them (stage, then publish). */
   private def stage(df: DataFrame, table: String,
       partitionBy: Seq[String], destPrefix: String = ""): Seq[Staged] = {
     val tmpDir = Paths.get(table, s"_staging-${UUID.randomUUID()}")
@@ -1828,8 +1826,11 @@ object DeltaWrite {
   private[io] def commitInfoAction(op: String, ts: Long): String =
     s"""{"commitInfo":{"timestamp":$ts,"operation":"$op","engineInfo":"graft"}}"""
 
-  /** Atomic create-if-absent publish (see [[TxLog.tryCommit]]). */
-  private[io] def tryPublish(table: String, v: Long, lines: Seq[String]): Boolean = {
+  /** Atomic create-if-absent publish of commit `v`: the lines go to a
+    * temp file that is hard-linked to the version path, so exactly one
+    * of several racing writers wins (link(2) EEXIST is atomic on
+    * POSIX). False when `v` already exists. */
+  private def tryPublish(table: String, v: Long, lines: Seq[String]): Boolean = {
     val ld = logDir(table)
     Files.createDirectories(ld)
     val tmp = ld.resolve(s".tmp-${UUID.randomUUID()}")
@@ -2453,9 +2454,8 @@ object DeltaWrite {
     * mutation in this writer adds NEW files rather than editing old
     * ones). Schema, partitioning, configuration (column mapping
     * included) and the protocol carry over verbatim; the clone gets a
-    * fresh table id. Same-filesystem only (hard links). The Delta
-    * `SHALLOW CLONE` story with TxLog-bridge mechanics
-    * ([[DeltaBridge]] pioneered the hard-link transcription). */
+    * fresh table id. Same-filesystem only (hard links): the Delta
+    * `SHALLOW CLONE` story at zero data I/O. */
   def clone(spark: SparkSession, source: String, dest: String): Long = {
     val s = DeltaRead.snapshot(spark, source)
     require(!tableExists(dest), s"clone: $dest is already a table")
@@ -4952,11 +4952,10 @@ object DeltaWrite {
 
   /** Garbage-collect data files no live snapshot references — crashed
     * writers' staged-then-abandoned part files and files removed by
-    * [[overwrite]]. Same safety contract as [[TxLog.vacuum]]:
-    * `retentionMs` (Delta-style retention window) protects files a
-    * concurrent writer has staged but not yet committed, AND — like
-    * real Delta — files whose `remove` action is younger than the
-    * window (measured from the commit's `deletionTimestamp`, not file
+    * [[overwrite]]. `retentionMs` (Delta-style retention window)
+    * protects files a concurrent writer has staged but not yet
+    * committed, AND — like real Delta — files whose `remove` action is
+    * younger than the window (measured from the commit's `deletionTimestamp`, not file
     * mtime, so a reader that resolved a pre-overwrite snapshot keeps
     * its files for the full window regardless of when they were
     * written). Only run with `retentionMs = 0` when all writers AND

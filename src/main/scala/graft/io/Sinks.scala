@@ -87,45 +87,6 @@ object Sinks {
     }
   }
 
-  /** Small-files compaction for a parquet directory — the Delta
-    * OPTIMIZE analog for the plain-parquet gold layout. A long-lived
-    * table fed by incremental [[parquetAppendNew]] loads accretes one
-    * file per append; at 100 TB the file-count (NameNode/listing
-    * pressure, per-file open cost, tiny row groups defeating column
-    * statistics) becomes its own bottleneck. Rewrites the directory as
-    * ceil(bytes/targetBytes) files via a staging dir + a two-rename
-    * swap. Each rename is atomic on posix/HDFS but the PAIR is not: a
-    * reader in the gap sees a missing directory, and like
-    * [[parquetAppendNew]] this is not a concurrent-WRITER protocol —
-    * that's Delta's job. Every rename's boolean is CHECKED (Hadoop
-    * FileSystem signals most failures by returning false, not
-    * throwing): on a failed forward swap the original is restored and
-    * the retired copy is never deleted, so no path leads to data loss.
-    * Returns the new file count. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Int = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = fs.getContentSummary(hPath).getLength
-    val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val staged = new org.apache.hadoop.fs.Path(path + "__compact_staged")
-    val retired = new org.apache.hadoop.fs.Path(path + "__compact_retired")
-    spark.read.parquet(path).repartition(parts)
-      .write.mode("overwrite").parquet(staged.toString)
-    if (fs.exists(retired) && !fs.delete(retired, true))
-      throw new java.io.IOException(s"compact: cannot clear stale $retired")
-    if (!fs.rename(hPath, retired))
-      throw new java.io.IOException(s"compact: cannot retire $hPath (data untouched)")
-    if (!fs.rename(staged, hPath)) {
-      val restored = fs.rename(retired, hPath)
-      throw new java.io.IOException(
-        s"compact: swap-in of $staged failed; original " +
-          (if (restored) s"restored at $hPath" else s"PRESERVED at $retired"))
-    }
-    fs.delete(retired, true) // best-effort: leftovers are dead data, not loss
-    fs.listStatus(hPath).count(_.getPath.getName.endsWith(".parquet"))
-  }
-
   /** Z-order key: interleave the bits of each column's min/max-scaled
     * integer image, so rows close in EVERY clustered dimension land
     * close in the sort. Pure (unrolled) column math — `bits` iterations

@@ -86,7 +86,14 @@ object ImportanceSampling {
     * is order-dependent in its last bits, and at corpus scale some
     * document's total WILL land on a rounding boundary and flip
     * between engines (seen at sf0.1); the integer sum is
-    * order-independent and bit-identical everywhere. */
+    * order-independent and bit-identical everywhere.
+    *
+    * Rows are grouped by `(doc_id, source)`, which assumes `doc_id →
+    * source` is functional. Where it is not, a doc_id listed under two
+    * raw sources yields TWO rows, one per source, each weighting only
+    * its own rows' features — never one merged weight.
+    * ImportanceSamplingSpec pins both the dependency on the corpus
+    * feature frames and this outcome. */
   def logWeights(feats: DataFrame, isTarget: Column, ratios: DataFrame): DataFrame =
     feats.where(!isTarget)
       .join(broadcast(ratios), "b")

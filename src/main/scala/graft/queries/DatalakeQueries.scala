@@ -531,32 +531,38 @@ object DatalakeQueries {
            |       round(sum(o_totalprice), 2) AS revenue
            |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin))
 
-  /** q177 — the TRANSACTIONAL table format end-to-end (VERDICT r4 #3:
-    * the commit-protocol tier the reference gets from Delta): documents
-    * lands as tx version 1, the SAME batch re-appends (idempotent — no
-    * new version), a disjoint second batch lands as version 2, the
-    * table compacts through the manifest (version 3). Output reads the
-    * HEAD through the manifest and time-travels back to version 1; the
-    * oracle recomputes both snapshots arithmetically from `documents`.
-    * A green row proves: snapshot isolation (orphan/staged files never
-    * counted), idempotent merge, version pinning, and that compaction
-    * changed files but not one row of content. */
+  /** q177 — a keyed, insert-only transactional table on Delta (the
+    * reference's gold loads are `ON CONFLICT DO NOTHING` inserts,
+    * loader_NeonDB.py:364-371): documents land as Delta version 0, the
+    * SAME batch re-sends through an insert-only keyed merge (a no-op
+    * that mints no version — checked), a disjoint second batch lands
+    * through the same merge as version 1, and the table compacts
+    * (version 2). Output reads the HEAD and time-travels back to
+    * version 0; the oracle recomputes both snapshots arithmetically
+    * from `documents`. A green row proves: idempotent keyed insert,
+    * version pinning, and that compaction changed files but not one
+    * row of content. */
   val q177TxTable = GQuery(
     "q177_tx_table",
     (s, d) => {
       import s.implicits._
+      import graft.io.{DeltaRead, DeltaWrite}
       val t = graft.io.Staging.tempDir("graft_q177_")
       val docs = Tables.documents(s, d).select($"doc_id", $"n_chars")
-      graft.io.TxLog.appendNew(docs, t, Seq("doc_id"))
-      graft.io.TxLog.appendNew(docs, t, Seq("doc_id")) // idempotent re-run
-      graft.io.TxLog.appendNew(
-        docs.select(($"doc_id" + 500000L).as("doc_id"), $"n_chars"), t, Seq("doc_id"))
-      graft.io.TxLog.compact(s, t, targetBytes = Long.MaxValue)
-      val head = graft.io.TxLog.read(s, t)
+      val insertNew = Seq(DeltaWrite.MergeInsertWhen(None,
+        Seq("doc_id" -> $"doc_id", "n_chars" -> $"n_chars")))
+      val v0 = DeltaWrite.append(docs, t)
+      val rerun = DeltaWrite.mergeAdvanced(s, t, docs, Seq("doc_id"), notMatched = insertNew)
+      require(rerun == v0, s"q177: re-sent batch minted version $rerun over $v0")
+      DeltaWrite.mergeAdvanced(s, t,
+        docs.select(($"doc_id" + 500000L).as("doc_id"), $"n_chars"), Seq("doc_id"),
+        notMatched = insertNew)
+      DeltaWrite.compact(s, t, targetBytes = Long.MaxValue)
+      val head = DeltaRead.read(s, t)
         .agg(count(lit(1)).as("head_rows"), sum($"doc_id").as("head_id_sum"))
-      val v1 = graft.io.TxLog.readVersion(s, t, 1)
+      val first = DeltaRead.readVersion(s, t, v0)
         .agg(count(lit(1)).as("v1_rows"), sum($"doc_id").as("v1_id_sum"))
-      head.crossJoin(v1)
+      head.crossJoin(first)
     },
     Some("""SELECT CAST(2 * count(*) AS BIGINT) AS head_rows,
            |  CAST(2 * sum(doc_id) + 500000 * count(*) AS BIGINT) AS head_id_sum,
@@ -666,40 +672,6 @@ object DatalakeQueries {
            |  coalesce(CAST(sum(length(text)) FILTER (WHERE doc_id % 2 = 0) AS BIGINT), 0)
            |    AS v0_chars
            |FROM documents GROUP BY lang ORDER BY lang""".stripMargin))
-
-  /** q184 — zero-copy TxLog→Delta migration ([[graft.io.DeltaBridge]]):
-    * a three-version TxLog history (append, disjoint append, compact)
-    * exports into a fresh Delta table by hard-linking data files and
-    * transcribing manifests into protocol commits — no data rewrite.
-    * Output reads the exported table's HEAD through [[graft.io.DeltaRead]]
-    * and time-travels to Delta v0 (= tx v1); the oracle recomputes both
-    * snapshots arithmetically from `documents`. A green row proves the
-    * diff-based transcription (adds, removes-from-compaction) preserves
-    * every version's exact content across the format boundary. */
-  val q184TxToDelta = GQuery(
-    "q184_tx_to_delta",
-    (s, d) => {
-      import s.implicits._
-      val t = graft.io.Staging.tempDir("graft_q184_")
-      val dl = graft.io.Staging.tempDir("graft_q184d_")
-      new java.io.File(dl).delete() // export wants a fresh path
-      val docs = Tables.documents(s, d).select($"doc_id", $"n_chars")
-      graft.io.TxLog.appendNew(docs, t, Seq("doc_id"))
-      graft.io.TxLog.appendNew(
-        docs.select(($"doc_id" + 500000L).as("doc_id"), $"n_chars"), t, Seq("doc_id"))
-      graft.io.TxLog.compact(s, t, targetBytes = Long.MaxValue)
-      graft.io.DeltaBridge.exportTxLog(s, t, dl)
-      val head = graft.io.DeltaRead.read(s, dl)
-        .agg(count(lit(1)).as("head_rows"), sum($"doc_id").as("head_id_sum"))
-      val v0 = graft.io.DeltaRead.readVersion(s, dl, 0)
-        .agg(count(lit(1)).as("v0_rows"), sum($"doc_id").as("v0_id_sum"))
-      head.crossJoin(v0)
-    },
-    Some("""SELECT CAST(2 * count(*) AS BIGINT) AS head_rows,
-           |  CAST(2 * sum(doc_id) + 500000 * count(*) AS BIGINT) AS head_id_sum,
-           |  count(*) AS v0_rows,
-           |  CAST(sum(doc_id) AS BIGINT) AS v0_id_sum
-           |FROM documents""".stripMargin))
 
   /** q194 — incremental ingest through the Delta change feed
     * ([[graft.io.DeltaRead.changesBetween]]), append-side semantics:
@@ -2552,7 +2524,7 @@ object DatalakeQueries {
     q133KAnonymity, q134GdprErasure, q147CompactionPlan,
     q148ZorderLayout, q149ColumnStats, q160PruningSim,
     q163OrcRoundtrip, q164PartitionPruning, q166CorruptTolerance,
-    q177TxTable, q179DeltaRead, q180DeltaRoundtrip, q184TxToDelta,
+    q177TxTable, q179DeltaRead, q180DeltaRoundtrip,
     q194DeltaChangefeed, q196CdfFold, q197MergeUpsert,
     q198DvErasure, q199CdfMirror, q200Restore, q202TableFeatures,
     q203CdfWrite, q206CdfReadStream, q207RowTracking, q208TypeWidening,

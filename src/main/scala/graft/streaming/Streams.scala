@@ -336,23 +336,6 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** [[startGoldAppend]] through the TRANSACTIONAL table format: each
-    * micro-batch commits via TxLog's manifest protocol, so replayed
-    * batches (the at-least-once window) are no-ops AND a concurrent
-    * maintenance job (compaction, another loader) can no longer tear a
-    * reader — snapshot isolation extends the merge sink's table-level
-    * exactly-once to multi-writer safety. */
-  def startGoldAppendTx(spark: SparkSession, dir: String, goldTable: String,
-      keyCols: Seq[String]): StreamingQuery =
-    readEventStream(spark, dir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.io.TxLog.appendNew(batch.toDF(), goldTable, keyCols)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** One banded document on the LSH wire: 8-byte bucket key, doc id,
     * full minhash signature (numHashes longs). */
   case class BandedDoc(band_key: Long, doc_id: Long, sig: Seq[Long])

@@ -724,45 +724,6 @@ class DeltaWriteSpec extends SparkTestBase {
     } finally cleanup(t)
   }
 
-  test("DeltaBridge: TxLog history exports zero-copy with every version replayable") {
-    import graft.io.{DeltaBridge, TxLog}
-    val tx = newTable(); val dl = Files.createTempDirectory("deltabridge").toString
-    try {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dl))
-      val mk = (lo: Int, hi: Int) => (lo to hi).map(i => (i.toLong, s"r$i")).toDF("id", "txt")
-      TxLog.appendNew(mk(1, 10), tx, Seq("id"))   // tx v1
-      TxLog.appendNew(mk(11, 25), tx, Seq("id"))  // tx v2
-      TxLog.compact(spark, tx)                    // tx v3: remove+add rewrite
-      TxLog.appendNew(mk(26, 30), tx, Seq("id"))  // tx v4
-      val nCommits = DeltaBridge.exportTxLog(spark, tx, dl)
-      assert(nCommits == 4)
-      // every TxLog version is visible as the corresponding Delta version
-      (1L to 4L).foreach { v =>
-        val expect = TxLog.readVersion(spark, tx, v)
-          .agg(count(lit(1)), sum($"id")).collect()(0)
-        val got = DeltaRead.readVersion(spark, dl, v - 1)
-          .agg(count(lit(1)), sum($"id")).collect()(0)
-        assert(got == expect, s"tx v$v != delta v${v - 1}")
-      }
-      // zero-copy: every delta data file is a hard link (same inode ⇒
-      // same fileKey) to the txlog original
-      val deltaFiles = DeltaRead.snapshot(spark, dl).files.map(_.path)
-      deltaFiles.foreach { f =>
-        val a = Files.readAttributes(Paths.get(dl, f), classOf[java.nio.file.attribute.BasicFileAttributes])
-        val b = Files.readAttributes(Paths.get(tx, f), classOf[java.nio.file.attribute.BasicFileAttributes])
-        assert(a.fileKey() == b.fileKey(), s"$f was copied, not linked")
-      }
-      // checkpoint written: read resolves after deleting the JSON prefix
-      assert(Files.exists(Paths.get(dl, "_delta_log", "_last_checkpoint")))
-      (0L to 2L).foreach(v => Files.delete(Paths.get(dl, "_delta_log", f"$v%020d.json")))
-      DeltaRead.clearSnapshotCache() // resolve cold: the checkpoint path, not a cached state
-      assert(DeltaRead.read(spark, dl).count() == 30)
-      // a second export into the same target must refuse
-      val e = intercept[IllegalArgumentException](DeltaBridge.exportTxLog(spark, tx, dl))
-      assert(e.getMessage.contains("already a Delta table"))
-    } finally { cleanup(tx); cleanup(dl) }
-  }
-
   test("vacuum retention is measured from the REMOVE commit, not file mtime") {
     val t = newTable()
     try {
@@ -782,31 +743,6 @@ class DeltaWriteSpec extends SparkTestBase {
       // quiesced (retention 0) reclaim still works
       assert(DeltaWrite.vacuum(spark, t, retentionMs = 0) >= 1)
     } finally cleanup(t)
-  }
-
-  test("DeltaBridge exports a vacuumed TxLog starting at the surviving version") {
-    import graft.io.{DeltaBridge, TxLog}
-    val tx = newTable(); val dl = Files.createTempDirectory("deltabridge_vac").toString
-    try {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dl))
-      val mk = (lo: Int, hi: Int) => (lo to hi).map(i => (i.toLong, s"r$i")).toDF("id", "txt")
-      TxLog.appendNew(mk(1, 10), tx, Seq("id"))   // tx v1
-      TxLog.appendNew(mk(11, 20), tx, Seq("id"))  // tx v2
-      TxLog.appendNew(mk(21, 30), tx, Seq("id"))  // tx v3
-      // age everything so the retention window does not protect it,
-      // then vacuum down to the latest 2 versions (v1's manifest dies)
-      val old = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 24L * 3600 * 1000)
-      val walk = Files.walk(Paths.get(tx))
-      try walk.iterator().asScala.filter(Files.isRegularFile(_))
-        .foreach(p => Files.setLastModifiedTime(p, old))
-      finally walk.close()
-      TxLog.vacuum(tx, keepVersions = 2, retentionMs = 0)
-      val nCommits = DeltaBridge.exportTxLog(spark, tx, dl)
-      assert(nCommits == 2, s"expected the 2 surviving versions, got $nCommits")
-      assert(DeltaRead.read(spark, dl).count() == 30)
-      assert(DeltaRead.readVersion(spark, dl, 0).count() == 20) // tx v2
-    } finally { cleanup(tx); cleanup(dl) }
   }
 
   test("writer refuses tables declaring writer features or properties it does not honor") {

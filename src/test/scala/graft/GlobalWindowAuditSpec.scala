@@ -67,11 +67,12 @@ class GlobalWindowAuditSpec extends SparkTestBase {
     // carried by the three synthetic probes below instead.
   }
 
-  test("the vocab window inside the dense set-similarity path is seen when audited pre-checkpoint") {
+  test("walker probe: a window over a distinct aggregate is seen as benign") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // rebuild the vocab-index shape denseBands uses, sans checkpoint:
-    // the walker must classify it benign (aggregate-over-generator)
+    // synthetic non-vacuity probe for the walker: a global row_number
+    // over a distinct token vocabulary (aggregate-over-generator) must
+    // be SEEN — exactly one window — and classified benign
     val toks = Tables.documents(spark, sf)
       .select($"doc_id", array_distinct(graft.functions.TextAnalysis.tokens($"text")).as("t"))
       .where(size($"t") > 0)

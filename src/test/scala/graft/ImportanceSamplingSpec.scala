@@ -63,6 +63,41 @@ class ImportanceSamplingSpec extends AnyFunSuite {
       s"target-drawn doc ${w(100001L)} must outweigh raw-drawn doc ${w(100002L)}")
   }
 
+  test("doc_id -> source is functional on the corpus callers' feature frame (sf0.01)") {
+    // q191 and q204 both weight ImportanceSampling.features(documents, 512)
+    val feats = ImportanceSampling.features(
+      Tables.documents(spark, "/root/testdata/sf0.01"), 512)
+    val multi = feats.select($"doc_id", $"source").distinct()
+      .groupBy($"doc_id").count().where($"count" > 1)
+      .select($"doc_id").as[Long].take(5)
+    assert(multi.isEmpty,
+      s"doc_ids under more than one source: ${multi.mkString(",")}")
+  }
+
+  test("a doc_id under two sources yields one weight row per source") {
+    val (textA, textB) = docs.where(!isTarget).orderBy($"n_chars".desc)
+      .select($"text").as[String].take(2) match { case Array(a, b) => (a, b) }
+    // 900001 breaks the dependency; 900002/900003 are single-source
+    // controls carrying the same two texts
+    val planted = Seq(
+      (900001L, textA, "xx", "srcA", textA.length.toLong),
+      (900001L, textB, "xx", "srcB", textB.length.toLong),
+      (900002L, textA, "xx", "srcA", textA.length.toLong),
+      (900003L, textB, "xx", "srcB", textB.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val feats = ImportanceSampling.features(docs.unionByName(planted), B)
+    val ratios = ImportanceSampling.logRatios(feats, isTarget, B)
+    val w = ImportanceSampling.logWeights(feats, isTarget, ratios)
+      .where($"doc_id" >= 900001L)
+      .select($"doc_id", $"source", $"logw").as[(Long, String, Double)].collect()
+    val split = w.filter(_._1 == 900001L).map(r => r._2 -> r._3).toMap
+    assert(split.keySet == Set("srcA", "srcB"),
+      s"expected one row per source for the split doc, got ${w.mkString(",")}")
+    val control = w.filter(_._1 != 900001L).map(r => r._2 -> r._3).toMap
+    assert(split == control,
+      "each per-source row must weight only that source's features")
+  }
+
   test("Gumbel-top-k selection is rerun-deterministic and respects k") {
     val feats = ImportanceSampling.features(docs, B)
     val ratios = ImportanceSampling.logRatios(feats, isTarget, B)

@@ -166,19 +166,6 @@ class IoCleanerSpec extends SparkTestBase {
     assert(r("""["already", "fine"]""") == """["already", "fine"]""")
   }
 
-  test("compact: many small files become few, data and schema survive the swap") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").resolve("t").toString
-    val df = Tables.orders(spark, sf).limit(2000)
-    df.repartition(20).write.parquet(dir)
-    val before = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(before == 20)
-    val after = graft.io.Sinks.compact(spark, dir, targetBytes = 1L << 30)
-    assert(after == 1, s"expected 1 compacted file, got $after")
-    val back = spark.read.parquet(dir)
-    assert(back.schema == df.schema)
-    assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
-  }
-
   test("z-ordered write: per-file ranges shrink on BOTH clustered columns") {
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder").resolve("t").toString
     val df = Tables.orders(spark, sf).select($"o_custkey", $"o_totalprice")

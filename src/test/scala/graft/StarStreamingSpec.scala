@@ -364,31 +364,6 @@ class StarStreamingSpec extends SparkTestBase {
       "replayed micro-batches must be a no-op on the gold table")
   }
 
-  test("foreachBatch gold maintenance through TxLog: snapshot-read gold == batch, replay no-op") {
-    import org.apache.spark.sql.functions._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_goldtx_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      srcDir.resolve("events.parquet"))
-    val table = java.nio.file.Files.createTempDirectory("graft_goldtx_tbl").toString + "/gold"
-
-    Streams.startGoldAppendTx(spark, srcDir.toString, table, Seq("event_id"))
-      .awaitTermination()
-    val batch = Tables.events(spark, sf)
-    val gold = graft.io.TxLog.read(spark, table)
-    assert(gold.count() == batch.count(), "tx stream-fed gold != batch row count")
-    val v = graft.io.TxLog.currentSnapshot(table).version
-
-    // fresh checkpoint replay: every micro-batch re-delivered — the
-    // manifest must not advance (idempotent at the COMMIT level, not
-    // just the row level)
-    Streams.startGoldAppendTx(spark, srcDir.toString, table, Seq("event_id"))
-      .awaitTermination()
-    assert(graft.io.TxLog.currentSnapshot(table).version == v,
-      "replayed micro-batches must not mint new manifest versions")
-    assert(graft.io.TxLog.read(spark, table).count() == batch.count())
-  }
-
   test("streaming LSH near-dup: cross-batch copy flagged on arrival; pairs == batch twin; cap goes dormant") {
     import org.apache.spark.sql.types._
     implicit val s: org.apache.spark.sql.SparkSession = spark

@@ -2,7 +2,7 @@
 # Build the jar once, then run graft.Verify directly (faster than sbt run).
 # Usage: tools/run_verify.sh [sfDir] [outDir] [mainClass]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 MAIN=${3:-graft.Verify}
