@@ -11,9 +11,7 @@ import graft.queries.Registry
 object Bench {
   /** One noop-format-write timed run of a plan: evaluates every output
     * column (a count() lets Catalyst prune aggregate arithmetic away),
-    * discards the rows, propagates whatever the plan throws. Shared by
-    * the dev timing tools (TimeQ, ProfileText) so the methodology
-    * cannot drift. */
+    * discards the rows, propagates whatever the plan throws. */
   def timeNoop(df: org.apache.spark.sql.DataFrame): Double = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()

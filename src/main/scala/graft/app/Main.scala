@@ -52,7 +52,7 @@ object Main {
     // identical (distinct paths, FIFO scheduling, and the shared lazy
     // dims are synchronized in LazyStar). Validation still runs AFTER
     // the gold barrier — it audits the warehouse as written.
-    // 6 concurrent jobs, measured over {4, 6, 8} at sf0.1 (TimeMain,
+    // 6 concurrent jobs, measured over {4, 6, 8} at sf0.1 (Main.run,
     // warm: 7.9 / 6.3 / 7.0 s): there are 11 independent loads, and 6
     // in flight keeps the task slots fed through every load's straggler
     // tail without the scheduler thrash 8 showed. Env-overridable for

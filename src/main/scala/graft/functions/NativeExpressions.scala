@@ -819,7 +819,6 @@ case class AdcDistanceExpr(left: Expression, right: Expression, codesPerSub: Int
 object Natives {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
-  def normalizeNumeric(c: Column): Column = toCol(NormalizeNumericExpr(toExpr(c)))
   def repairJson(c: Column): Column = toCol(RepairJsonExpr(toExpr(c)))
   def cosine(a: Column, b: Column): Column =
     toCol(CosineSimilarityExpr(toExpr(a), toExpr(b)))

@@ -40,18 +40,6 @@ object TextAnalysis {
       size(t).cast(DoubleType)
   }
 
-  /** Punctuation density: punctuation chars / total chars. */
-  def punctRatio(c: Column): Column =
-    length(regexp_replace(c, "[^.,;:!?]", "")).cast(DoubleType) /
-      length(c).cast(DoubleType)
-
-  /** Mean token length (chars). */
-  def avgTokenLen(c: Column): Column = {
-    val t = tokens(c)
-    aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast(DoubleType) /
-      size(t).cast(DoubleType)
-  }
-
   /** Composite quality score in [0,1]-ish: favors diverse, stopword-
     * bearing, moderately long documents. Deliberately simple — the
     * point is the *shape* (pure column math → scan-side, pushdown-safe). */

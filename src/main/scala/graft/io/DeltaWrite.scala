@@ -441,19 +441,22 @@ object DeltaWrite {
     * and deletion vectors have full read+write paths, and
     * changeDataFeed emits `_change_data` cdc files on every
     * row-changing commit that add/remove actions alone cannot
-    * represent (see `cdcEnabled` call sites); row tracking, identity
-    * columns, in-commit timestamps, type widening, variant/shredding,
-    * clustering, collations, column defaults and checkpointProtection
-    * each carry their obligation for real at their call sites (listed
-    * inline below). Any feature NOT in this set would require
-    * semantics this writer does not implement, so committing to such
-    * a table is refused — the protocol forbids a writer from touching
-    * a table whose writer features it does not support (the one named
-    * refusal is icebergCompat; see COVERAGE.md). */
+    * represent (see `cdcEnabled` call sites); row tracking, in-commit
+    * timestamps, type widening, variant/shredding, clustering,
+    * collations, column defaults and checkpointProtection each carry
+    * their obligation for real at their call sites (listed inline
+    * below). Any feature NOT in this set would require semantics this
+    * writer does not implement, so committing to such a table is
+    * refused — the protocol forbids a writer from touching a table
+    * whose writer features it does not support (icebergCompat among
+    * them; see COVERAGE.md). Identity columns are such a feature too:
+    * this writer never allocates identity values, so
+    * [[validateWriterSupport]] refuses identity tables by name, in
+    * every protocol form. */
   private val SupportedWriterFeatures =
     Set("appendOnly", "invariants", "columnMapping", "deletionVectors",
       "checkConstraints", "generatedColumns", "changeDataFeed",
-      "identityColumns", "domainMetadata", "rowTracking",
+      "domainMetadata", "rowTracking",
       "inCommitTimestamp", "vacuumProtocolCheck", "timestampNtz",
       // variantShredding: writing shredded files is a capability this
       // writer has (appendShredded — Spark's shredded parquet writer),
@@ -1049,109 +1052,6 @@ object DeltaWrite {
   private val GenKey = "delta.generationExpression"
   private val InvKey = "delta.invariants"
 
-  /** IDENTITY COLUMN field-metadata keys (PROTOCOL.md "Identity
-    * Columns"): `start`/`step` define the sequence,
-    * `highWaterMark` records the furthest value ever allocated (in
-    * step direction), `allowExplicitInsert` = GENERATED BY DEFAULT
-    * (true) vs GENERATED ALWAYS (false). */
-  private[io] val IdStartKey = "delta.identity.start"
-  private[io] val IdStepKey = "delta.identity.step"
-  private[io] val IdHwmKey = "delta.identity.highWaterMark"
-  private[io] val IdAllowKey = "delta.identity.allowExplicitInsert"
-
-  /** Uphold IDENTITY COLUMNS on an incoming batch — the writer
-    * obligation behind legacy minWriterVersion 6 / the
-    * `identityColumns` feature: a batch that OMITS an identity column
-    * gets fresh values past the recorded high-water mark (one
-    * contiguous per-commit range, allocated by a zipWithIndex pass —
-    * the one genuinely imperative per-row step, so the one RDD hop;
-    * contiguity isn't required by the protocol but costs nothing
-    * here and keeps reruns reproducible); a batch that PROVIDES it is
-    * refused under GENERATED ALWAYS and otherwise advances the mark
-    * past the provided extreme. Returns the (possibly augmented)
-    * batch plus, when any mark moved, the schema whose field metadata
-    * carries the new marks — the caller must commit that schema in
-    * the same metaData action, or a foreign writer would re-allocate
-    * the same range. */
-  private def allocateIdentity(df0: DataFrame, schema: StructType,
-      table: String): (DataFrame, Option[StructType]) = {
-    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
-    val idFields = schema.fields.filter(_.metadata.contains(IdStartKey))
-    if (idFields.isEmpty) return (df0, None)
-    var df = df0
-    var changed = false
-    val newHwms = scala.collection.mutable.HashMap.empty[String, Long]
-    idFields.foreach { f =>
-      val start = f.metadata.getLong(IdStartKey)
-      val step = f.metadata.getLong(IdStepKey)
-      require(step != 0, s"$table: identity column '${f.name}' has step 0")
-      val hwm: Option[Long] =
-        if (f.metadata.contains(IdHwmKey)) Some(f.metadata.getLong(IdHwmKey)) else None
-      if (df.columns.contains(f.name)) {
-        val allow = f.metadata.contains(IdAllowKey) && f.metadata.getBoolean(IdAllowKey)
-        if (!allow) throw new UnsupportedOperationException(
-          s"$table: identity column '${f.name}' is GENERATED ALWAYS — " +
-            "explicit values are refused; omit the column and let the " +
-            "writer allocate")
-        val agg = df.agg(
-          (if (step > 0) fmax(col(f.name)) else fmin(col(f.name))).cast("long"))
-          .collect()(0)
-        if (!agg.isNullAt(0)) {
-          val ext = agg.getLong(0)
-          val next = hwm match {
-            case Some(h) => if (step > 0) math.max(h, ext) else math.min(h, ext)
-            case None => ext
-          }
-          if (!hwm.contains(next)) { newHwms(f.name) = next; changed = true }
-        }
-      } else {
-        val base = hwm.getOrElse(start - step)
-        val n = df.count()
-        val spark = df.sparkSession
-        val withIdSchema = StructType(df.schema.fields :+
-          StructField(f.name, LongType, nullable = false))
-        val rdd = df.rdd.zipWithIndex().map { case (row, i) =>
-          Row.fromSeq(row.toSeq :+ (base + step * (i + 1)))
-        }
-        df = spark.createDataFrame(rdd, withIdSchema)
-        if (n > 0) { newHwms(f.name) = base + step * n; changed = true }
-      }
-    }
-    if (!changed) (df, None)
-    else {
-      val updated = StructType(schema.fields.map { f =>
-        newHwms.get(f.name) match {
-          case Some(h) => f.copy(metadata = new MetadataBuilder()
-            .withMetadata(f.metadata).putLong(IdHwmKey, h).build())
-          case None => f
-        }
-      })
-      (df, Some(updated))
-    }
-  }
-
-  /** Create `table` at version 0 with a fresh IDENTITY column `name`
-    * (GENERATED ALWAYS unless `allowExplicitInsert`): `df` must NOT
-    * contain the column — the writer allocates `start, start+step, …`
-    * and records the high-water mark in the committed field metadata,
-    * so any spec-compliant writer (this one included) continues the
-    * sequence without overlap. Protocol lands at legacy writer
-    * version 6, the identity floor. */
-  def createWithIdentity(df: DataFrame, table: String, name: String,
-      start: Long, step: Long = 1L, allowExplicitInsert: Boolean = false,
-      partitionBy: Seq[String] = Nil): Long = {
-    require(step != 0, "createWithIdentity: step must be non-zero")
-    require(!df.columns.contains(name),
-      s"createWithIdentity: df already has a column '$name' — identity " +
-        "values are writer-allocated")
-    require(!tableExists(table), s"createWithIdentity: $table already exists")
-    val meta = new MetadataBuilder()
-      .putLong(IdStartKey, start).putLong(IdStepKey, step)
-      .putBoolean(IdAllowKey, allowExplicitInsert).build()
-    commit(df, table, partitionBy, replaceExisting = false, txn = None,
-      identitySeed = Some(StructField(name, LongType, nullable = false, meta))).get
-  }
-
   /** Enforce legacy COLUMN INVARIANTS (`delta.invariants` field
     * metadata, writer feature `invariants` — the pre-constraints
     * mechanism foreign tables still carry): the recorded expression
@@ -1274,6 +1174,11 @@ object DeltaWrite {
     }
   }
 
+  /** Identity-column field-metadata keys (PROTOCOL.md "Identity
+    * Columns"); any one of them marks a field as an identity column. */
+  private val IdentityKeys = Seq("delta.identity.start", "delta.identity.step",
+    "delta.identity.highWaterMark", "delta.identity.allowExplicitInsert")
+
   /** Does any field at any nesting level of `dt` carry metadata `key`? */
   private def fieldMetaHas(dt: DataType, key: String): Boolean = dt match {
     case st: StructType => st.fields.exists(f =>
@@ -1294,6 +1199,21 @@ object DeltaWrite {
     * `delta.appendOnly` forbids. */
   private[io] def validateWriterSupport(table: String, s: DeltaRead.DeltaSnapshot,
       removesData: Boolean): Unit = {
+    // identity columns: this writer allocates no identity values, and
+    // any commit (even a delete or a compaction) would leave the
+    // high-water mark unmaintained for the writers that do — so an
+    // identity table refuses every commit, whichever form announces it
+    // (the feature, legacy writer version 6, or the field metadata).
+    // Reads are unaffected: an identity column is a plain long.
+    val idCols = s.schema.toSeq.flatMap(_.fields)
+      .filter(f => IdentityKeys.exists(f.metadata.contains)).map(_.name)
+    if (s.writerFeatures.contains("identityColumns") || s.minWriterVersion == 6 ||
+        idCols.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"$table has identity columns" +
+          (if (idCols.isEmpty) "" else idCols.mkString(" (", ", ", ")")) + " — " +
+          "this writer does not implement identity columns and refuses " +
+          "every commit to an identity table; read it with DeltaRead")
     if (s.minWriterVersion >= 7) {
       val unsupported = s.writerFeatures -- SupportedWriterFeatures
       if (unsupported.nonEmpty) throw new UnsupportedOperationException(
@@ -1302,13 +1222,9 @@ object DeltaWrite {
           "break the table's contract")
     }
     // legacy two-int protocols imply obligations without naming them;
-    // all are honored: column mapping (v5) via the mapping context,
-    // identity columns (v6, or delta.identity.* field metadata at any
-    // version) via allocateIdentity's per-commit range allocation +
-    // high-water-mark metaData update, everything at or below v4 per
-    // batch. Operations that CANNOT honor identity semantics (merge's
-    // SET-* explicit values, identity × column mapping) refuse at
-    // their own call sites.
+    // all below v6 are honored: column mapping (v5) via the mapping
+    // context, everything at or below v4 per batch. v6 (identity
+    // columns) is refused above.
     if (removesData &&
         s.configuration.get("delta.appendOnly").exists(_.equalsIgnoreCase("true")))
       throw new UnsupportedOperationException(
@@ -1888,16 +1804,11 @@ object DeltaWrite {
     * data-bearing creation would. Properties land as a second,
     * metaData-only commit via [[setProperties]] — reusing its protocol
     * bookkeeping (e.g. `delta.enableChangeDataFeed` advancing the
-    * writer version) instead of duplicating it here. Identity-bearing
-    * schemas are refused: [[createWithIdentity]] is the door that
-    * seeds the high-water mark correctly. */
+    * writer version) instead of duplicating it here. */
   def createEmpty(spark: SparkSession, table: String, schema: StructType,
       partitionBy: Seq[String] = Nil,
       properties: Map[String, String] = Map.empty): Long = {
     require(!tableExists(table), s"createEmpty: $table already exists")
-    require(!schema.fields.exists(_.metadata.contains(IdStartKey)),
-      s"createEmpty: $table schema carries identity columns — use " +
-        "createWithIdentity, which seeds the identity high-water mark")
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     val v0 = append(empty, table, partitionBy)
@@ -1969,7 +1880,6 @@ object DeltaWrite {
   private def commit(df0: DataFrame, table: String, partitionBy: Seq[String],
       replaceExisting: Boolean, txn: Option[(String, Long)],
       maxRetries: Int = 10, createMapping: Option[String] = None,
-      identitySeed: Option[StructField] = None,
       extraActions: Option[DeltaRead.DeltaSnapshot] => Seq[String] = _ => Nil,
       opName: Option[String] = None,
       layoutPinned: Boolean = false): Option[Long] = {
@@ -1995,33 +1905,8 @@ object DeltaWrite {
     // CURRENT_DEFAULT columns the batch omits fill from their default
     // expression (allowColumnDefaults) — BEFORE the schema-drift check
     // measures the batch against the committed schema
-    val df1 = preSnap.flatMap(_.schema)
+    val df = preSnap.flatMap(_.schema)
       .map(applyColumnDefaults(df1g, _)).getOrElse(df1g)
-    // identity columns allocate BEFORE staging (the values live in the
-    // data files). The authoritative identity schema is the committed
-    // one for existing tables, the seeded one at creation. Identity ×
-    // column mapping is refused — allocating under physical names is
-    // untested territory this writer will not silently enter.
-    val idAuthority: Option[StructType] = identitySeed match {
-      case Some(f) => Some(StructType(df1.schema.fields :+ f))
-      case None => preSnap.flatMap(_.schema)
-        .filter(_.fields.exists(_.metadata.contains(IdStartKey)))
-    }
-    val (df, idSchema): (DataFrame, Option[StructType]) = idAuthority match {
-      case None => (df1, None)
-      case Some(auth) =>
-        if (createMapping.isDefined ||
-            preSnap.exists(s => DeltaRead.ColumnMapping.active(s.columnMappingMode)))
-          throw new UnsupportedOperationException(
-            s"$table: identity columns combined with column mapping are " +
-              "not supported by this writer")
-        val (d, upd) = allocateIdentity(df1, auth, table)
-        // even an unchanged mark must keep the identity schema at
-        // creation (the metadata IS the feature)
-        (d, upd.orElse(identitySeed.map(_ => auth)))
-    }
-    val identityMeta: Option[(Option[String], StructType)] =
-      idSchema.map(ns => (preSnap.flatMap(_.schema).map(_.json), ns))
     // a caller omitting partitionBy on an EXISTING table inherits the
     // committed partitioning (appends never re-state it — Delta's own
     // contract); an explicit mismatch still fails as drift
@@ -2071,7 +1956,7 @@ object DeltaWrite {
     // any rejection below (drift, race exhaustion) must not leak the
     // staged files into the table root until a vacuum sweeps them
     try commitStaged(df, table, partBy, replaceExisting, txn, staged,
-      maxRetries, mapCtx, createMapping, identityMeta, extraActions, opName)
+      maxRetries, mapCtx, createMapping, extraActions, opName)
     catch { case e: Throwable => dropStaged(table, staged); throw e }
   }
 
@@ -2080,7 +1965,6 @@ object DeltaWrite {
       staged: Seq[Staged], maxRetries: Int,
       mapCtx: Option[WriteMapping.Ctx] = None,
       createMapping: Option[String] = None,
-      identityMeta: Option[(Option[String], StructType)] = None,
       extraActions: Option[DeltaRead.DeltaSnapshot] => Seq[String] = _ => Nil,
       opName: Option[String] = None): Option[Long] = {
     val spark = df.sparkSession
@@ -2132,24 +2016,10 @@ object DeltaWrite {
             s"append: schema drift on $table — committed ${committed.json}, " +
               s"incoming ${df.schema.json}")
         }
-        // identity values were allocated against a specific committed
-        // high-water mark; a table that moved underneath (concurrent
-        // identity append) could make the staged values collide — the
-        // CAS loop cannot fix that by retrying, so abort loudly
-        identityMeta.foreach { case (expected, _) =>
-          expected.foreach { ej =>
-            if (!s.schema.map(_.json).contains(ej))
-              throw new IllegalStateException(
-                s"DeltaWrite: $table identity metadata drifted while " +
-                  "committing — allocated values may collide; retry the write")
-          }
-        }
       }
       // a mapped commit's schemaString carries the mapping metadata and
-      // its configuration the mode + maxColumnId high-water mark; an
-      // identity commit's carries the advanced high-water marks
-      val schemaJson = identityMeta.map(_._2.json)
-        .orElse(mapCtx.map(_.schema.json)).getOrElse(df.schema.json)
+      // its configuration the mode + maxColumnId high-water mark
+      val schemaJson = mapCtx.map(_.schema.json).getOrElse(df.schema.json)
       def mappedConf(base: Map[String, String]): Map[String, String] =
         mapCtx.map(ctx => base +
           (WriteMapping.ModeKey -> ctx.mode) +
@@ -2178,16 +2048,14 @@ object DeltaWrite {
       val header =
         if (!exists)
           Seq(commitInfoAction("WRITE", now),
-            // column mapping requires protocol (2, 5); identity
-            // columns writer version 6; generated columns writer
-            // version 4; a feature-gated type anywhere forces the
-            // (3, 7) feature form; plain tables stay at the (1, 2)
-            // feature floor every client reads
+            // column mapping requires protocol (2, 5); generated
+            // columns writer version 4; a feature-gated type anywhere
+            // forces the (3, 7) feature form; plain tables stay at the
+            // (1, 2) feature floor every client reads
             if ((typeFeatures ++ defaultsFeature).nonEmpty) {
               val wf = typeFeatures ++ defaultsFeature ++
                 Set("appendOnly", "invariants") ++
                 (if (createMapping.isDefined) Set("columnMapping") else Set.empty) ++
-                (if (identityMeta.isDefined) Set("identityColumns") else Set.empty) ++
                 (if (fieldMetaHas(df.schema, GenKey)) Set("generatedColumns")
                  else Set.empty)
               // collations is WRITER-only: a reader unaware of it
@@ -2199,7 +2067,6 @@ object DeltaWrite {
               protocolFeatureAction(rf, wf)
             }
             else if (createMapping.isDefined) protocolActionFor(2, 5)
-            else if (identityMeta.isDefined) protocolActionFor(1, 6)
             else if (fieldMetaHas(df.schema, GenKey)) protocolActionFor(1, 4)
             else protocolAction,
             metaDataAction(UUID.randomUUID().toString, schemaJson, partitionBy, now,
@@ -2221,15 +2088,7 @@ object DeltaWrite {
           Seq(metaDataAction(snap.flatMap(_.metaId).getOrElse(UUID.randomUUID().toString),
               schemaJson, partitionBy, now,
               mappedConf(snap.map(_.configuration).getOrElse(Map.empty))))
-        else Seq(commitInfoAction(opName.getOrElse("APPEND"), now)) ++
-          // an identity append must publish the advanced high-water
-          // mark in the SAME commit, or a spec-compliant foreign
-          // writer would re-allocate the same range
-          identityMeta.map { case (_, ns) =>
-            metaDataAction(snap.flatMap(_.metaId).getOrElse(UUID.randomUUID().toString),
-              ns.json, partitionBy, now,
-              snap.map(_.configuration).getOrElse(Map.empty))
-          }.toSeq
+        else Seq(commitInfoAction(opName.getOrElse("APPEND"), now))
       val removes =
         if (replaceExisting)
           snap.map(_.files.map(f => removeAction(f.path, now))).getOrElse(Nil)
@@ -2946,8 +2805,8 @@ object DeltaWrite {
   /** Idempotent bulk file ingestion (Delta's `COPY INTO` shape): load
     * every data file under `sourceDir` that has NOT been loaded by a
     * previous call, append the rows through the NORMAL commit path
-    * (schema-drift refusal, constraints, generated columns, identity —
-    * all write obligations apply), and advance a per-source ledger in
+    * (schema-drift refusal, constraints, generated columns — all write
+    * obligations apply), and advance a per-source ledger in
     * the SAME commit so re-runs are exactly-once at the table level.
     *
     * The ledger is O(1) at scale, not O(ingested files): a MTIME
@@ -3414,8 +3273,8 @@ object DeltaWrite {
     * `WHEN MATCHED [AND updateWhen] UPDATE SET *`, `WHEN MATCHED AND
     * deleteWhen DELETE`, `WHEN NOT MATCHED [AND insertWhen] INSERT *`.
     * Conditions are evaluated over the SOURCE row's columns (the CDC
-    * shape: a `_change_type` column decides each row's fate — see
-    * [[applyChanges]]); `deleteWhen` wins over update, a matched row
+    * shape: a source column decides each row's fate — see
+    * `IncrementalView.refresh`); `deleteWhen` wins over update, a matched row
     * whose source row satisfies neither is left untouched. A `None`
     * condition means "always" for update/insert, "never" for delete. */
   final case class MergeClauses(
@@ -3570,9 +3429,9 @@ object DeltaWrite {
     * are preserved through the rewrite; CDF-obligated tables record
     * exact update_preimage/update_postimage/delete/insert rows;
     * constraints, invariants and generated columns are validated on
-    * the staged batch; identity tables refuse. Duplicate source keys
-    * refuse when matched clauses exist (two source rows updating one
-    * target row is nondeterministic). A lost commit CAS re-plans from
+    * the staged batch. Duplicate source keys refuse when matched
+    * clauses exist (two source rows updating one target row is
+    * nondeterministic). A lost commit CAS re-plans from
     * scratch against the winner's snapshot. An optional `txn` (appId,
     * version) pair rides in the commit as a SetTransaction action; a
     * pair at or below the table's mark skips the merge (re-checked on
@@ -3682,13 +3541,6 @@ object DeltaWrite {
         s"mergeAdvanced: $table has no committed schema"))
       require(committed.fieldNames.forall(!_.startsWith(MergeSrcPrefix)),
         s"mergeAdvanced: table columns may not start with $MergeSrcPrefix")
-      // identity tables refuse MERGE: caller-chosen identity values
-      // would land without advancing the high-water mark — a quieter
-      // corruption than any refusal
-      if (committed.fields.exists(_.metadata.contains(IdStartKey)))
-        throw new UnsupportedOperationException(
-          s"mergeAdvanced: $table carries identity columns — use append " +
-            "(writer-allocated values) and deleteWhere instead")
       updateAssigns.values.flatten.map(_._1).foreach(n =>
         require(committed.fieldNames.exists(_.equalsIgnoreCase(n)),
           s"mergeAdvanced: SET names unknown column '$n'"))
@@ -3874,45 +3726,6 @@ object DeltaWrite {
       s"mergeAdvanced: lost $maxRetries commit races on $table")
   }
 
-  /** Apply one change-data-feed batch ([[DeltaRead.changesBetween]]
-    * output: table columns + `_change_type`) to a mirror table as a
-    * SINGLE merge commit — updates arrive as delete(old)+insert(new)
-    * pairs, which collapse per key into an upsert; keys with only a
-    * delete half fall through to `WHEN MATCHED DELETE`. `keys` must
-    * uniquely identify rows (the CDC primary-key contract). The
-    * one-commit alternative to [[graft.streaming.DeltaTail.mirror]]'s
-    * deleteIn+append pair when SetTransaction resume isn't needed. */
-  def applyChanges(spark: SparkSession, table: String, changes: DataFrame,
-      keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, max => fmax}
-    val ct = col(DeltaRead.ChangeTypeCol)
-    // a feed spanning several versions must resolve each key to its
-    // LATEST change before the halves split: a key inserted in v1 and
-    // deleted in v2 nets to a DELETE — naively anti-joining the delete
-    // half against all inserts would resurrect it as an upsert. Keep
-    // only each key's max-version rows (within one version a
-    // delete+insert pair is an update, which the clause split below
-    // already resolves insert-first).
-    val base =
-      if (changes.columns.contains(DeltaRead.CommitVersionCol)) {
-        val latest = changes
-          .groupBy(keys.map(col): _*)
-          .agg(fmax(col(DeltaRead.CommitVersionCol)).as("__graft_max_v"))
-        changes.join(latest, keys)
-          .where(col(DeltaRead.CommitVersionCol) === col("__graft_max_v"))
-          .drop("__graft_max_v", DeltaRead.CommitVersionCol)
-      } else changes
-    val ins = base.where(ct === "insert")
-    val delOnly = base.where(ct === "delete")
-      .join(ins.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .dropDuplicates(keys)
-    merge(spark, table, ins.unionByName(delOnly), keys,
-      clauses = MergeClauses(
-        updateWhen = Some(ct === "insert"),
-        deleteWhen = Some(ct === "delete"),
-        insertWhen = Some(ct === "insert")))
-  }
-
   /** Row-level UPDATE — SQL `UPDATE t SET c = expr, ... WHERE cond` as
     * a COPY-ON-WRITE rewrite of only the touched files, the merge
     * two-pass shape without a join: pass 1 scans with lineage and
@@ -3926,12 +3739,11 @@ object DeltaWrite {
     * adds the staged batch — cost O(touched), never O(table).
     *
     * `predicate` and assignment values must be deterministic (they are
-    * evaluated in both passes). Assignments naming identity columns are
-    * refused (caller-chosen values would bypass the high-water mark);
-    * generated columns are refused directly and validated indirectly —
-    * updating a generation-source column fails validation unless the
-    * generated column is recomputed consistently, which this writer
-    * does not do silently. Deletion vectors on touched files are
+    * evaluated in both passes). Generated columns are refused as
+    * assignment targets and validated indirectly — updating a
+    * generation-source column fails validation unless the generated
+    * column is recomputed consistently, which this writer does not do
+    * silently. Deletion vectors on touched files are
     * honored (masked rows neither update nor resurrect); row-tracking
     * tables preserve stable row ids through the rewrite; CDF-obligated
     * tables record exact `update_preimage`/`update_postimage` cdc rows.
@@ -3964,10 +3776,6 @@ object DeltaWrite {
         }.toMap
       assigns.keys.foreach { n =>
         val f = committed(n)
-        if (f.metadata.contains(IdStartKey))
-          throw new UnsupportedOperationException(
-            s"updateWhere: '$n' is an identity column of $table — " +
-              "caller-chosen values would bypass the high-water mark")
         if (f.metadata.contains(GenKey))
           throw new UnsupportedOperationException(
             s"updateWhere: '$n' is a generated column of $table — its " +
@@ -4067,11 +3875,10 @@ object DeltaWrite {
     * the commit removes the touched files and adds kept ∪ df. Files
     * with no matching row are untouched bytes. The incoming frame must
     * match the committed schema (this is a row-replacement, not the
-    * schema-evolution overwrite); identity tables refuse (inserted
-    * rows would bypass the high-water mark); CDF-obligated tables
-    * record exact delete/insert cdc rows. Returns the committed
-    * version. An empty predicate match with an empty `df` is a no-op
-    * (current version returned). */
+    * schema-evolution overwrite); CDF-obligated tables record exact
+    * delete/insert cdc rows. Returns the committed version. An empty
+    * predicate match with an empty `df` is a no-op (current version
+    * returned). */
   def replaceWhere(spark: SparkSession, table: String, df: DataFrame,
       predicate: org.apache.spark.sql.Column, maxRetries: Int = 10): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
@@ -4100,10 +3907,6 @@ object DeltaWrite {
       validateWriterSupport(table, snap, removesData = true)
       val committed = snap.schema.getOrElse(throw new IllegalStateException(
         s"replaceWhere: $table has no committed schema"))
-      if (committed.fields.exists(_.metadata.contains(IdStartKey)))
-        throw new UnsupportedOperationException(
-          s"replaceWhere: $table carries identity columns — use " +
-            "deleteWhere + append (writer-allocated values) instead")
       require(schemaMatches(committed, df.schema),
         s"replaceWhere: frame must match the committed schema — " +
           s"committed ${committed.json}, incoming ${df.schema.json}")

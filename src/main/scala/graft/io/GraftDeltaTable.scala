@@ -45,10 +45,6 @@ final class GraftDeltaTable private (val spark: SparkSession, val path: String) 
 
   def restoreToVersion(v: Long): Long = DeltaWrite.restore(spark, path, v)
 
-  def restoreToTimestamp(ts: String): Long =
-    DeltaWrite.restore(spark, path,
-      DeltaRead.versionAtTime(spark, path, DeltaRead.parseTimestampMillis(ts)))
-
   /** Metadata-only SHALLOW CLONE at `version` (default head). */
   def shallowCloneTo(target: String, version: Option[Long] = None,
       replace: Boolean = false): Long =
@@ -116,16 +112,9 @@ object GraftDeltaTable {
     forPath(spark, dir)
   }
 
-  /** `optimize()` verbs — bin-pack, or declare+re-cluster then pack. */
+  /** `optimize()` verbs — bin-pack the table, or one partition of it. */
   final class OptimizeBuilder private[io] (spark: SparkSession, path: String) {
     def executeCompaction(): Int = DeltaWrite.compact(spark, path)
-    def executeZOrderBy(cols: String*): Int = {
-      val cur = DeltaWrite.clusteringColumns(DeltaRead.snapshot(spark, path))
-      val same = cur.size == cols.size &&
-        cur.zip(cols).forall { case (a, b) => a.equalsIgnoreCase(b) }
-      if (!same) DeltaWrite.clusterBy(spark, path, cols)
-      DeltaWrite.compact(spark, path)
-    }
     /** Scope the pass to one partition (`col -> literal` conjunction). */
     def where(partitions: Map[String, String]): Int =
       DeltaWrite.compact(spark, path, partitions = partitions)

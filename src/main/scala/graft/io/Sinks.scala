@@ -110,33 +110,6 @@ object Sinks {
     }
   }
 
-  /** Z-order clustered parquet write (Delta `OPTIMIZE ZORDER BY`
-    * analog): one tiny min/max agg job, then range-partition + sort by
-    * the interleaved key and write `numFiles` files. Each file covers a
-    * compact block of the multi-dimensional space, so per-file (and
-    * per-row-group) min/max statistics prune reads on ANY clustered
-    * column — the layout lever for multi-predicate scans at 100 TB,
-    * where a single-column sort only skips on its leading column. */
-  def parquetZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-      numFiles: Int, bits: Int = 16): Unit = {
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax}
-    val aggs = zCols.flatMap(c => Seq(fmin(col(c).cast("double")), fmax(col(c).cast("double"))))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    // empty input or an all-null clustered column has no min/max: there
-    // is nothing to cluster by — write the data as-is rather than NPE
-    if (zCols.indices.exists(i => row.isNullAt(2 * i) || row.isNullAt(2 * i + 1))) {
-      df.repartition(numFiles).write.mode("overwrite").parquet(path)
-      return
-    }
-    val mins = zCols.indices.map(i => row.getDouble(2 * i))
-    val maxs = zCols.indices.map(i => row.getDouble(2 * i + 1))
-    df.withColumn("__z", zValue(zCols.map(col), mins, maxs, bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** S12: idempotent JDBC batch insert with conflict-skip. Batched
     * per-partition statements, `ON CONFLICT (keys) DO NOTHING` so
     * re-runs are idempotent like the reference loads. Requires a live

@@ -21,12 +21,6 @@ object Sampling {
   def hashBucket(key: Column, n: Int): Column =
     pmod(TextAnalysis.tokenHash60(key.cast("string")), lit(n.toLong))
 
-  /** Deterministic Bernoulli-style sample: keep keys whose bucket (out
-    * of `den`) falls below `num` — a num/den rate stable under reruns
-    * and appends (a row's membership never changes as data grows). */
-  def hashSample(key: Column, num: Int, den: Int = 100): Column =
-    hashBucket(key, den) < num
-
   /** Train/val/test-style split assignment: named cumulative bucket
     * ranges over a 10000-bucket space (0.01% granularity). Weights
     * need not sum to 1 — the remainder is null (excluded), which is

@@ -314,28 +314,6 @@ object Streams {
       .toDF()
   }
 
-  /** Stream → gold-table maintenance: each micro-batch lands in the
-    * gold parquet dir through the SAME idempotent merge the batch
-    * loads use (Sinks.parquetAppendNew: stage + PK anti-join append).
-    * foreachBatch is the streaming↔lakehouse bridge — the sink runs
-    * arbitrary batch writes per micro-batch, and because the merge is
-    * keyed, REPLAYED micro-batches (restart after a failure between
-    * sink-commit and checkpoint-commit — Structured Streaming's
-    * at-least-once window) insert nothing twice: end-to-end
-    * exactly-once lands at the table level without transactions.
-    * StarStreamingSpec proves stream-fed gold == batch recompute and
-    * that re-processing the same input is a no-op.
-    */
-  def startGoldAppend(spark: SparkSession, dir: String, goldPath: String,
-      keyCols: Seq[String]): StreamingQuery =
-    readEventStream(spark, dir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.io.Sinks.parquetAppendNew(batch.toDF(), goldPath, keyCols)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** One banded document on the LSH wire: 8-byte bucket key, doc id,
     * full minhash signature (numHashes longs). */
   case class BandedDoc(band_key: Long, doc_id: Long, sig: Seq[Long])
@@ -441,16 +419,17 @@ object Streams {
       .select(col("band_key"), col("id_a"), col("id_b"), col("est_sim"))
   }
 
-  /** [[startGoldAppend]] into a DELTA table with protocol-level
-    * exactly-once: each micro-batch commits through
-    * [[graft.io.DeltaWrite.appendOnce]] carrying `txn {appId, batchId}`
-    * — the SetTransaction mechanism real Delta streaming sinks use.
-    * Unlike the keyed-merge sinks above, idempotence here needs no key
-    * columns at all: a replayed batch (restart in the at-least-once
-    * window, or a rerun against a lost/blown checkpoint directory) is
-    * skipped because the TABLE already records (appId, batchId). Empty
-    * batches never mint a version. The resulting table is readable by
-    * any Delta client, txn marks survive checkpoint truncation. */
+  /** Stream → gold-table maintenance on a DELTA table, with
+    * protocol-level exactly-once: foreachBatch commits each micro-batch
+    * through [[graft.io.DeltaWrite.appendOnce]] carrying
+    * `txn {appId, batchId}` — the SetTransaction mechanism real Delta
+    * streaming sinks use. Idempotence needs no key columns: a replayed
+    * batch (restart in Structured Streaming's at-least-once window, or
+    * a rerun against a lost/blown checkpoint directory) is skipped
+    * because the TABLE already records (appId, batchId), so stream-fed
+    * gold equals the batch recompute (StarStreamingSpec). Empty batches
+    * never mint a version. The resulting table is readable by any Delta
+    * client, txn marks survive checkpoint truncation. */
   def startGoldAppendDelta(spark: SparkSession, dir: String, deltaTable: String,
       appId: String): StreamingQuery =
     readEventStream(spark, dir)

@@ -137,34 +137,6 @@ class DeltaFuzzSpec extends SparkTestBase {
     } finally cleanup(t)
   }
 
-  test("seeded fuzz on an identity table: ids stay unique and the mark only advances") {
-    val rnd = new scala.util.Random(20260816L)
-    val t = newTable()
-    try {
-      def batch(n: Int) = (0 until n).map(i => s"r${rnd.nextInt(100000)}").toDF("txt")
-      DeltaWrite.createWithIdentity(batch(30), t, "id", start = 10L, step = 3L)
-      var lastHwm = DeltaRead.snapshot(spark, t).schema.get("id")
-        .metadata.getLong("delta.identity.highWaterMark")
-      (1 to 10).foreach { _ =>
-        rnd.nextInt(4) match {
-          case 0 | 1 => DeltaWrite.append(batch(10 + rnd.nextInt(20)), t)
-          case 2 =>
-            val k = 2 + rnd.nextInt(4)
-            DeltaWrite.deleteWhere(spark, t, $"id" % k === 0)
-          case 3 => DeltaWrite.compact(spark, t, targetBytes = 1L << 22)
-        }
-        val s = DeltaRead.snapshot(spark, t)
-        val hwm = s.schema.get("id").metadata.getLong("delta.identity.highWaterMark")
-        assert(hwm >= lastHwm, s"high-water mark regressed: $lastHwm -> $hwm")
-        lastHwm = hwm
-        val ids = DeltaRead.read(spark, t).select($"id").as[Long].collect()
-        assert(ids.distinct.length == ids.length, "identity values collided")
-        assert(ids.forall(v => v >= 10L && (v - 10L) % 3L == 0L),
-          "identity values off the start/step lattice")
-      }
-    } finally cleanup(t)
-  }
-
   test("seeded fuzz on a row-tracking table: stable ids survive every op interleaving") {
     val rnd = new scala.util.Random(20260817L)
     val t = newTable()

@@ -9,8 +9,7 @@ import scala.jdk.CollectionConverters._
 /** Hardening of the Delta maintenance surface: protocol upgrades UNION
   * existing + legacy-implied feature lists (never overwrite them),
   * vacuum's retention window protects deletion vectors superseded
-  * inside it (time travel / restore stay whole), applyChanges resolves
-  * a multi-version feed to each key's latest change, and the CDC
+  * inside it (time travel / restore stay whole), and the CDC
   * mirror enforces its primary-key contract loudly instead of
   * silently over-deleting. */
 class DeltaMaintenanceSpec extends SparkTestBase {
@@ -133,31 +132,6 @@ class DeltaMaintenanceSpec extends SparkTestBase {
       val e = intercept[IllegalArgumentException](DeltaWrite.restore(spark, t, 1))
       assert(e.getMessage.contains("deletion vector"))
     } finally cleanup(t)
-  }
-
-  test("applyChanges nets a later delete over an earlier insert across versions") {
-    val src = newTable(); val dst = newTable()
-    try {
-      val base = (1 to 5).map(i => (i.toLong, s"v$i")).toDF("id", "txt")
-      DeltaWrite.append(base, src)                                          // v0
-      DeltaWrite.append(Seq((6L, "v6"), (7L, "v7")).toDF("id", "txt"), src) // v1
-      DeltaWrite.deleteWhere(spark, src, $"id".isin(1L, 6L))                // v2
-      DeltaWrite.append(base, dst) // mirror seeded at the v0 state
-      DeltaWrite.applyChanges(spark, dst,
-        DeltaRead.changesBetween(spark, src, 0L, 2L), Seq("id"))
-      val got = DeltaRead.read(spark, dst).select($"id").as[Long].collect().sorted
-      assert(got.sameElements(Array(2L, 3L, 4L, 5L, 7L)),
-        s"key 6 (inserted v1, deleted v2) must net to a delete: ${got.mkString(",")}")
-      // and the single-version shape (update pairs) still upserts
-      DeltaWrite.merge(spark, src,
-        Seq((2L, "v2x"), (8L, "v8")).toDF("id", "txt"), Seq("id"))          // v3
-      DeltaWrite.applyChanges(spark, dst,
-        DeltaRead.changesBetween(spark, src, 2L, 3L), Seq("id"))
-      val after = DeltaRead.read(spark, dst).orderBy($"id")
-        .as[(Long, String)].collect()
-      assert(after.toSeq == Seq((2L, "v2x"), (3L, "v3"), (4L, "v4"),
-        (5L, "v5"), (7L, "v7"), (8L, "v8")))
-    } finally { cleanup(src); cleanup(dst) }
   }
 
   test("mirror refuses a source version whose insert half duplicates a key") {

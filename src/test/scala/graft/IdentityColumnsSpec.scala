@@ -1,102 +1,73 @@
 package graft
 
-import graft.io.{DeltaRead, DeltaWrite}
+import graft.io.{DeltaRead, DeltaWrite, Staging}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Identity columns (PROTOCOL.md "Identity Columns", legacy writer
-  * version 6): creation allocates `start, start+step, …` and records
-  * the high-water mark in the committed field metadata; later appends
-  * omitting the column continue the sequence without overlap; a
-  * foreign-written mark is respected; GENERATED ALWAYS refuses
-  * explicit values while GENERATED BY DEFAULT accepts them and
-  * advances the mark; merge refuses (it cannot honor allocation). */
+/** Identity columns (PROTOCOL.md "Identity Columns") are a writer
+  * feature graft does not implement: it never allocates identity
+  * values, so every commit to an identity table is refused by name —
+  * whichever form announces the feature — while reads stay correct
+  * (an identity column is a plain long to a reader). The tables are
+  * foreign-shaped: a plain graft table whose only commit is
+  * hand-edited into each protocol form. */
 class IdentityColumnsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def newTable(): String =
-    Files.createTempDirectory("deltaid").toString
+  private val rows = (1 to 10).map(i => (i.toLong, s"v$i"))
 
-  private def cleanup(t: String): Unit =
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
-
-  test("creation allocates from start; appends continue past the recorded mark") {
-    val t = newTable()
-    try {
-      val a = (1 to 20).map(i => s"a$i").toDF("txt")
-      DeltaWrite.createWithIdentity(a, t, "id", start = 100L, step = 2L)
-      val s0 = DeltaRead.snapshot(spark, t)
-      assert(s0.minWriterVersion == 6, s"identity floor is writer v6, got ${s0.minWriterVersion}")
-      val f0 = s0.schema.get("id")
-      assert(f0.metadata.getLong("delta.identity.highWaterMark") == 100L + 2L * 19)
-      val got0 = DeltaRead.read(spark, t).select($"id").as[Long].collect().sorted
-      assert(got0.toSeq == (0 until 20).map(i => 100L + 2L * i))
-      // a second append OMITS the column — the writer continues
-      DeltaWrite.append((1 to 15).map(i => s"b$i").toDF("txt"), t)
-      val got1 = DeltaRead.read(spark, t).select($"id").as[Long].collect().sorted
-      assert(got1.length == 35 && got1.distinct.length == 35,
-        "two appends must never overlap identity ranges")
-      assert(got1.max == 100L + 2L * 34)
-      val s1 = DeltaRead.snapshot(spark, t)
-      assert(s1.schema.get("id").metadata.getLong("delta.identity.highWaterMark") ==
-        100L + 2L * 34)
-    } finally cleanup(t)
+  /** A one-commit table whose commit is rewritten by the `edits`
+    * (each `from` text must occur) into an identity table. */
+  private def identityTable(tag: String, edits: (String, String)*): String = {
+    val t = Staging.tempDir(tag)
+    DeltaWrite.append(rows.toDF("id", "txt").coalesce(1), t)
+    val p = Paths.get(t, "_delta_log", f"${0}%020d.json")
+    val lines = Files.readAllLines(p).asScala.toSeq
+    edits.foreach { case (from, _) =>
+      assert(lines.exists(_.contains(from)), s"commit lacks $from") }
+    Files.write(p, lines.map(l =>
+      edits.foldLeft(l) { case (acc, (from, to)) => acc.replace(from, to) }).asJava)
+    DeltaRead.clearSnapshotCache()
+    t
   }
 
-  test("a foreign-written high-water mark is respected") {
-    val t = newTable()
-    try {
-      DeltaWrite.createWithIdentity((1 to 5).map(i => s"a$i").toDF("txt"), t,
-        "id", start = 1L, step = 1L)
-      // a foreign writer advanced the mark far ahead: rewrite the last
-      // commit's metaData with hwm = 1000 (hand-edited, spec-shaped)
-      val v = DeltaRead.latestVersion(t)
-      val p = Paths.get(t, "_delta_log", f"$v%020d.json")
-      // schemaString is a JSON-encoded string INSIDE the metaData
-      // action, so the key appears with escaped quotes
-      val edited = Files.readAllLines(p).asScala.map(
-        _.replace("\\\"delta.identity.highWaterMark\\\":5",
-          "\\\"delta.identity.highWaterMark\\\":1000"))
-      Files.write(p, edited.asJava)
-      assert(DeltaRead.snapshot(spark, t).schema.get("id")
-        .metadata.getLong("delta.identity.highWaterMark") == 1000L)
-      DeltaWrite.append(Seq("x").toDF("txt"), t)
-      val ids = DeltaRead.read(spark, t).select($"id").as[Long].collect().sorted
-      assert(ids.max == 1001L, s"must allocate past the foreign mark: ${ids.mkString(",")}")
-    } finally cleanup(t)
-  }
+  // schemaString is a JSON-encoded string INSIDE the metaData action,
+  // so the field's keys appear with escaped quotes
+  private val plainId = """\"name\":\"id\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}"""
+  private val identityId = """\"name\":\"id\",\"type\":\"long\",\"nullable\":false,""" +
+    """\"metadata\":{\"delta.identity.start\":1,\"delta.identity.step\":1,""" +
+    """\"delta.identity.highWaterMark\":10,\"delta.identity.allowExplicitInsert\":false}"""
+  private val plainProtocol = """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
 
-  test("GENERATED ALWAYS refuses explicit values; BY DEFAULT accepts and advances the mark") {
-    val always = newTable(); val byDefault = newTable()
-    try {
-      DeltaWrite.createWithIdentity((1 to 3).map(i => s"a$i").toDF("txt"), always,
-        "id", start = 1L)
-      val e = intercept[UnsupportedOperationException](
-        DeltaWrite.append(Seq((99L, "x")).toDF("id", "txt"), always))
-      assert(e.getMessage.contains("GENERATED ALWAYS"))
-      DeltaWrite.createWithIdentity((1 to 3).map(i => s"a$i").toDF("txt"), byDefault,
-        "id", start = 1L, allowExplicitInsert = true)
-      DeltaWrite.append(Seq((50L, "x")).toDF("id", "txt"), byDefault)
-      assert(DeltaRead.snapshot(spark, byDefault).schema.get("id")
-        .metadata.getLong("delta.identity.highWaterMark") == 50L)
-      // the next generated batch starts past the explicit value
-      DeltaWrite.append(Seq("y").toDF("txt"), byDefault)
-      val ids = DeltaRead.read(spark, byDefault).select($"id").as[Long].collect()
-      assert(ids.contains(51L) && ids.distinct.length == ids.length)
-    } finally { cleanup(always); cleanup(byDefault) }
-  }
-
-  test("merge refuses identity tables; deleteWhere still works") {
-    val t = newTable()
-    try {
-      DeltaWrite.createWithIdentity((1 to 10).map(i => s"a$i").toDF("txt"), t,
-        "id", start = 1L)
-      val e = intercept[UnsupportedOperationException](
-        DeltaWrite.merge(spark, t, Seq((1L, "z")).toDF("id", "txt"), Seq("id")))
-      assert(e.getMessage.contains("identity"))
-      DeltaWrite.deleteWhere(spark, t, $"id" <= 3L)
-      assert(DeltaRead.read(spark, t).count() == 7)
-    } finally cleanup(t)
+  test("identity tables refuse every write by name; reads still return the rows") {
+    // legacy form: writer version 6 plus delta.identity.* field metadata
+    val legacy = identityTable("graft_id_legacy_",
+      plainProtocol -> """{"protocol":{"minReaderVersion":1,"minWriterVersion":6}}""",
+      plainId -> identityId)
+    // feature form: (3, 7) listing identityColumns, no field metadata —
+    // the feature alone obliges the writer
+    val feature = identityTable("graft_id_feature_",
+      plainProtocol -> ("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+        """"readerFeatures":[],"writerFeatures":["appendOnly","identityColumns","invariants"]}}"""))
+    for (t <- Seq(legacy, feature)) {
+      val s = DeltaRead.snapshot(spark, t)
+      assert(s.minWriterVersion == 6 || s.writerFeatures.contains("identityColumns"))
+      val writes: Seq[(String, () => Any)] = Seq(
+        // the batch omits the identity column, as an identity append would
+        "append" -> (() => DeltaWrite.append(Seq("x").toDF("txt"), t)),
+        "merge" -> (() => DeltaWrite.merge(spark, t, Seq((1L, "m")).toDF("id", "txt"), Seq("id"))),
+        "updateWhere" -> (() => DeltaWrite.updateWhere(spark, t, $"id" === 1L, Seq("txt" -> lit("u")))),
+        "replaceWhere" -> (() => DeltaWrite.replaceWhere(spark, t,
+          Seq((2L, "r")).toDF("id", "txt"), $"id" === 2L)),
+        "deleteWhere" -> (() => DeltaWrite.deleteWhere(spark, t, $"id" <= 3L)))
+      writes.foreach { case (op, w) =>
+        val e = intercept[UnsupportedOperationException](w())
+        assert(e.getMessage.contains("identity columns"), s"$op on $t: ${e.getMessage}")
+        assert(DeltaRead.latestVersion(t) == 0L, s"$op on $t minted a version")
+      }
+      val got = DeltaRead.read(spark, t).as[(Long, String)].collect().sortBy(_._1).toSeq
+      assert(got == rows, s"reads of $t must return the committed rows")
+    }
   }
 }

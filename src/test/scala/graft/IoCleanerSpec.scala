@@ -166,34 +166,6 @@ class IoCleanerSpec extends SparkTestBase {
     assert(r("""["already", "fine"]""") == """["already", "fine"]""")
   }
 
-  test("z-ordered write: per-file ranges shrink on BOTH clustered columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").resolve("t").toString
-    val df = Tables.orders(spark, sf).select($"o_custkey", $"o_totalprice")
-    graft.io.Sinks.parquetZOrdered(df, dir, Seq("o_custkey", "o_totalprice"), numFiles = 8)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    assert(files.length >= 4, s"expected multiple files, got ${files.length}")
-    def spanFraction(colName: String): Double = {
-      val g = df.agg(max(col(colName)).cast("double") - min(col(colName)).cast("double"))
-        .collect()(0).getDouble(0)
-      val per = files.map { f =>
-        val r = spark.read.parquet(f)
-          .agg(max(col(colName)).cast("double") - min(col(colName)).cast("double"))
-          .collect()(0).getDouble(0)
-        r / g
-      }
-      per.sum / per.length
-    }
-    // a random layout gives ~1.0 per file on both; a single-column sort
-    // gives ~1/numFiles on one and ~1.0 on the other; z-order shrinks both
-    val fCust = spanFraction("o_custkey")
-    val fPrice = spanFraction("o_totalprice")
-    assert(fCust < 0.75 && fPrice < 0.75, f"per-file spans $fCust%.2f / $fPrice%.2f")
-    // and the data round-trips
-    val back = spark.read.parquet(dir)
-    assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
-  }
-
   test("native expressions callable from SQL after registration") {
     val got = spark.sql(
       "SELECT normalize_numeric_native('1.234,56') AS a, repair_json_native(\"['x']\") AS b")

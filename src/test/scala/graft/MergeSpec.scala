@@ -269,23 +269,6 @@ class MergeSpec extends SparkTestBase {
     } finally cleanup(t)
   }
 
-  test("applyChanges replays a feed batch as one merge: fold(source changes) lands in the mirror") {
-    val src = newTable(); val dst = newTable()
-    try {
-      val base = (0 until 30).map(i => (i.toLong, s"v$i")).toDF("id", "txt")
-      DeltaWrite.append(base, src)                         // v0
-      DeltaWrite.append(base, dst)                         // mirror starts equal
-      DeltaWrite.deleteWhere(spark, src, $"id" % 5 === 0)  // v1
-      DeltaWrite.merge(spark, src,
-        Seq((1L, "upd"), (99L, "new")).toDF("id", "txt"), Seq("id")) // v2
-      val feed = DeltaRead.changesBetween(spark, src, 0L, 2L)
-      DeltaWrite.applyChanges(spark, dst, feed, Seq("id"))
-      val a = DeltaRead.read(spark, src).orderBy($"id").as[(Long, String)].collect().toSeq
-      val b = DeltaRead.read(spark, dst).orderBy($"id").as[(Long, String)].collect().toSeq
-      assert(a == b, "applyChanges(feed) must converge the mirror to the source")
-    } finally { cleanup(src); cleanup(dst) }
-  }
-
   test("the change feed decomposes a merge into delete(old) + insert(new)") {
     val t = newTable()
     try {

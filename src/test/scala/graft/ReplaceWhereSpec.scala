@@ -116,13 +116,6 @@ class ReplaceWhereSpec extends SparkTestBase {
       DeltaWrite.replaceWhere(spark, t,
         Seq(("x", 1L)).toDF("s", "id"), lit(true))
     }
-    val ti = Staging.tempDir("graft_rw6_")
-    DeltaWrite.createWithIdentity(spark.range(3).toDF("n"), ti, "rid",
-      start = 1L, step = 1L, allowExplicitInsert = false, partitionBy = Nil)
-    intercept[UnsupportedOperationException] {
-      DeltaWrite.replaceWhere(spark, ti,
-        DeltaRead.read(spark, ti).limit(0), lit(true))
-    }
   }
 }
 

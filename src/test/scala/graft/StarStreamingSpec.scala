@@ -1,11 +1,16 @@
 package graft
 
+import graft.io.Staging
 import graft.operators.{Multimodal, StarSchema, Validator}
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 class StarStreamingSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Scratch directory removed when the JVM exits. */
+  private def tempDir(tag: String): java.nio.file.Path =
+    java.nio.file.Paths.get(Staging.tempDir(tag))
 
   test("star schema: validation report is all-zero (uniqueness + no orphans)") {
     val star = StarSchema.build(spark, sf)
@@ -48,7 +53,7 @@ class StarStreamingSpec extends SparkTestBase {
   test("streaming tumbling counts == batch tumbling counts") {
     val batch = Streams.tumblingCounts(Tables.events(spark, sf))
     // stream source must be a directory: stage the events file into one
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -61,9 +66,9 @@ class StarStreamingSpec extends SparkTestBase {
   }
 
   test("watermark drops late data; append emits each finalized window once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_late")
+    val dir = tempDir("graft_late")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_late_tmp")
+      val tmp = tempDir("graft_late_tmp")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -94,7 +99,7 @@ class StarStreamingSpec extends SparkTestBase {
 
   test("sessionize: stream (mapGroupsWithState) == batch, via memory sink") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess")
+    val dir = tempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -108,9 +113,9 @@ class StarStreamingSpec extends SparkTestBase {
   }
 
   test("streaming dedup: duplicate payloads within the watermark are dropped across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup")
+    val dir = tempDir("graft_dedup")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_tmp")
+      val tmp = tempDir("graft_dedup_tmp")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -136,7 +141,7 @@ class StarStreamingSpec extends SparkTestBase {
   }
 
   test("streaming dedup == batch dedup on the kept fingerprint set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_eq")
+    val dir = tempDir("graft_dedup_eq")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -151,7 +156,7 @@ class StarStreamingSpec extends SparkTestBase {
   }
 
   test("stream-stream attribution join == batch range self-join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr")
+    val dir = tempDir("graft_attr")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -172,14 +177,14 @@ class StarStreamingSpec extends SparkTestBase {
   }
 
   test("stream-stream LEFT OUTER attribution: unmatched triggers flush after watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_outer")
+    val dir = tempDir("graft_attr_outer")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("a_events.parquet"))
     // a far-future flush batch: advances the watermark past every real
     // trigger + horizon so their unmatched state evicts and emits
     val flushNanos = 1748736000L * 1000000000L // 2025-06-01 UTC
-    val tmpF = java.nio.file.Files.createTempDirectory("graft_attr_flush")
+    val tmpF = tempDir("graft_attr_flush")
     // one flush row per PARITY: each side's watermark only advances on
     // rows that survive its own filter, and the global watermark is the
     // MIN of the two — a single-parity flush would strand the last
@@ -226,9 +231,9 @@ class StarStreamingSpec extends SparkTestBase {
     // and exercise cross-trigger state
     val raw = Tables.events(spark, sf).withColumn("__us", unix_micros($"ts"))
     val median = raw.selectExpr("percentile_approx(__us, 0.5D, 100000)").head.getLong(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2")
+    val dir = tempDir("graft_scd2")
     def stage(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_scd2_tmp")
+      val tmp = tempDir("graft_scd2_tmp")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -256,9 +261,9 @@ class StarStreamingSpec extends SparkTestBase {
     implicit val s = spark
     val raw = Tables.events(spark, sf).withColumn("__us", unix_micros($"ts"))
     val median = raw.selectExpr("percentile_approx(__us, 0.5D, 100000)").head.getLong(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma")
+    val dir = tempDir("graft_ewma")
     def stage(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ewma_tmp")
+      val tmp = tempDir("graft_ewma_tmp")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -335,44 +340,15 @@ class StarStreamingSpec extends SparkTestBase {
     assert(r(4) == ((512, 384, true, List())))
   }
 
-  test("foreachBatch gold maintenance: stream-fed gold == batch, replay is a no-op") {
-    import org.apache.spark.sql.functions._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_gold_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      srcDir.resolve("events.parquet"))
-    val goldPath = java.nio.file.Files.createTempDirectory("graft_gold_tbl").toString + "/gold"
-
-    val q = Streams.startGoldAppend(spark, srcDir.toString, goldPath, Seq("event_id"))
-    q.awaitTermination()
-
-    val gold = spark.read.parquet(goldPath)
-    val batch = Tables.events(spark, sf)
-    assert(gold.count() == batch.count(), "stream-fed gold != batch row count")
-    // tolerance, not ==: the merge reshuffles rows, and double sums
-    // accumulate in partition order (non-associative in the last ULPs)
-    val (gSum, bSum) = (gold.agg(sum(col("value"))).collect()(0).getDouble(0),
-      batch.agg(sum(col("value"))).collect()(0).getDouble(0))
-    assert(math.abs(gSum - bSum) <= 1e-6 * math.max(1.0, math.abs(bSum)),
-      s"gold sum $gSum != batch sum $bSum")
-
-    // replay the SAME input through a fresh query (fresh checkpoint =
-    // every micro-batch re-delivered): keyed merge must insert nothing
-    val q2 = Streams.startGoldAppend(spark, srcDir.toString, goldPath, Seq("event_id"))
-    q2.awaitTermination()
-    assert(spark.read.parquet(goldPath).count() == batch.count(),
-      "replayed micro-batches must be a no-op on the gold table")
-  }
-
   test("streaming LSH near-dup: cross-batch copy flagged on arrival; pairs == batch twin; cap goes dormant") {
     import org.apache.spark.sql.types._
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val textA = "the quick brown fox jumps over the lazy dog and keeps on running far away"
     val textB = "completely different content about distributed query engines and shuffle plans"
     val textC = "yet another unrelated document discussing parquet footers and column statistics"
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshstream")
+    val dir = tempDir("graft_lshstream")
     def writeBatch(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_tmp")
+      val tmp = tempDir("graft_lsh_tmp")
       rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -406,8 +382,8 @@ class StarStreamingSpec extends SparkTestBase {
 
     // hot-bucket dormancy: 5 identical docs, cap 2 — only the pre-cap
     // pair emits, the flood never produces quadratic output
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_lshflood")
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft_lshflood_tmp")
+    val dir2 = tempDir("graft_lshflood")
+    val tmp2 = tempDir("graft_lshflood_tmp")
     (1 to 5).map(i => (i.toLong, textA)).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(tmp2.toString)
     val p2 = new java.io.File(tmp2.toString).listFiles()
@@ -427,17 +403,23 @@ class StarStreamingSpec extends SparkTestBase {
 
   test("foreachBatch gold maintenance into DELTA: SetTransaction makes checkpoint-less replay a no-op") {
     import org.apache.spark.sql.functions._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_golddl_src")
+    val srcDir = tempDir("graft_golddl_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       srcDir.resolve("events.parquet"))
-    val table = java.nio.file.Files.createTempDirectory("graft_golddl_tbl").toString + "/gold"
+    val table = tempDir("graft_golddl_tbl").toString + "/gold"
 
     Streams.startGoldAppendDelta(spark, srcDir.toString, table, appId = "gold-loader")
       .awaitTermination()
     val batch = Tables.events(spark, sf)
     val gold = graft.io.DeltaRead.read(spark, table)
     assert(gold.count() == batch.count(), "delta stream-fed gold != batch row count")
+    // tolerance, not ==: double sums accumulate in partition order
+    // (non-associative in the last ULPs)
+    val (gSum, bSum) = (gold.agg(sum(col("value"))).collect()(0).getDouble(0),
+      batch.agg(sum(col("value"))).collect()(0).getDouble(0))
+    assert(math.abs(gSum - bSum) <= 1e-6 * math.max(1.0, math.abs(bSum)),
+      s"gold sum $gSum != batch sum $bSum")
     val v = graft.io.DeltaRead.latestVersion(table)
     assert(graft.io.DeltaWrite.lastTxnVersion(spark, table, "gold-loader").isDefined)
 

@@ -87,14 +87,5 @@ class UpdateWhereSpec extends SparkTestBase {
       DeltaWrite.updateWhere(spark, t, lit(true),
         Seq("id" -> lit(1L), "ID" -> lit(2L)))
     }
-    val ti = Staging.tempDir("graft_upd7_")
-    DeltaWrite.createWithIdentity(spark.range(3).toDF("n"), ti, "rid",
-      start = 1L, step = 1L, allowExplicitInsert = false, partitionBy = Nil)
-    intercept[UnsupportedOperationException] {
-      DeltaWrite.updateWhere(spark, ti, lit(true), Seq("rid" -> lit(99L)))
-    }
-    // non-identity columns of an identity table still update fine
-    DeltaWrite.updateWhere(spark, ti, $"n" === 1, Seq("n" -> lit(100L)))
-    assert(DeltaRead.read(spark, ti).agg(max($"n")).head.getLong(0) == 100L)
   }
 }
