@@ -1,84 +1,83 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Iterative graph analytics in the Pregel-lite style the
-  * connected-components dedup already uses (Dedup.connectedComponents):
-  * a fixed number of message-passing rounds, each one shuffle keyed by
-  * destination node. No adjacency is ever collected; the edge list is
-  * the only state, so the cost per round is one join + one aggregation
-  * over |E| rows — the shape that scales linearly with cluster width.
+/** Iterative graph analytics. PageRank is a co-partitioned Pregel loop
+  * in GraphX's shape: the adjacency is partitioned by source once and
+  * the vertex state lives under the same partitioner, so each round's
+  * edge ⋈ state join is narrow and only the messages shuffle.
   */
 object Graph {
 
   /** PageRank with damping `d` over a directed edge list (src, dst),
-    * `iters` fixed iterations from a uniform start.
+    * `iters` fixed iterations from a uniform start; duplicate edges
+    * count once. src and dst share one atomic id type.
+    *
+    * The adjacency is one `collect_set(dst)` aggregate per src (the
+    * out-degree is its length), moved to an RDD under one
+    * `HashPartitioner(spark.sql.shuffle.partitions)` and persisted with
+    * the node set under the same partitioner (|V| is one `count`). A
+    * round hash-joins each adjacency partition with the same keys' rank
+    * partition, and each node partition with its messages; the
+    * per-dst `reduceByKey` of the messages is its only shuffle. The
+    * rounds stay lazy: the final `localCheckpoint` runs them as one job.
     *
     * `redistributeDangling = false` (default): nodes with no out-edges
-    * leak rank — for ranking use the leak is a uniform scale-down, and
-    * the iteration is one join + one aggregation.
+    * leak rank — for ranking use the leak is a uniform scale-down.
     * `redistributeDangling = true`: the strict random-surfer model —
     * each round the dangling nodes' total rank is spread uniformly
-    * over all nodes, so Σrank stays exactly 1. The dangling total is a
-    * one-row aggregate crossJoin-broadcast back into the update (never
-    * a driver collect in the loop), costing one extra anti-join +
-    * scalar aggregate per round.
+    * over all nodes, so Σrank stays exactly 1. That total is one scalar
+    * reduce, the only job a round starts.
     *
-    * Lineage control: each round's plan nests the last, so at high
-    * `iters` analyzer cost and task-binary size grow without bound —
-    * every `checkpointInterval` rounds the rank frame materializes via
-    * eager localCheckpoint (same lifecycle as
-    * Dedup.connectedComponents). In redistribution mode rank feeds
-    * BOTH the contribution join and the dangling aggregate, so the
-    * plan DOUBLES per round (2^interval nodes between checkpoints) —
-    * that mode therefore checkpoints every round, the interval only
-    * governs the linear-growth default mode.
+    * `checkpointInterval` bounds the RDD lineage depth: every that many
+    * rounds the rank is local-checkpointed and materialized (one job).
     *
-    * Returns (node, rank). Deterministic up to FP summation order —
-    * round before comparing across engines/runs.
+    * Returns (node, rank), node of the input's `src` type. Deterministic
+    * up to FP summation order — round before comparing across runs.
     */
   def pagerank(edges: DataFrame, iters: Int, d: Double = 0.85,
       redistributeDangling: Boolean = false,
       checkpointInterval: Int = 10): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val spark = edges.sparkSession
+    val id = edges.schema("src").dataType
+    require(edges.schema("dst").dataType == id && (id match {
+      case _: NumericType | _: StringType | BooleanType | DateType | TimestampType |
+          TimestampNTZType => true
+      case _ => false
+    }), s"pagerank: ids must share one atomic type, got ${id.simpleString} and " +
+      edges.schema("dst").dataType.simpleString)
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // one array per partition: the block store sizes a cached block by
+    // walking it, once per array rather than at every sampled record
+    val adj = edges.groupBy("src").agg(collect_set("dst")).rdd
+      .map(r => (r.get(0), r.getSeq[Any](1).toArray)).partitionBy(part)
+      .mapPartitions(it => Iterator(it.toArray)).persist()
+    val nodes = adj.flatMap(_.iterator.flatMap { case (s, ds) => // value: dangling
+      Iterator((s, false)) ++ ds.iterator.map((_, true)) }).reduceByKey(part, _ && _).persist()
     val n = nodes.count().toDouble
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val withDeg = e.join(deg, "src")
-    val outNodes = deg.select(col("src").as("node"))
-    var rank = nodes.withColumn("rank", lit(1.0 / n))
+    var rank = nodes.mapValues(dangling => (dangling, 1.0 / n))
     for (i <- 1 to iters) {
-      val contrib = withDeg
-        .join(rank.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("deg")).as("mass"))
-      rank =
-        if (redistributeDangling) {
-          val dangling = rank.join(outNodes, Seq("node"), "left_anti")
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))
-          nodes
-            .join(contrib, Seq("node"), "left")
-            .crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (lit((1.0 - d) / n) + lit(d) *
-                (coalesce(col("mass"), lit(0.0)) + col("__dm") / lit(n))).as("rank"))
-        } else
-          nodes
-            .join(contrib, Seq("node"), "left")
-            .select(col("node"),
-              (lit((1.0 - d) / n) + lit(d) * coalesce(col("mass"), lit(0.0))).as("rank"))
-      if (i < iters && (redistributeDangling || i % checkpointInterval == 0))
-        rank = rank.localCheckpoint(true)
+      val spread = if (!redistributeDangling) 0.0
+        else rank.values.filter(_._1).map(_._2).sum() / n
+      val mass = adj.zipPartitions(rank) { (a, rs) =>
+        val r = rs.map { case (v, (_, x)) => v -> x }.toMap
+        a.flatMap(_.iterator.flatMap { case (s, ds) => ds.iterator.map((_, r(s) / ds.length)) })
+      }.reduceByKey(part, _ + _)
+      rank = nodes.zipPartitions(mass) { (ns, ms) =>
+        val m = ms.toMap
+        ns.map { case (v, dangling) =>
+          (v, (dangling, (1.0 - d) / n + d * (m.getOrElse(v, 0.0) + spread))) }
+      }
+      if (i < iters && i % checkpointInterval == 0) rank.localCheckpoint().count()
     }
-    // materialize lineage-free, then drop the loop caches — the result
-    // must not pin persisted blocks for the session's lifetime (same
-    // hygiene as Dedup.connectedComponents).
-    val out = rank.localCheckpoint(true)
-    e.unpersist()
+    rank.localCheckpoint().count()
+    adj.unpersist()
     nodes.unpersist()
-    out
+    spark.createDataFrame(rank.map { case (v, (_, r)) => Row(v, r) },
+      StructType(Seq(StructField("node", id), StructField("rank", DoubleType))))
   }
 
   /** Triangle count + global clustering coefficient over an undirected
@@ -109,7 +108,7 @@ object Graph {
           round(lit(3.0) * col("n_triangles").cast("double") /
             col("n_triplets").cast("double"), 6)).otherwise(0.0).as("clustering"))
     // single-row result: materialize lineage-free, then release the
-    // edge cache (same hygiene as pagerank above)
+    // edge cache
     val out = stats.localCheckpoint(true)
     e.unpersist()
     out

@@ -1718,7 +1718,7 @@ object DatalakeQueries {
     (s, d) => {
       import s.implicits._
       val base = graft.io.Staging.tempDir("graft_q222b_")
-      val view = base + "_view"
+      val view = graft.io.Staging.tempDir("graft_q222v_")
       val docs = Tables.documents(s, d).select($"doc_id", $"lang", $"n_chars")
       graft.io.DeltaWrite.append(
         docs.filter(pmod($"doc_id", lit(2)) === 0).repartition(2), base) // v0

@@ -1,7 +1,12 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.sum
+import org.apache.spark.storage.StorageLevel
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 class GraphSpec extends SparkTestBase {
   import spark.implicits._
@@ -72,5 +77,86 @@ class GraphSpec extends SparkTestBase {
     val ranks = Graph.pagerank(cyc, iters = 25, redistributeDangling = true,
       checkpointInterval = 5)
     assert(math.abs(ranks.agg(sum($"rank")).collect()(0).getDouble(0) - 1.0) < 1e-9)
+  }
+
+  /** Driver-side PageRank of the same definition: distinct edges, |V|
+    * over both endpoints, a uniform start, rank/out-degree messages and,
+    * in redistribution mode, the dangling nodes' total spread uniformly. */
+  private def reference[K](edges: Seq[(K, K)], iters: Int, d: Double = 0.85,
+      redistributeDangling: Boolean = false): Map[K, Double] = {
+    val e = edges.distinct
+    val nodes = (e.map(_._1) ++ e.map(_._2)).distinct
+    val n = nodes.size.toDouble
+    val deg = e.groupMapReduce(_._1)(_ => 1)(_ + _)
+    var rank = nodes.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iters) {
+      val mass = e.groupMapReduce(_._2) { case (s, _) => rank(s) / deg(s) }(_ + _)
+      val spread = if (redistributeDangling) nodes.filterNot(deg.contains).map(rank).sum / n else 0.0
+      rank = nodes.map(v => v -> ((1.0 - d) / n + d * (mass.getOrElse(v, 0.0) + spread))).toMap
+    }
+    rank
+  }
+
+  /** ~200 seeded nodes: duplicate edges, a self-loop, dangling nodes
+    * (180..199 send nothing) and node 200, which only receives. */
+  private lazy val seeded: Seq[(Long, Long)] = {
+    val r = new scala.util.Random(108)
+    val es = (0L until 180L).flatMap(s => Seq.fill(1 + r.nextInt(4))(s -> r.nextInt(200).toLong))
+    es ++ es.take(25) ++ Seq(7L -> 7L, 0L -> 200L, 1L -> 200L)
+  }
+
+  private def assertMatches[K](got: Map[K, Double], want: Map[K, Double]): Unit = {
+    assert(got.keySet == want.keySet)
+    val worst = want.map { case (k, v) => math.abs(got(k) - v) }.max
+    assert(worst < 1e-12, s"max |pagerank - reference| = $worst")
+  }
+
+  test("pagerank equals a driver-side reference in both modes, for Long and String ids") {
+    val edges = seeded.toDF("src", "dst")
+    for (redistribute <- Seq(false, true)) {
+      val got = Graph.pagerank(edges, iters = 10, redistributeDangling = redistribute)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assertMatches(got, reference(seeded, 10, redistributeDangling = redistribute))
+    }
+    val words = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d", "a" -> "a", "a" -> "b")
+    for (redistribute <- Seq(false, true)) {
+      val got = Graph.pagerank(words.toDF("src", "dst"), iters = 4,
+        redistributeDangling = redistribute)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assertMatches(got, reference(words, 4, redistributeDangling = redistribute))
+    }
+  }
+
+  test("pagerank runs every round in one job and leaves no cache behind") {
+    val edges = seeded.toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // every RDD persisted while a job ran, held so that no GC (and with
+    // it the ContextCleaner) releases what the call itself must
+    val seen = new ConcurrentLinkedQueue[RDD[_]]()
+    val snapshot = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(seen.add)
+    }
+    sc.addSparkListener(snapshot)
+    val (jobs3, jobs9, out) = try {
+      val (_, jobs3, _) = observed(Graph.pagerank(edges, iters = 3))
+      val (out, jobs9, _) = observed(Graph.pagerank(edges, iters = 9))
+      (jobs3, jobs9, out)
+    } finally sc.removeSparkListener(snapshot)
+    info(s"Spark jobs: $jobs3 at 3 rounds, $jobs9 at 9 rounds")
+    assert(jobs3 == jobs9 && jobs9 <= 6, s"$jobs3 jobs at 3 rounds, $jobs9 at 9")
+    // only the results' own lineage-free local checkpoints stay stored
+    val kept = seen.asScala.toSeq.distinct.filter(r => !before(r.id) &&
+      r.getStorageLevel != StorageLevel.NONE && !r.isCheckpointed)
+    assert(seen.asScala.exists(r => !before(r.id)), "no persisted RDD observed")
+    assert(kept.isEmpty, s"still cached after the call: ${kept.mkString(", ")}")
+    assert(out.count() == seeded.flatMap(e => Seq(e._1, e._2)).distinct.size)
+  }
+
+  test("pagerank refuses ids that are not one atomic type") {
+    val nested = Seq((Seq(1L), Seq(2L))).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](Graph.pagerank(nested, iters = 1))
+    assert(e.getMessage.contains("array<bigint>"))
   }
 }

@@ -10,8 +10,15 @@ import org.apache.spark.unsafe.types.UTF8String
 class IoCleanerSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** A scratch .jsonl file in the temp dir, deleted on JVM exit. */
+  private def jsonlFile(tag: String): java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempFile(tag, ".jsonl")
+    p.toFile.deleteOnExit()
+    p
+  }
+
   test("paged ingestion: file-backed source, partition-per-page, schema coercion") {
-    val tmp = java.nio.file.Files.createTempFile("graft_pages", ".jsonl")
+    val tmp = jsonlFile("graft_pages")
     val rows = (1 to 25).map(i => s"""{"id": $i, "name": "row$i"}""")
     java.nio.file.Files.writeString(tmp, rows.mkString("\n"))
     val schema = StructType(Seq(
@@ -23,7 +30,7 @@ class IoCleanerSpec extends SparkTestBase {
   }
 
   test("DSv2 graft-paged source: partition-per-page, probe, parse parity with Ingest") {
-    val tmp = java.nio.file.Files.createTempFile("graft_dsv2", ".jsonl")
+    val tmp = jsonlFile("graft_dsv2")
     val rows = (1 to 103).map(i => s"""{"id": $i, "name": "row$i"}""")
     java.nio.file.Files.writeString(tmp, rows.mkString("\n"))
     val schema = StructType(Seq(
@@ -50,7 +57,7 @@ class IoCleanerSpec extends SparkTestBase {
     assert(typed.exceptAll(viaIngest).count() == 0 && viaIngest.exceptAll(typed).count() == 0)
 
     // probe edge: empty file -> zero partitions, zero rows
-    val empty = java.nio.file.Files.createTempFile("graft_dsv2_empty", ".jsonl")
+    val empty = jsonlFile("graft_dsv2_empty")
     val e = spark.read.format("graft-paged")
       .option("path", empty.toString).option("pageSize", "10").load()
     assert(e.count() == 0)

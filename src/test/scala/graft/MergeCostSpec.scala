@@ -1,78 +1,20 @@
 package graft
 
 import graft.io.{DeltaRead, DeltaWrite}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 
 /** What one [[DeltaWrite.merge]] costs on a multi-file table, observed
-  * from outside: a `SparkListener` counts the Spark jobs it starts and a
-  * `QueryExecutionListener` collects every parquet scan of its executed
-  * plans (checkpoint, broadcast and write sub-plans included). The
-  * target's key columns are scanned exactly once, only the touched
-  * files are re-read and rewritten, and an insert-only merge reads no
-  * data file after that one scan. */
-class MergeCostSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+  * from outside with [[SparkTestBase.observed]]: the Spark jobs it
+  * starts and every parquet scan of its executed plans. The target's
+  * key columns are scanned exactly once, only the touched files are
+  * re-read and rewritten, and an insert-only merge reads no data file
+  * after that one scan. */
+class MergeCostSpec extends SparkTestBase {
   import spark.implicits._
 
   private def newTable(): String = Files.createTempDirectory("mergecost").toString
   private def cleanup(t: String): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
-
-  /** One parquet scan: the files (or directories) it lists and the
-    * columns it reads from them. */
-  private final case class Scan(paths: Set[String], columns: Seq[String])
-
-  /** Runs `body` and returns the Spark jobs it started from this thread
-    * plus every parquet scan its SQL executions planned. Listener
-    * delivery is asynchronous, so a marked sentinel action closes the
-    * window: once both listeners have seen it, they have seen all that
-    * came before. */
-  private def observed[A](body: => A): (A, Int, Seq[Scan]) = {
-    val tag = "graft.test.window"
-    val id = java.util.UUID.randomUUID().toString
-    val marker = s"sentinel_${id.replace('-', '_')}"
-    val jobs = new AtomicInteger(0)
-    val scans = new ConcurrentLinkedQueue[Scan]()
-    val jobsDone = new CountDownLatch(1)
-    val plansDone = new CountDownLatch(1)
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty(tag)).foreach {
-          case `id` => jobs.incrementAndGet()
-          case s if s == s"$id-end" => jobsDone.countDown()
-          case _ => ()
-        }
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) plansDone.countDown()
-        else collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
-          .foreach { s =>
-            scans.add(Scan(s.relation.location.rootPaths.map(p =>
-              Paths.get(p.toUri).toAbsolutePath.normalize().toString).toSet,
-              s.requiredSchema.fieldNames.toSeq))
-          }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      sc.setLocalProperty(tag, id)
-      val out = try body finally sc.setLocalProperty(tag, s"$id-end")
-      try spark.range(1).toDF(marker).collect() finally sc.setLocalProperty(tag, null)
-      assert(jobsDone.await(30, TimeUnit.SECONDS) && plansDone.await(30, TimeUnit.SECONDS))
-      (out, jobs.get, scans.asScala.toSeq)
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
-    }
-  }
 
   /** Scans of `t`'s data files (not its log or change-data files). */
   private def dataScans(t: String, scans: Seq[Scan]): Seq[Scan] = {

@@ -84,7 +84,7 @@ class PropertySpec extends SparkTestBase {
 
   test("gold load idempotence: appendNew twice == once; overlap batch adds only new keys") {
     import graft.io.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_gold").toString
+    val dir = graft.io.Staging.tempDir("graft_gold")
     val path = s"$dir/fact_orders"
     val fact = StarSchema.build(spark, sf)("fact_orders")
     val n0 = fact.count()
@@ -103,7 +103,7 @@ class PropertySpec extends SparkTestBase {
 
   test("incremental star (hashKey) converges: batch loads == full rebuild") {
     import graft.io.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc").toString
+    val dir = graft.io.Staging.tempDir("graft_inc")
     val full = StarSchema.Bronze(spark, sf)
     // batch 1 = two-thirds of the fact sources; dims' own sources are
     // shared (a growing fact stream over stable entity tables)

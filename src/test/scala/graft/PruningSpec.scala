@@ -12,7 +12,7 @@ class PruningSpec extends SparkTestBase {
   import spark.implicits._
 
   test("partition filter lands in FileSourceScan partitionFilters") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prunespec_").toString
+    val tmp = graft.io.Staging.tempDir("graft_prunespec_")
     Tables.events(spark, sf)
       .select($"event_id", $"value", $"event_type")
       .write.partitionBy("event_type").mode("overwrite").parquet(tmp)
