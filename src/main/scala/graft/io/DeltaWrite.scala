@@ -193,8 +193,11 @@ object DeltaWrite {
       partitionBy: Seq[String], destPrefix: String = ""): Seq[Staged] = {
     val tmpDir = Paths.get(table, s"_staging-${UUID.randomUUID()}")
     val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+    // a failed write (a task error, a cancelled job) leaves no staging dir
+    try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmpDir.toString)
+    catch { case e: Throwable =>
+      org.apache.commons.io.FileUtils.deleteDirectory(tmpDir.toFile); throw e }
     val staged = scala.collection.mutable.ArrayBuffer.empty[Staged]
     val conf = df.sparkSession.sessionState.newHadoopConf()
     // materialize the walk BEFORE moving anything: mutating a directory
@@ -1846,6 +1849,49 @@ object DeltaWrite {
     commit(df, table, partitionBy, replaceExisting = false,
       txn = Some((appId, version)))
 
+  /** Idempotent conflict-skip append — the gold load's
+    * `INSERT ... ON CONFLICT (keys) DO NOTHING` (loader_NeonDB.py:364-371,
+    * SURVEY §7.4 #2). The batch collapses its own key conflicts
+    * first-wins, anti-joins its keys against the latest snapshot's
+    * (read key-columns-only through [[DeltaRead]]) and commits only the
+    * rows that are new, as one atomic version. Returns that version.
+    *
+    *  - Key equality is null-safe (`<=>`): a NULL key value must match
+    *    its stored self, or the row re-appends on every run.
+    *  - Empty `keyCols` means the full row — for SERIAL-PK-only tables
+    *    such as fact_metricas, where duplicate grain rows are legal data
+    *    (loader_NeonDB.py:641-645 has no conflict target). Full-row skip
+    *    keeps re-runs idempotent while keeping every distinct row.
+    *  - A batch that stages no rows mints no version: it returns the
+    *    version it read (decided from the staged footers' `numRecords`,
+    *    not from a count job).
+    *  - The commit must land on the version the anti-join read. A
+    *    concurrent commit in between fails this one, and its staged
+    *    files are dropped: one loader per table is the supported shape.
+    *
+    * Surrogate-key caveat, as in the reference: re-running on the SAME
+    * bronze input is a no-op (same keys regenerate). For INCREMENTAL
+    * loads where new dimension rows must not collide with keys already
+    * assigned, use hashKey surrogates (stable under growth) — seqKey
+    * renumbers from 1 on every rebuild. */
+  def appendNew(df: DataFrame, table: String, keyCols: Seq[String],
+      partitionBy: Seq[String] = Nil): Long = {
+    import org.apache.spark.sql.functions.col
+    val keys = if (keyCols.nonEmpty) keyCols else df.columns.toSeq
+    val incoming = df.dropDuplicates(keys)
+    val readAt = if (tableExists(table)) DeltaRead.latestVersion(table) else -1L
+    val fresh =
+      if (readAt < 0) incoming
+      else {
+        val existing = DeltaRead.readVersion(df.sparkSession, table, readAt)
+          .select(keys.map(c => col(c).as(s"__ex_$c")): _*)
+        val cond = keys.map(c => incoming(c) <=> col(s"__ex_$c")).reduce(_ && _)
+        incoming.join(existing, cond, "left_anti")
+      }
+    commit(fresh, table, partitionBy, replaceExisting = false, txn = None,
+      maxRetries = 1, readAt = Some(readAt)).get
+  }
+
   /** [[append]]/[[appendOnce]] with the batch's physical layout
     * PINNED — exempt from the `delta.autoOptimize.optimizeWrite`
     * repartition, like [[appendZOrdered]]. For callers whose layout
@@ -1877,12 +1923,16 @@ object DeltaWrite {
     mapper.writeValueAsString(root)
   }
 
+  /** `readAt`: the version the batch was derived from (-1: no table
+    * yet). The commit must land right after it, and a batch that stages
+    * no rows over an existing table commits nothing and returns it. */
   private def commit(df0: DataFrame, table: String, partitionBy: Seq[String],
       replaceExisting: Boolean, txn: Option[(String, Long)],
       maxRetries: Int = 10, createMapping: Option[String] = None,
       extraActions: Option[DeltaRead.DeltaSnapshot] => Seq[String] = _ => Nil,
       opName: Option[String] = None,
-      layoutPinned: Boolean = false): Option[Long] = {
+      layoutPinned: Boolean = false,
+      readAt: Option[Long] = None): Option[Long] = {
     val spark = df0.sparkSession
     // cheap pre-check: a replayed batch skips before staging anything
     txn.foreach { case (appId, ver) =>
@@ -1953,10 +2003,15 @@ object DeltaWrite {
     val staged = shredGuard(spark,
       if (replaceExisting) None else preSnap, stagedDf.schema)(
       stage(stagedDf, table, stagedPartitionBy))
+    if (readAt.exists(_ >= 0) &&
+        staged.forall(_.stats.exists(numRecordsOfStats(_, table) == 0L))) {
+      dropStaged(table, staged)
+      return readAt
+    }
     // any rejection below (drift, race exhaustion) must not leak the
     // staged files into the table root until a vacuum sweeps them
     try commitStaged(df, table, partBy, replaceExisting, txn, staged,
-      maxRetries, mapCtx, createMapping, extraActions, opName)
+      maxRetries, mapCtx, createMapping, extraActions, opName, readAt)
     catch { case e: Throwable => dropStaged(table, staged); throw e }
   }
 
@@ -1966,13 +2021,18 @@ object DeltaWrite {
       mapCtx: Option[WriteMapping.Ctx] = None,
       createMapping: Option[String] = None,
       extraActions: Option[DeltaRead.DeltaSnapshot] => Seq[String] = _ => Nil,
-      opName: Option[String] = None): Option[Long] = {
+      opName: Option[String] = None,
+      readAt: Option[Long] = None): Option[Long] = {
     val spark = df.sparkSession
     var attempt = 0
     while (attempt < maxRetries) {
       val exists = tableExists(table)
       val now = System.currentTimeMillis()
       val v = if (exists) DeltaRead.latestVersion(table) + 1 else 0L
+      readAt.foreach { r =>
+        if (v != r + 1) throw new IllegalStateException(
+          s"DeltaWrite: $table moved past version $r, which this batch was derived from")
+      }
       val snap = if (exists) Some(DeltaRead.snapshotAt(spark, table, v - 1)) else None
       // race-safe replay guard: re-checked against the snapshot the CAS
       // will be attempted on, so a concurrent replay of the same batch

@@ -1,35 +1,23 @@
 package graft.io
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
-/** Sinks (SURVEY §2.1 S7–S12): parquet/CSV/JSON-report writers plus a
-  * JDBC conflict-skip batch sink mirroring the reference's
+/** Sinks (SURVEY §2.1 S7–S12): the whole-output writers — overwrite
+  * parquet (silver), CSV and the JSON report — plus a JDBC
+  * conflict-skip batch sink mirroring the reference's
   * `execute_values ... ON CONFLICT DO NOTHING` loads
-  * (loader_NeonDB.py:364-371 etc.).
+  * (loader_NeonDB.py:364-371 etc.). A table updated in place (the gold
+  * warehouse) is not written here: its offline conflict-skip load is
+  * [[DeltaWrite.appendNew]], one atomic Delta commit per load.
   */
 object Sinks {
 
-  /** S7: overwrite parquet (bronze/gold persist), optionally
+  /** S7: overwrite parquet (silver persist), optionally
     * hive-partitioned by the given columns. */
   def parquet(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
   }
-
-  /** Bucketed + sorted parquet table (hash-bucketed by join key): the
-    * co-located-join layout for fact↔fact joins too big to broadcast.
-    * Two tables bucketed the same way join with ZERO exchanges — the
-    * shuffle is paid once at write time, then every downstream join of
-    * the bucketed keys is exchange-free (asserted in IoCleanerSpec).
-    * Goes through the session catalog (`saveAsTable`) because bucket
-    * metadata lives there, not in the files. */
-  def parquetBucketed(df: DataFrame, tableName: String, bucketCols: Seq[String],
-      numBuckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(tableName)
 
   /** S9: headered CSV export (extract_gaming_data.py:91-93). */
   def csv(df: DataFrame, path: String): Unit =
@@ -39,53 +27,6 @@ object Sinks {
     * the aggregation is distributed, only the final object is local). */
   def jsonReport(json: String, path: String): Unit =
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
-
-  /** The offline MERGE-equivalent of [[jdbcConflictSkip]]: idempotent
-    * parquet append — stage the incoming batch, anti-join its PK
-    * against the keys already on disk, append only the new rows
-    * (`INSERT ... ON CONFLICT (pk) DO NOTHING` re-run semantics,
-    * loader_NeonDB.py:370-645; SURVEY §7.4 #2). Batch-internal key
-    * conflicts collapse first-wins like a single conflict-skip INSERT.
-    *
-    * Scale: the existing side is read PK-columns-only (column-pruned
-    * scan — `ReadSchema` carries just the keys) and the anti-join
-    * shuffles on the PK hash; AQE broadcasts it when the key set is
-    * small. NOT transactional across concurrent writers (parquet has
-    * no multi-job commit protocol; that's Delta's job) — it targets
-    * the reference's re-run idempotence, not concurrent loads.
-    *
-    * Surrogate-key caveat, as in the reference: re-running on the SAME
-    * bronze input is a no-op (same keys regenerate). For INCREMENTAL
-    * loads where new dimension rows must not collide with keys already
-    * assigned, use hashKey surrogates (stable under growth) — seqKey
-    * renumbers from 1 on every rebuild.
-    *
-    * Empty `keyCols` means full-row conflict skip — for SERIAL-PK-only
-    * tables like fact_metricas where duplicate GRAIN rows are legal
-    * data (loader_NeonDB.py:641-645: `ON CONFLICT DO NOTHING` with no
-    * conflict target never fires, so the reference keeps them; its
-    * re-runs actually duplicate rows — full-row skip keeps our re-runs
-    * idempotent while preserving every distinct row). */
-  def parquetAppendNew(df: DataFrame, path: String, keyCols: Seq[String],
-      partitionCols: Seq[String] = Nil): Unit = {
-    val keys = if (keyCols.nonEmpty) keyCols else df.columns.toSeq
-    val spark = df.sparkSession
-    val incoming = df.dropDuplicates(keys)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hPath)) parquet(incoming, path, partitionCols)
-    else {
-      // null-safe (<=>) key equality: a NULL key value must match its
-      // stored self or the row re-appends on every run, breaking
-      // idempotence (plain = treats NULL as never-equal)
-      val existingKeys = spark.read.parquet(path)
-        .select(keys.map(c => col(c).as(s"__ex_$c")): _*)
-      val cond = keys.map(c => incoming(c) <=> col(s"__ex_$c")).reduce(_ && _)
-      val fresh = incoming.join(existingKeys, cond, "left_anti")
-      val w = fresh.write.mode("append")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-    }
-  }
 
   /** Z-order key: interleave the bits of each column's min/max-scaled
     * integer image, so rows close in EVERY clustered dimension land

@@ -108,38 +108,19 @@ object Dedup {
     * pairs hot in EVERY band (true floods) are lost. */
   def lshCandidates(corpus: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      dedupSignatures: Boolean = false,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    // Two signature strategies, measured not guessed:
-    // - direct (default): hash every row's shingles scan-side. No extra
-    //   exchange; wins whenever the corpus is mostly unique (bench: the
-    //   dedupSignatures path REGRESSED q42 1.04s -> 1.45s at sf0.1).
-    // - dedupSignatures: compute the shingle-md5 chain once per
-    //   DISTINCT text (fingerprint-keyed) and join back to ids, paying
-    //   one fp shuffle of (16B fp + 256B sig). Wins when the raw corpus
-    //   carries a high exact-duplicate factor (heavy crawl dumps),
-    //   where hash work divides by that factor.
     // Shingle-less docs (< shingleSize tokens) can't be near-dups of
-    // anything: dropped before banding on both paths (the DuckDB
-    // oracle drops them the same way: its all-NULL signatures render
-    // NULL band keys, which the equi-join never matches).
-    val sigTable =
-      if (dedupSignatures) {
-        val withFp = corpus.withColumn("__fp", md5(col(textCol)))
-        val uniqSigs = withFp.select(col("__fp"), col(textCol)).dropDuplicates("__fp")
-          .withColumn("__hs", shingleHashes(col(textCol), shingleSize))
-          .where(size(col("__hs")) > 0)
-          .withColumn("__sig", graft.functions.Natives.minhash(col("__hs"), numHashes))
-          .select(col("__fp"), col("__sig"))
-        withFp.join(uniqSigs, "__fp").select(col(idCol), col("__sig"))
-      } else
-        corpus
-          .withColumn("__hs", shingleHashes(col(textCol), shingleSize))
-          .where(size(col("__hs")) > 0)
-          .withColumn("__sig", graft.functions.Natives.minhash(col("__hs"), numHashes))
-          .select(col(idCol), col("__sig"))
+    // anything: dropped before banding (the DuckDB oracle drops them
+    // the same way: its all-NULL signatures render NULL band keys,
+    // which the equi-join never matches). A corpus with a high
+    // exact-duplicate factor amortizes the signature chain itself
+    // through [[lshCandidatesFromSigs]] (q42's shape).
+    val sigTable = corpus
+      .withColumn("__hs", shingleHashes(col(textCol), shingleSize))
+      .where(size(col("__hs")) > 0)
+      .withColumn("__sig", graft.functions.Natives.minhash(col("__hs"), numHashes))
+      .select(col(idCol), col("__sig"))
     lshCandidatesFromSigs(sigTable, idCol, "__sig", numHashes, bands,
       maxBucketSize)
   }

@@ -236,7 +236,7 @@ object StarSchema {
 
   /** Natural/grain keys per gold table — the ON CONFLICT targets of the
     * reference DDL (loader_NeonDB.py:94-246 UNIQUE constraints), used
-    * by the idempotent gold load (Sinks.parquetAppendNew). Natural
+    * by the idempotent gold load (DeltaWrite.appendNew). Natural
     * keys, not surrogates: surrogates renumber per rebuild (see the
     * seqKey/hashKey note), natural keys are what dedup re-runs. */
   val mergeKeys: Map[String, Seq[String]] = Map(
@@ -248,7 +248,7 @@ object StarSchema {
     "bridge_order_part" -> Seq("orderkey", "partkey"),
     "bridge_part_tag" -> Seq("p_partkey", "tag_id"),
     // SERIAL-PK-only in the reference: duplicate grain rows are legal
-    // data — empty key list = full-row conflict skip in the sink
+    // data — empty key list = full-row conflict skip in the load
     "fact_metricas" -> Nil)
 
   /** Map whose values materialize on first access. seqKey runs an eager
@@ -331,7 +331,7 @@ object StarSchema {
 
   /** Incremental-safe star: hashKey surrogates, so a dimension row
     * keeps its key across growing loads — no renumbering, which is
-    * what makes `Sinks.parquetAppendNew` converge: appending the gold
+    * what makes `DeltaWrite.appendNew` converge: appending the gold
     * of batch N over the gold of batch N-1 equals a full rebuild (the
     * seqKey form cannot offer this; it re-ranks the whole domain every
     * build). Proven in PropertySpec. */

@@ -380,20 +380,6 @@ class DedupSimilaritySpec extends SparkTestBase {
     }
   }
 
-  test("lshCandidates: dedupSignatures path == direct path") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val corpus = docs.select($"doc_id".as("id"), $"text")
-      .union(docs.select(($"doc_id" + 100000).as("id"), $"text"))
-    val direct = graft.operators.Dedup.lshCandidates(corpus, "id", "text")
-    val deduped = graft.operators.Dedup.lshCandidates(corpus, "id", "text",
-      dedupSignatures = true)
-    assert(direct.exceptAll(deduped).count() == 0 &&
-      deduped.exceptAll(direct).count() == 0,
-      "signature-dedup path must yield identical candidates")
-    assert(direct.count() > 0)
-  }
-
   test("lshCandidatesFromSigs: precomputed-signature path == direct path") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)

@@ -63,32 +63,6 @@ class IoCleanerSpec extends SparkTestBase {
     assert(e.count() == 0)
   }
 
-  test("bucketed tables join with zero exchanges (co-located join layout)") {
-    val orders = Tables.orders(spark, sf).select($"o_orderkey", $"o_totalprice")
-    val lineitem = Tables.lineitem(spark, sf).select($"l_orderkey", $"l_extendedprice")
-    Sinks.parquetBucketed(orders, "b_orders", Seq("o_orderkey"), 8)
-    Sinks.parquetBucketed(lineitem, "b_lineitem", Seq("l_orderkey"), 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the shuffle path
-      val joined = spark.table("b_orders")
-        .join(spark.table("b_lineitem"), $"o_orderkey" === $"l_orderkey")
-        .groupBy($"o_orderkey")
-        .agg(sum($"l_extendedprice").as("rev"))
-      val plan = joined.queryExecution.executedPlan.toString
-      // the join itself must be exchange-free: the only permitted
-      // exchange would come AFTER the join (none here — the aggregate
-      // key is the bucket key, so even that reuses the layout)
-      assert(!plan.contains("Exchange"), s"unexpected shuffle in bucketed join plan:\n$plan")
-      assert(joined.count() == orders.join(lineitem, $"o_orderkey" === $"l_orderkey")
-        .groupBy($"o_orderkey").agg(sum($"l_extendedprice")).count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    }
-  }
-
   test("dropAllNullColumns keeps populated, drops empty") {
     val df = Seq((1, Option.empty[String], "x"), (2, Option.empty[String], "y"))
       .toDF("a", "empty", "c")

@@ -2,11 +2,13 @@ package graft
 
 import graft.clean.Cleaner
 import graft.functions.{NativeHelpers, Normalize, TextAnalysis}
+import graft.io.{DeltaRead, DeltaWrite, Staging}
 import graft.operators.{Dedup, Similarity, Skew, StarSchema, Validator}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import scala.jdk.CollectionConverters._
 
 /** Property-based invariants (SURVEY §5): dedup idempotence,
   * normalize_numeric round-trips, orphan-free star builds, salted-join
@@ -83,27 +85,65 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("gold load idempotence: appendNew twice == once; overlap batch adds only new keys") {
-    import graft.io.Sinks
-    val dir = graft.io.Staging.tempDir("graft_gold")
+    val dir = Staging.tempDir("graft_gold")
     val path = s"$dir/fact_orders"
     val fact = StarSchema.build(spark, sf)("fact_orders")
     val n0 = fact.count()
-    Sinks.parquetAppendNew(fact, path, Seq("o_orderkey"))
-    assert(spark.read.parquet(path).count() == n0)
-    // re-run with identical input: must be a no-op (SURVEY §7.4 #2)
-    Sinks.parquetAppendNew(fact, path, Seq("o_orderkey"))
-    assert(spark.read.parquet(path).count() == n0)
+    val v0 = DeltaWrite.appendNew(fact, path, Seq("o_orderkey"))
+    assert(DeltaRead.readVersion(spark, path, v0).count() == n0)
+    // re-run with identical input: a no-op that mints no version
+    // (SURVEY §7.4 #2)
+    assert(DeltaWrite.appendNew(fact, path, Seq("o_orderkey")) == v0)
+    assert(DeltaRead.latestVersion(path) == v0)
+    assert(DeltaRead.read(spark, path).count() == n0)
     // overlapping batch: old keys skipped, shifted keys appended
     val shifted = fact.withColumn("o_orderkey", $"o_orderkey" + 10000000L)
-    Sinks.parquetAppendNew(fact.unionAll(shifted), path, Seq("o_orderkey"))
-    assert(spark.read.parquet(path).count() == 2 * n0)
+    val v1 = DeltaWrite.appendNew(fact.unionAll(shifted), path, Seq("o_orderkey"))
+    assert(v1 == v0 + 1)
+    val got = DeltaRead.readVersion(spark, path, v1)
+    assert(got.count() == 2 * n0)
     // and the PK stayed unique throughout
-    assert(spark.read.parquet(path).select("o_orderkey").distinct().count() == 2 * n0)
+    assert(got.select("o_orderkey").distinct().count() == 2 * n0)
+    // a NULL key matches its stored self (<=>): the re-run adds nothing
+    val nullKeyed = Seq((Option(1L), "a"), (Option.empty[Long], "b")).toDF("k", "v")
+    val nv = DeltaWrite.appendNew(nullKeyed, s"$dir/null_keys", Seq("k"))
+    assert(DeltaWrite.appendNew(nullKeyed, s"$dir/null_keys", Seq("k")) == nv)
+    assert(DeltaRead.read(spark, s"$dir/null_keys").count() == 2)
+  }
+
+  test("a failed gold load leaves the prior version whole; a retry converges") {
+    val path = s"${Staging.tempDir("graft_gold_fail")}/fact_orders"
+    val fact = StarSchema.build(spark, sf)("fact_orders")
+    val even = fact.filter($"o_orderkey" % 2 === 0)
+    val v0 = DeltaWrite.appendNew(even, path, Seq("o_orderkey"))
+    val n0 = even.count()
+    // one task of the next load throws: the row of one new key fails
+    val victim = fact.filter($"o_orderkey" % 2 =!= 0)
+      .agg(min($"o_orderkey")).head().getLong(0)
+    val poisoned = fact.withColumn("o_totalprice",
+      when($"o_orderkey" === victim, raise_error(lit("injected load failure")))
+        .otherwise($"o_totalprice"))
+    intercept[Exception](DeltaWrite.appendNew(poisoned, path, Seq("o_orderkey")))
+    assert(DeltaRead.latestVersion(path) == v0)
+    assert(DeltaRead.read(spark, path).count() == n0)
+    assert(spark.read.parquet(path).count() == n0)
+    // nothing staged is left in the table root: every parquet file
+    // there is one the log references, and no staging dir remains
+    val root = java.nio.file.Paths.get(path)
+    val st = java.nio.file.Files.walk(root)
+    val onDisk =
+      try st.iterator().asScala.map(p => root.relativize(p).toString).toList
+      finally st.close()
+    assert(onDisk.filter(_.endsWith(".parquet")).filterNot(_.startsWith("_delta_log")).toSet ==
+      DeltaRead.snapshot(spark, path).files.map(_.path).toSet)
+    assert(!onDisk.exists(_.startsWith("_staging-")), onDisk.mkString(", "))
+    // a retry with a good frame converges on the full table
+    assert(DeltaWrite.appendNew(fact, path, Seq("o_orderkey")) == v0 + 1)
+    assert(DeltaRead.read(spark, path).count() == fact.count())
   }
 
   test("incremental star (hashKey) converges: batch loads == full rebuild") {
-    import graft.io.Sinks
-    val dir = graft.io.Staging.tempDir("graft_inc")
+    val dir = Staging.tempDir("graft_inc")
     val full = StarSchema.Bronze(spark, sf)
     // batch 1 = two-thirds of the fact sources; dims' own sources are
     // shared (a growing fact stream over stable entity tables)
@@ -113,15 +153,15 @@ class PropertySpec extends SparkTestBase {
     val tables = Seq("dim_fecha", "dim_customer", "dim_part", "dim_tag",
       "fact_orders", "bridge_order_part", "bridge_part_tag", "fact_metricas")
     for (t <- tables)
-      Sinks.parquetAppendNew(StarSchema.buildIncremental(b1)(t), s"$dir/$t",
+      DeltaWrite.appendNew(StarSchema.buildIncremental(b1)(t), s"$dir/$t",
         StarSchema.mergeKeys(t))
     for (t <- tables)
-      Sinks.parquetAppendNew(StarSchema.buildIncremental(full)(t), s"$dir/$t",
+      DeltaWrite.appendNew(StarSchema.buildIncremental(full)(t), s"$dir/$t",
         StarSchema.mergeKeys(t))
     val want = StarSchema.buildIncremental(full)
     for (t <- tables) {
       val w = want(t)
-      val got = spark.read.parquet(s"$dir/$t").select(w.columns.map(col).toSeq: _*)
+      val got = DeltaRead.read(spark, s"$dir/$t").select(w.columns.map(col).toSeq: _*)
       assert(got.exceptAll(w).count() == 0 && w.exceptAll(got).count() == 0,
         s"incremental gold for $t diverged from full rebuild")
     }
