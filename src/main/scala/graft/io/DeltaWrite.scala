@@ -28,6 +28,14 @@ import scala.jdk.CollectionConverters._
   *    concurrent appenders serialize correctly with no lock service,
   *    which is the property that matters when 1000 executors' drivers
   *    share one table root;
+  *  - every read-modify-write commit (DML, schema and property
+  *    changes, OPTIMIZE, RESTORE, FSCK) runs one commit loop,
+  *    [[commitOnHead]]: plan against the head snapshot, refuse tables
+  *    this writer cannot commit to, publish at head + 1, re-plan on a
+  *    lost race. The copy-on-write DML ([[mergeAdvanced]],
+  *    [[updateWhere]], [[replaceWhere]]) shares one core on top of it,
+  *    [[rewriteOnHead]]: re-read the touched files, validate, stage the
+  *    rewrite and its change rows, and commit remove + add + cdc;
   *  - [[checkpoint]] materializes the replayed state as the single-file
   *    `<v>%020d.checkpoint.parquet` + `_last_checkpoint` pointer, so
   *    readers of a long-lived table scan one parquet instead of
@@ -518,22 +526,14 @@ object DeltaWrite {
     require(!domain.startsWith("delta."),
       s"domain '$domain' is system-controlled — owned by its feature, " +
         "not settable directly")
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
-      val now = System.currentTimeMillis()
-      val proto =
-        if (s.minWriterVersion >= 7 && s.writerFeatures.contains("domainMetadata")) Nil
-        else Seq(upgradeProtocolAction(table, s, Set.empty, Set("domainMetadata")))
+    commitOnHead(spark, table, "domainMetadata", removesData = false) { s =>
       val lines = Seq(commitInfoAction(
-        if (removed) "REMOVE DOMAIN METADATA" else "SET DOMAIN METADATA", now)) ++
-        proto :+ domainMetadataAction(domain, conf, removed)
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+        if (removed) "REMOVE DOMAIN METADATA" else "SET DOMAIN METADATA",
+        System.currentTimeMillis())) ++
+        featureUpgrade(table, s, "domainMetadata") :+
+        domainMetadataAction(domain, conf, removed)
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"domainMetadata: lost 10 commit races on $table")
   }
 
   // --- ROW TRACKING (PROTOCOL.md "Row Tracking") ---
@@ -629,49 +629,45 @@ object DeltaWrite {
     * — never logical schema fields — so the mapping never applies to
     * them; rewrite paths carry them via physicalizeDf's passthrough
     * and restampFieldIds' unknown-column passthrough. */
-  def enableRowTracking(spark: SparkSession, table: String): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
-      if (rowTrackingOn(s) && s.files.forall(_.baseRowId.isDefined)) return v
-      val now = System.currentTimeMillis()
-      var hwm = rowIdHighWaterMark(s)
-      val reAdds = s.files.filterNot(_.baseRowId.isDefined).map { f =>
-        val p = DeltaRead.dataPath(table, f.path)
-        val staged = Staged(f.path, f.partitionValues, Files.size(p),
-          Files.getLastModifiedTime(p).toMillis, f.stats)
-        val n = numRecordsOfStats(f.stats.getOrElse(throw new IllegalStateException(
-          s"enableRowTracking: ${f.path} has no stats — cannot count its rows")),
-          s"$table ${f.path}")
-        val line = addAction(staged, dataChange = false, dv = f.dv,
-          rowIds = Some((hwm + 1, v + 1)))
-        hwm += n
-        line
+  def enableRowTracking(spark: SparkSession, table: String): Long =
+    commitOnHead(spark, table, "enableRowTracking", removesData = false) { s =>
+      val v = s.version
+      if (rowTrackingOn(s) && s.files.forall(_.baseRowId.isDefined)) Done(v)
+      else {
+        val now = System.currentTimeMillis()
+        var hwm = rowIdHighWaterMark(s)
+        val reAdds = s.files.filterNot(_.baseRowId.isDefined).map { f =>
+          val p = DeltaRead.dataPath(table, f.path)
+          val staged = Staged(f.path, f.partitionValues, Files.size(p),
+            Files.getLastModifiedTime(p).toMillis, f.stats)
+          val n = numRecordsOfStats(f.stats.getOrElse(throw new IllegalStateException(
+            s"enableRowTracking: ${f.path} has no stats — cannot count its rows")),
+            s"$table ${f.path}")
+          val line = addAction(staged, dataChange = false, dv = f.dv,
+            rowIds = Some((hwm + 1, v + 1)))
+          hwm += n
+          line
+        }
+        val conf2 = s.configuration +
+          (RowTrackingEnabledKey -> "true") +
+          (MatRowIdKey -> s.configuration.getOrElse(MatRowIdKey,
+            s"_row-id-col-${UUID.randomUUID()}")) +
+          (MatRcvKey -> s.configuration.getOrElse(MatRcvKey,
+            s"_row-commit-version-col-${UUID.randomUUID()}"))
+        val schemaJson = s.schema.map(_.json).getOrElse(throw new IllegalStateException(
+          s"enableRowTracking: $table has no metaData schema"))
+        val lines = Seq(
+          commitInfoAction("ENABLE ROW TRACKING", now),
+          upgradeProtocolAction(table, s, Set.empty,
+            Set("rowTracking", "domainMetadata")),
+          metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString), schemaJson,
+            s.partitionColumns, now, conf2)) ++
+          reAdds :+
+          domainMetadataAction(RowTrackingDomain,
+            s"""{"rowIdHighWaterMark":$hwm}""", removed = false)
+        Publish(lines, v + 1)
       }
-      val conf2 = s.configuration +
-        (RowTrackingEnabledKey -> "true") +
-        (MatRowIdKey -> s.configuration.getOrElse(MatRowIdKey,
-          s"_row-id-col-${UUID.randomUUID()}")) +
-        (MatRcvKey -> s.configuration.getOrElse(MatRcvKey,
-          s"_row-commit-version-col-${UUID.randomUUID()}"))
-      val schemaJson = s.schema.map(_.json).getOrElse(throw new IllegalStateException(
-        s"enableRowTracking: $table has no metaData schema"))
-      val lines = Seq(
-        commitInfoAction("ENABLE ROW TRACKING", now),
-        upgradeProtocolAction(table, s, Set.empty,
-          Set("rowTracking", "domainMetadata")),
-        metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString), schemaJson,
-          s.partitionColumns, now, conf2)) ++
-        reAdds :+
-        domainMetadataAction(RowTrackingDomain,
-          s"""{"rowIdHighWaterMark":$hwm}""", removed = false)
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
     }
-    throw new IllegalStateException(s"enableRowTracking: lost 10 commit races on $table")
-  }
 
   // --- CLUSTERED TABLES (PROTOCOL.md "Clustered Table" — liquid
   // clustering). The clustering columns live in the `delta.clustering`
@@ -709,11 +705,7 @@ object DeltaWrite {
     * writes and OPTIMIZE, not a rewrite trigger). */
   def clusterBy(spark: SparkSession, table: String, cols0: Seq[String]): Long = {
     require(cols0.nonEmpty, "clusterBy: cols must be non-empty")
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+    commitOnHead(spark, table, "clusterBy", removesData = false) { s =>
       val schema = s.schema.getOrElse(throw new IllegalStateException(
         s"clusterBy: $table has no metaData schema"))
       // SQL identifiers are case-insensitive: record canonical names —
@@ -727,19 +719,13 @@ object DeltaWrite {
         s"clusterBy: duplicate clustering columns in ${cols0.mkString(",")}")
       cols.foreach(c => require(!s.partitionColumns.contains(c),
         s"clusterBy: '$c' is a partition column"))
-      val now = System.currentTimeMillis()
-      val proto =
-        if (s.minWriterVersion >= 7 && s.writerFeatures.contains("clustering")) Nil
-        else Seq(upgradeProtocolAction(table, s, Set.empty,
-          Set("clustering", "domainMetadata")))
       val conf = cols.map(c => s"""[${mapper.writeValueAsString(c)}]""")
         .mkString("""{"clusteringColumns":[""", ",", "]}")
-      val lines = Seq(commitInfoAction("CLUSTER BY", now)) ++ proto :+
+      val lines = Seq(commitInfoAction("CLUSTER BY", System.currentTimeMillis())) ++
+        featureUpgrade(table, s, "clustering", alsoWriter = Set("domainMetadata")) :+
         domainMetadataAction(ClusteringDomain, conf, removed = false)
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"clusterBy: lost 10 commit races on $table")
   }
 
   /** Append a batch honoring the table's declared clustering: the
@@ -804,36 +790,31 @@ object DeltaWrite {
     * plus its provenance (version + timestamp, as the spec requires so
     * readers know where the in-commit clock begins), and every later
     * commit carries the monotonic timestamp. */
-  def enableInCommitTimestamps(spark: SparkSession, table: String): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
-      if (ictEnabled(s.configuration)) return v
-      val now = System.currentTimeMillis()
-      val prev = DeltaRead.commitTimestamp(table, v).getOrElse(-1L)
-      val ict = math.max(prev + 1, now)
-      val conf2 = s.configuration +
-        (IctEnabledKey -> "true") +
-        (IctVersionKey -> (v + 1).toString) +
-        (IctTimestampKey -> ict.toString)
-      val schemaJson = s.schema.map(_.json).getOrElse(throw new IllegalStateException(
-        s"enableInCommitTimestamps: $table has no metaData schema"))
-      val info = mapper.readTree(commitInfoAction("ENABLE ICT", now))
-      info.get("commitInfo").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        .put("inCommitTimestamp", ict)
-      val lines = Seq(
-        mapper.writeValueAsString(info),
-        upgradeProtocolAction(table, s, Set.empty, Set("inCommitTimestamp")),
-        metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString), schemaJson,
-          s.partitionColumns, now, conf2))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+  def enableInCommitTimestamps(spark: SparkSession, table: String): Long =
+    commitOnHead(spark, table, "enableInCommitTimestamps", removesData = false) { s =>
+      val v = s.version
+      if (ictEnabled(s.configuration)) Done(v)
+      else {
+        val now = System.currentTimeMillis()
+        val prev = DeltaRead.commitTimestamp(table, v).getOrElse(-1L)
+        val ict = math.max(prev + 1, now)
+        val conf2 = s.configuration +
+          (IctEnabledKey -> "true") +
+          (IctVersionKey -> (v + 1).toString) +
+          (IctTimestampKey -> ict.toString)
+        val schemaJson = s.schema.map(_.json).getOrElse(throw new IllegalStateException(
+          s"enableInCommitTimestamps: $table has no metaData schema"))
+        val info = mapper.readTree(commitInfoAction("ENABLE ICT", now))
+        info.get("commitInfo").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          .put("inCommitTimestamp", ict)
+        val lines = Seq(
+          mapper.writeValueAsString(info),
+          upgradeProtocolAction(table, s, Set.empty, Set("inCommitTimestamp")),
+          metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString), schemaJson,
+            s.partitionColumns, now, conf2))
+        Publish(lines, v + 1)
+      }
     }
-    throw new IllegalStateException(
-      s"enableInCommitTimestamps: lost 10 commit races on $table")
-  }
 
   /** One gate for every commit: row-tracking stamping + in-commit
     * timestamp + CAS publish. `s` is the snapshot the commit was
@@ -851,6 +832,61 @@ object DeltaWrite {
     }
     ok
   }
+
+  /** One attempt's decision inside [[commitOnHead]]. */
+  private sealed trait Attempt[+T]
+  /** Nothing to commit: `result` returns as it is. */
+  private final case class Done[+T](result: T) extends Attempt[T]
+  /** Publish `lines` at head + 1 and return `result` once they land.
+    * `rowIdKnown` feeds [[publish]]'s row-id stamping; `onLost` reclaims
+    * the files this attempt wrote when another writer took the version;
+    * `onLanded` is the post-commit follow-on. */
+  private final case class Publish[+T](lines: Seq[String], result: T,
+      rowIdKnown: Map[String, (Long, Long)] = Map.empty,
+      onLost: () => Unit = () => (),
+      onLanded: () => Unit = () => ()) extends Attempt[T]
+
+  /** The commit loop of every read-modify-write commit (PROTOCOL.md:
+    * plan against the head, publish the next version atomically,
+    * re-plan when another writer took it). Each attempt resolves the
+    * head snapshot, returns `done`'s result when it has one (work that
+    * is already in the table — checked ahead of the writer-support
+    * gate, so a replay returns rather than throws), refuses tables this
+    * writer cannot commit to, runs `plan` and publishes at head + 1.
+    * Ten lost races throw. `plan` yields [[Done]] for a no-op and must
+    * not `return`: a non-local return would escape this loop. */
+  private def commitOnHead[T](spark: SparkSession, table: String, op: String,
+      removesData: Boolean,
+      done: DeltaRead.DeltaSnapshot => Option[T] = (_: DeltaRead.DeltaSnapshot) => None)(
+      plan: DeltaRead.DeltaSnapshot => Attempt[T]): T = {
+    var attempt = 0
+    while (attempt < 10) {
+      val s = DeltaRead.snapshotAt(spark, table, DeltaRead.latestVersion(table))
+      val already = done(s)
+      if (already.isDefined) return already.get
+      validateWriterSupport(table, s, removesData)
+      plan(s) match {
+        case Done(r) => return r
+        case Publish(lines, result, rowIdKnown, onLost, onLanded) =>
+          if (publish(table, Some(s), s.version + 1, lines, rowIdKnown)) {
+            onLanded()
+            return result
+          }
+          onLost()
+      }
+      attempt += 1
+    }
+    throw new IllegalStateException(s"$op: lost 10 commit races on $table")
+  }
+
+  /** The protocol upgrade that lists writer feature `feature` (with
+    * `alsoWriter` and reader features `reader`), or Nil when the table
+    * already lists it in feature form. */
+  private def featureUpgrade(table: String, s: DeltaRead.DeltaSnapshot,
+      feature: String, reader: Set[String] = Set.empty,
+      alsoWriter: Set[String] = Set.empty): Seq[String] =
+    if (s.minWriterVersion >= 7 && s.writerFeatures.contains(feature)) Nil
+    else Seq(upgradeProtocolAction(table, s, reader, alsoWriter + feature))
 
   /** VERSION CHECKSUM (`_delta_log/<v>.crc`, the one-line JSON state
     * digest delta-io's OSS writer emits per commit): tableSizeBytes,
@@ -1304,12 +1340,8 @@ object DeltaWrite {
     * narrow physical values. Partition columns refuse (their values
     * live as strings in the log and re-type at read). */
   def widenColumnType(spark: SparkSession, table: String, column: String,
-      to: DataType): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+      to: DataType): Long =
+    commitOnHead(spark, table, "widenColumnType", removesData = false) { s =>
       val schema = s.schema.getOrElse(throw new IllegalStateException(
         s"widenColumnType: $table has no metaData schema"))
       require(schema.fieldNames.contains(column),
@@ -1330,23 +1362,17 @@ object DeltaWrite {
       val e = arr.addObject()
       e.put("fromType", protoTypeName(f.dataType))
       e.put("toType", protoTypeName(to))
-      e.put("tableVersion", v + 1)
+      e.put("tableVersion", s.version + 1)
       val newField = f.copy(dataType = to,
         metadata = Metadata.fromJson(mapper.writeValueAsString(metaNode)))
       val newSchema = StructType(schema.fields.updated(idx, newField))
       val now = System.currentTimeMillis()
-      val proto =
-        if (s.minWriterVersion >= 7 && s.writerFeatures.contains("typeWidening")) Nil
-        else Seq(upgradeProtocolAction(table, s,
-          Set("typeWidening"), Set("typeWidening")))
-      val lines = Seq(commitInfoAction("WIDEN COLUMN", now)) ++ proto :+
+      val lines = Seq(commitInfoAction("WIDEN COLUMN", now)) ++
+        featureUpgrade(table, s, "typeWidening", reader = Set("typeWidening")) :+
         metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
           newSchema.json, s.partitionColumns, now, s.configuration)
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"widenColumnType: lost 10 commit races on $table")
-  }
 
   /** ALTER COLUMN ... COMMENT — metaData-only commit updating the
     * field's `comment` metadata; `path` may name a nested field. */
@@ -1412,27 +1438,19 @@ object DeltaWrite {
   private def quotedPath(path: Seq[String]): String =
     path.map(p => s"`$p`").mkString(".")
 
-  /** Shared CAS loop for metaData-only schema commits that change no
+  /** [[commitOnHead]] for metaData-only schema commits that change no
     * column NAMES (comments, nullability) — works on plain AND mapped
     * tables, unlike [[alterMappedSchema]]. */
   private def alterSchemaCommit(spark: SparkSession, table: String, op: String)(
-      derive: DeltaRead.DeltaSnapshot => StructType): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+      derive: DeltaRead.DeltaSnapshot => StructType): Long =
+    commitOnHead(spark, table, op, removesData = false) { s =>
       require(s.schema.isDefined, s"$op: $table has no committed schema")
       val schema = derive(s)
       val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction(op, now),
+      Publish(Seq(commitInfoAction(op, now),
         metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
-          schema.json, s.partitionColumns, now, s.configuration))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+          schema.json, s.partitionColumns, now, s.configuration)), s.version + 1)
     }
-    throw new IllegalStateException(s"$op: lost 10 commit races on $table")
-  }
 
   // --- COLUMN DEFAULTS (PROTOCOL.md "Default Columns" /
   // allowColumnDefaults): a field's CURRENT_DEFAULT metadata holds a
@@ -1475,12 +1493,8 @@ object DeltaWrite {
     * `allowColumnDefaults`; later appends may omit the column.
     * `defaultSql = null` clears the default (DROP DEFAULT). */
   def setColumnDefault(spark: SparkSession, table: String, column: String,
-      defaultSql: String): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+      defaultSql: String): Long =
+    commitOnHead(spark, table, "setColumnDefault", removesData = false) { s =>
       val schema = s.schema.getOrElse(throw new IllegalStateException(
         s"setColumnDefault: $table has no metaData schema"))
       require(schema.fieldNames.contains(column),
@@ -1495,20 +1509,14 @@ object DeltaWrite {
         f.copy(metadata = newMeta)))
       val now = System.currentTimeMillis()
       val proto =
-        if (defaultSql == null ||
-            (s.minWriterVersion >= 7 &&
-              s.writerFeatures.contains("allowColumnDefaults"))) Nil
-        else Seq(upgradeProtocolAction(table, s, Set.empty,
-          Set("allowColumnDefaults")))
+        if (defaultSql == null) Nil
+        else featureUpgrade(table, s, "allowColumnDefaults")
       val lines = Seq(commitInfoAction(
         if (defaultSql == null) "DROP DEFAULT" else "SET DEFAULT", now)) ++ proto :+
         metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
           newSchema.json, s.partitionColumns, now, s.configuration)
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"setColumnDefault: lost 10 commit races on $table")
-  }
 
   /** Feature-form (3, 7) protocol with explicit lists. */
   private[io] def protocolFeatureAction(readerF: Set[String],
@@ -1686,6 +1694,32 @@ object DeltaWrite {
           case _ => col(c)
         }
       }: _*)
+    }
+  }
+
+  /** The column-mapping context a write stages under; None on a plain
+    * table. An existing mapped table (`s`) keeps its committed ids and
+    * physical names and counts on from its maxColumnId; a new table
+    * (`s` = None) maps under `createMode`. `evolve` — the schema an
+    * overwrite, a creation or ADD COLUMNS commits — keeps committed ids
+    * by logical name and gives new fields fresh ones. */
+  private def mappingCtx(table: String, s: Option[DeltaRead.DeltaSnapshot],
+      createMode: Option[String] = None,
+      evolve: Option[StructType] = None): Option[WriteMapping.Ctx] = {
+    val base: Option[(String, Option[StructType], Long)] = s match {
+      case Some(sn) if DeltaRead.ColumnMapping.active(sn.columnMappingMode) =>
+        val old = sn.schema.getOrElse(throw new IllegalStateException(
+          s"$table: column mapping with no metaData schema"))
+        Some((sn.columnMappingMode, Some(old), sn.configuration.get(WriteMapping.MaxIdKey)
+          .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(old))))
+      case Some(_) => None
+      case None => createMode.map((_, None, 0L))
+    }
+    base.map { case (mode, old, startMax) =>
+      evolve.fold(WriteMapping.Ctx(mode, old.get, startMax)) { in =>
+        val (merged, maxId) = WriteMapping.mergeSchema(in, old, startMax)
+        WriteMapping.Ctx(mode, merged, maxId)
+      }
     }
   }
 
@@ -1966,26 +2000,10 @@ object DeltaWrite {
     require(partBy.forall(df.columns.contains),
       s"partitionBy ${partBy.mkString(",")} not all present in " +
         s"DataFrame columns ${df.columns.mkString(",")}")
-    val mapCtx: Option[WriteMapping.Ctx] =
-      if (exists) {
-        val s = preSnap.get
-        if (!DeltaRead.ColumnMapping.active(s.columnMappingMode)) None
-        else {
-          val old = s.schema.getOrElse(throw new IllegalStateException(
-            s"$table: column mapping with no metaData schema"))
-          val startMax = s.configuration.get(WriteMapping.MaxIdKey)
-            .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(old))
-          if (replaceExisting) {
-            // overwrite is the schema-evolution path: carry committed
-            // ids/physical names forward, assign fresh ones to new fields
-            val (merged, newMax) = WriteMapping.mergeSchema(df.schema, Some(old), startMax)
-            Some(WriteMapping.Ctx(s.columnMappingMode, merged, newMax))
-          } else Some(WriteMapping.Ctx(s.columnMappingMode, old, startMax))
-        }
-      } else createMapping.map { m =>
-        val (mappedSchema, maxIdV) = WriteMapping.mergeSchema(df.schema, None, 0L)
-        WriteMapping.Ctx(m, mappedSchema, maxIdV)
-      }
+    // overwrite is the schema-evolution path: it carries committed
+    // ids/physical names forward and assigns fresh ones to new fields
+    val mapCtx = mappingCtx(table, preSnap, createMapping,
+      evolve = if (replaceExisting || !exists) Some(df.schema) else None)
     val stagedDf0 = mapCtx.map(c => WriteMapping.physicalizeDf(df, c.schema)).getOrElse(df)
     // delta.autoOptimize.optimizeWrite: right-size the batch's output
     // file count BEFORE staging (the write-side half of the
@@ -2250,26 +2268,19 @@ object DeltaWrite {
     * misread. [[appendShredded]] calls this before its first shredded
     * byte lands; fresh tables get the feature in their creation commit
     * instead. */
-  def enableVariantShredding(spark: SparkSession, table: String): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+  def enableVariantShredding(spark: SparkSession, table: String): Long =
+    commitOnHead(spark, table, "enableVariantShredding", removesData = false) { s =>
       if (s.readerFeatures.contains("variantShredding") &&
-          s.writerFeatures.contains("variantShredding")) return v
-      require(s.schema.exists(containsVariant),
-        s"enableVariantShredding: $table has no variant column")
-      val lines = Seq(commitInfoAction("UPGRADE PROTOCOL", System.currentTimeMillis()),
-        upgradeProtocolAction(table, s,
-          Set("variantType", "variantShredding"),
-          Set("variantType", "variantShredding")))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+          s.writerFeatures.contains("variantShredding")) Done(s.version)
+      else {
+        require(s.schema.exists(containsVariant),
+          s"enableVariantShredding: $table has no variant column")
+        Publish(Seq(commitInfoAction("UPGRADE PROTOCOL", System.currentTimeMillis()),
+          upgradeProtocolAction(table, s,
+            Set("variantType", "variantShredding"),
+            Set("variantType", "variantShredding"))), s.version + 1)
+      }
     }
-    throw new IllegalStateException(
-      s"enableVariantShredding: lost 10 commit races on $table")
-  }
 
   /** Append with Spark's VARIANT SHREDDING enabled for the staged
     * files: each variant column lands as a `typed_value` group (the
@@ -2728,12 +2739,8 @@ object DeltaWrite {
     * entries validate against their absolute source paths. Returns the
     * removed FileEntry list. */
   def fsck(spark: SparkSession, table: String,
-      dryRun: Boolean = false): Seq[DeltaRead.FileEntry] = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val snap = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, snap, removesData = true)
+      dryRun: Boolean = false): Seq[DeltaRead.FileEntry] =
+    commitOnHead(spark, table, "fsck", removesData = true) { snap =>
       // index-routed: per-file existence checks run EXECUTOR-side on
       // the Dataset tier — the driver receives only the missing
       // entries, never a 10M-file inventory to stat one by one
@@ -2743,20 +2750,18 @@ object DeltaWrite {
           f.dv.exists(d => (d.storageType == "u" || d.storageType == "p") &&
             !Files.exists(DeltaDv.dvFile(tbl, d)))
       }
-      if (missing.isEmpty || dryRun) return missing
-      val now = System.currentTimeMillis()
-      if (cdcEnabled(snap.configuration))
-        throw new UnsupportedOperationException(
-          s"fsck: $table enables change data feed — the lost rows cannot " +
-            "be emitted as change data (the files are gone); disable CDF " +
-            "or RESTORE to a version whose files survive")
-      val lines = Seq(commitInfoAction("FSCK", now)) ++
-        missing.map(f => removeAction(f.path, now))
-      if (publish(table, Some(snap), v + 1, lines)) return missing
-      attempt += 1
+      if (missing.isEmpty || dryRun) Done(missing)
+      else {
+        val now = System.currentTimeMillis()
+        if (cdcEnabled(snap.configuration))
+          throw new UnsupportedOperationException(
+            s"fsck: $table enables change data feed — the lost rows cannot " +
+              "be emitted as change data (the files are gone); disable CDF " +
+              "or RESTORE to a version whose files survive")
+        Publish(Seq(commitInfoAction("FSCK", now)) ++
+          missing.map(f => removeAction(f.path, now)), missing)
+      }
     }
-    throw new IllegalStateException(s"fsck: lost 10 commit races on $table")
-  }
 
   /** GENERATE symlink_format_manifest — the Presto/Trino/Athena
     * interop door: materialize the HEAD snapshot's live file list as
@@ -2895,7 +2900,7 @@ object DeltaWrite {
     * and loads only what remains. */
   def copyInto(spark: SparkSession, table: String, sourceDir: String,
       format: String = "parquet", pattern: Option[String] = None,
-      force: Boolean = false, maxRetries: Int = 10): CopyIntoResult = {
+      force: Boolean = false): CopyIntoResult = {
     require(tableExists(table),
       s"copyInto: $table is not a Delta table — CREATE it first (COPY INTO " +
         "appends; it does not infer a table)")
@@ -2937,7 +2942,7 @@ object DeltaWrite {
       finally st.close()
     }
     var attempt = 0
-    while (attempt < maxRetries) {
+    while (attempt < 10) {
       val snap = DeltaRead.snapshot(spark, table)
       val gen = snap.txns.getOrElse(appId, 0L)
       val (wm, ties) = snap.liveDomains.get(domain).map { c =>
@@ -2975,10 +2980,8 @@ object DeltaWrite {
         mapper.writeValueAsString(root)
       }
       val extra = (s: Option[DeltaRead.DeltaSnapshot]) =>
-        s.toSeq.flatMap { s0 =>
-          if (s0.minWriterVersion >= 7 && s0.writerFeatures.contains("domainMetadata")) Nil
-          else Seq(upgradeProtocolAction(table, s0, Set.empty, Set("domainMetadata")))
-        } :+ domainMetadataAction(domain, ledger, removed = false)
+        s.toSeq.flatMap(featureUpgrade(table, _, "domainMetadata")) :+
+          domainMetadataAction(domain, ledger, removed = false)
       commit(df, table, Nil, replaceExisting = false,
         txn = Some((appId, gen + 1)), extraActions = extra,
         opName = Some("COPY INTO")) match {
@@ -2997,7 +3000,7 @@ object DeltaWrite {
       }
     }
     throw new IllegalStateException(
-      s"copyInto: lost the ledger race on $table $maxRetries times — giving up")
+      s"copyInto: lost 10 ledger races on $table")
   }
 
   /** RESTORE the table to an earlier version — time travel made
@@ -3015,15 +3018,14 @@ object DeltaWrite {
     * when a needed data file or DV bitmap was vacuumed away — a
     * partial restore would silently drop rows. Returns the committed
     * version. */
-  def restore(spark: SparkSession, table: String, version: Long): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val head = DeltaRead.latestVersion(table)
-      require(version <= head, s"restore: version $version is ahead of head $head")
-      if (version == head) return head
+  def restore(spark: SparkSession, table: String, version: Long): Long =
+    commitOnHead(spark, table, "restore", removesData = true,
+      done = cur => {
+        require(version <= cur.version,
+          s"restore: version $version is ahead of head ${cur.version}")
+        if (version == cur.version) Some(cur.version) else None
+      }) { cur =>
       val target = DeltaRead.snapshotAt(spark, table, version)
-      val cur = DeltaRead.snapshotAt(spark, table, head)
-      validateWriterSupport(table, cur, removesData = true)
       // identity of a live entry = path + DV generation: a DV
       // transition restores as remove(new entry) + add(old entry)
       def key(f: DeltaRead.FileEntry) = (f.path, f.dv.map(_.pathOrInlineDv))
@@ -3121,13 +3123,9 @@ object DeltaWrite {
       // version; rows tracked only after `version` get fresh blocks
       val targetKnown = target.files.flatMap(f =>
         f.baseRowId.zip(f.defaultRowCommitVersion).map(f.path -> _)).toMap
-      if (publish(table, Some(cur), head + 1, lines, targetKnown))
-        return head + 1
-      dropStaged(table, cdcStaged)
-      attempt += 1
+      Publish(lines, cur.version + 1, rowIdKnown = targetKnown,
+        onLost = () => dropStaged(table, cdcStaged))
     }
-    throw new IllegalStateException(s"restore: lost 10 commit races on $table")
-  }
 
   /** Mark a stats JSON as carrying wide (possibly stale) bounds — the
     * protocol's `tightBounds: false` flag for files whose deletion
@@ -3218,11 +3216,8 @@ object DeltaWrite {
   private def deleteRows(spark: SparkSession, table: String,
       select: DataFrame => DataFrame): Long = {
     import spark.implicits._
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val snap = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, snap, removesData = true)
+    commitOnHead(spark, table, "deleteWhere", removesData = true) { snap =>
+      val v = snap.version
       // mapped tables delete fine: the lineage read resolves logical
       // names, and the re-added entries translate partitionValues /
       // stats keys back to PHYSICAL (the log's regime) on emission
@@ -3244,90 +3239,183 @@ object DeltaWrite {
         // which on a tiered table is a full driver materialization
         val touchedAbs = matched.map(_._1).distinct()
           .collect().toSet
-        if (touchedAbs.isEmpty) return v
-        val touched = touchedEntries(table, snap, touchedAbs, "DELETE")
-        val oldDvByAbs: Map[String, DeltaDv.Descriptor] = touched.collect {
-          case f if f.dv.isDefined =>
-            (DeltaRead.dataPath(table, f.path).toAbsolutePath.normalize().toString,
-              f.dv.get)
-        }.toMap
-        // one DV file per touched parquet file, written TASK-side; the
-        // lineage scan already excluded previously-deleted rows, so the
-        // new indexes merge disjointly with the existing bitmap — the
-        // broadcast map is bounded by the TOUCHED file count
-        val byAbsT = touched.map(f =>
-          (DeltaRead.dataPath(table, f.path).toAbsolutePath.normalize().toString, f))
-          .toMap
-        val d0 = matched.groupByKey(_._1).mapGroups { (file, it) =>
-          val fresh = it.map(_._2).toArray
-          val old = oldDvByAbs.get(file)
-            .map(d => DeltaDv.deletedRows(table, d)).getOrElse(Array.empty[Long])
-          val rows = (old ++ fresh).sorted
-          val d = DeltaDv.writeDvFile(table, rows.toIndexedSeq)
-          (file, d.pathOrInlineDv, d.offset.getOrElse(-1), d.sizeInBytes, d.cardinality)
-        }.collect()
-        (d0, byAbsT)
-      } finally matched.unpersist(blocking = false)
-      val (dvDescs, byAbs) = descs
-      if (dvDescs.isEmpty) return v
-      def dvOf(pid: String, off: Int, size: Int, card: Long) =
-        DeltaDv.Descriptor("u", pid, if (off < 0) None else Some(off), size, card)
-      // CDF-obligated tables record the erased rows as `_change_data`
-      // cdc files: the DV transition alone is not a change
-      // representation a feature-unaware CDC reader can interpret
-      val cdcStaged =
-        if (!cdcEnabled(snap.configuration)) Nil
-        else stageCdc(
-          doomed.drop(DeltaRead.LineageFile, DeltaRead.LineagePos)
-            .withColumn(DeltaRead.ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("delete")),
-          table, snap)
-      val now = System.currentTimeMillis()
-      val needsUpgrade = !(snap.minReaderVersion >= 3 &&
-        snap.readerFeatures.contains("deletionVectors"))
-      // the upgrade UNIONS the snapshot's feature list plus everything
-      // its legacy versions implied with deletionVectors — a table at
-      // writer version 3/4 must not lose checkConstraints /
-      // generatedColumns from its obligations on upgrade
-      val protoLine =
-        if (!needsUpgrade) Nil
-        else Seq(upgradeProtocolAction(table, snap,
-          extraReader = Set("deletionVectors"),
-          extraWriter = Set("deletionVectors")))
-      val fileLines = dvDescs.toSeq.flatMap { case (abs, pid, off, size, card) =>
-        val f = byAbs(abs)
-        val d = dvOf(pid, off, size, card)
-        val p = DeltaRead.dataPath(table, f.path)
-        // a DV covering every physical row = the file is logically
-        // empty: drop it from the table instead of masking 100% of it
-        val numRecords = f.stats.flatMap(s =>
-          try Option(mapper.readTree(s).get("numRecords")).map(_.asLong())
-          catch { case _: Exception => None })
-        if (numRecords.contains(card)) {
-          Files.deleteIfExists(DeltaDv.dvFile(table, d))
-          Seq(removeAction(f.path, now))
-        } else {
-          // snapshot partitionValues/stats keys are LOGICAL (the reader
-          // translated once); the log stores physical keys
-          val staged = Staged(f.path,
-            f.partitionValues.map { case (k, x) => physBy.getOrElse(k, k) -> x },
-            Files.size(p), Files.getLastModifiedTime(p).toMillis,
-            f.stats.map(s => DeltaRead.renameStatsKeys(wideBounds(s), physBy)))
-          Seq(removeAction(f.path, now), addAction(staged, dataChange = true, dv = Some(d)))
+        if (touchedAbs.isEmpty) None
+        else {
+          val touched = touchedEntries(table, snap, touchedAbs, "DELETE")
+          val oldDvByAbs: Map[String, DeltaDv.Descriptor] = touched.collect {
+            case f if f.dv.isDefined =>
+              (DeltaRead.dataPath(table, f.path).toAbsolutePath.normalize().toString,
+                f.dv.get)
+          }.toMap
+          // one DV file per touched parquet file, written TASK-side; the
+          // lineage scan already excluded previously-deleted rows, so the
+          // new indexes merge disjointly with the existing bitmap — the
+          // broadcast map is bounded by the TOUCHED file count
+          val byAbsT = touched.map(f =>
+            (DeltaRead.dataPath(table, f.path).toAbsolutePath.normalize().toString, f))
+            .toMap
+          val d0 = matched.groupByKey(_._1).mapGroups { (file, it) =>
+            val fresh = it.map(_._2).toArray
+            val old = oldDvByAbs.get(file)
+              .map(d => DeltaDv.deletedRows(table, d)).getOrElse(Array.empty[Long])
+            val rows = (old ++ fresh).sorted
+            val d = DeltaDv.writeDvFile(table, rows.toIndexedSeq)
+            (file, d.pathOrInlineDv, d.offset.getOrElse(-1), d.sizeInBytes, d.cardinality)
+          }.collect()
+          Some((d0, byAbsT))
         }
+      } finally matched.unpersist(blocking = false)
+      descs.filter(_._1.nonEmpty) match {
+        case None => Done(v)
+        case Some((dvDescs, byAbs)) =>
+          def dvOf(pid: String, off: Int, size: Int, card: Long) =
+            DeltaDv.Descriptor("u", pid, if (off < 0) None else Some(off), size, card)
+          // CDF-obligated tables record the erased rows as `_change_data`
+          // cdc files: the DV transition alone is not a change
+          // representation a feature-unaware CDC reader can interpret
+          val cdcStaged =
+            if (!cdcEnabled(snap.configuration)) Nil
+            else stageCdc(
+              doomed.drop(DeltaRead.LineageFile, DeltaRead.LineagePos)
+                .withColumn(DeltaRead.ChangeTypeCol,
+                  org.apache.spark.sql.functions.lit("delete")),
+              table, snap)
+          val now = System.currentTimeMillis()
+          val needsUpgrade = !(snap.minReaderVersion >= 3 &&
+            snap.readerFeatures.contains("deletionVectors"))
+          // the upgrade UNIONS the snapshot's feature list plus everything
+          // its legacy versions implied with deletionVectors — a table at
+          // writer version 3/4 must not lose checkConstraints /
+          // generatedColumns from its obligations on upgrade
+          val protoLine =
+            if (!needsUpgrade) Nil
+            else Seq(upgradeProtocolAction(table, snap,
+              extraReader = Set("deletionVectors"),
+              extraWriter = Set("deletionVectors")))
+          val fileLines = dvDescs.toSeq.flatMap { case (abs, pid, off, size, card) =>
+            val f = byAbs(abs)
+            val d = dvOf(pid, off, size, card)
+            val p = DeltaRead.dataPath(table, f.path)
+            // a DV covering every physical row = the file is logically
+            // empty: drop it from the table instead of masking 100% of it
+            val numRecords = f.stats.flatMap(s =>
+              try Option(mapper.readTree(s).get("numRecords")).map(_.asLong())
+              catch { case _: Exception => None })
+            if (numRecords.contains(card)) {
+              Files.deleteIfExists(DeltaDv.dvFile(table, d))
+              Seq(removeAction(f.path, now))
+            } else {
+              // snapshot partitionValues/stats keys are LOGICAL (the reader
+              // translated once); the log stores physical keys
+              val staged = Staged(f.path,
+                f.partitionValues.map { case (k, x) => physBy.getOrElse(k, k) -> x },
+                Files.size(p), Files.getLastModifiedTime(p).toMillis,
+                f.stats.map(s => DeltaRead.renameStatsKeys(wideBounds(s), physBy)))
+              Seq(removeAction(f.path, now), addAction(staged, dataChange = true, dv = Some(d)))
+            }
+          }
+          val lines = Seq(commitInfoAction("DELETE", now)) ++ protoLine ++
+            fileLines ++ cdcStaged.map(cdcAction)
+          // a lost race reclaims this attempt's DV + cdc files
+          Publish(lines, v + 1, onLost = () => {
+            dvDescs.foreach { case (_, pid, off, size, card) =>
+              Files.deleteIfExists(DeltaDv.dvFile(table, dvOf(pid, off, size, card)))
+            }
+            dropStaged(table, cdcStaged)
+          })
       }
-      val lines = Seq(commitInfoAction("DELETE", now)) ++ protoLine ++
-        fileLines ++ cdcStaged.map(cdcAction)
-      if (publish(table, Some(snap), v + 1, lines)) return v + 1
-      // lost the CAS race: reclaim this attempt's DV + cdc files, replan
-      dvDescs.foreach { case (_, pid, off, size, card) =>
-        Files.deleteIfExists(DeltaDv.dvFile(table, dvOf(pid, off, size, card)))
-      }
-      dropStaged(table, cdcStaged)
-      attempt += 1
     }
-    throw new IllegalStateException(s"deleteWhere: lost 10 commit races on $table")
   }
+
+  /** What a copy-on-write rewrite reads of the files it replaces:
+    * `rows` is their lineage-bearing read at the head, carrying the
+    * materialized row-id columns on a row-tracking table. A surviving
+    * row keeps its stable id by selecting `ids` along; [[withNullIds]]
+    * gives inserted rows the same columns, null (they resolve against
+    * their new file's id block). `cdc`: the table records change rows. */
+  private final class Touched(read: => DataFrame, idCols: Seq[String],
+      val cdc: Boolean) {
+    import org.apache.spark.sql.functions.{col, lit}
+    lazy val rows: DataFrame = read
+    val ids: Seq[org.apache.spark.sql.Column] = idCols.map(col)
+    def withNullIds(df: DataFrame): DataFrame =
+      idCols.foldLeft(df)((d, c) => d.withColumn(c, lit(null).cast("long")))
+  }
+
+  /** A copy-on-write plan: the files to replace, and the batch staged in
+    * their place (with, on a CDF table, its change rows) derived from
+    * their [[Touched]] read. */
+  private final case class Rewrite(touched: Seq[DeltaRead.FileEntry],
+      rows: Touched => (DataFrame, Option[DataFrame]))
+
+  /** The copy-on-write core under [[mergeAdvanced]], [[updateWhere]] and
+    * [[replaceWhere]], one [[commitOnHead]] attempt at a time. `plan`
+    * runs the caller's pre-checks and pass 1 against the head snapshot
+    * and its committed schema, and names the touched files (None:
+    * nothing to do, the head version returns). The core re-reads ONLY
+    * those files, validates CHECK constraints, invariants and generated
+    * columns on the batch (generated values are checked, never silently
+    * recomputed), stages it — physical names on a mapped table,
+    * variant shredding as the protocol declares — with a CDF table's
+    * change rows under `_change_data`, and commits remove(touched) +
+    * add(staged) + cdc in one version. A lost race drops this attempt's
+    * staged files and re-plans against the winner; a landed commit runs
+    * the autoCompact follow-on. A `txn` (appId, version) pair rides in
+    * the commit as a SetTransaction; a pair at or below the table's mark
+    * means the batch already landed, and the head version returns. */
+  private def rewriteOnHead(spark: SparkSession, table: String, op: String,
+      commitOp: String, txn: Option[(String, Long)] = None)(
+      plan: (DeltaRead.DeltaSnapshot, StructType) => Option[Rewrite]): Long =
+    commitOnHead(spark, table, op, removesData = true,
+      done = s => txn.collect {
+        case (appId, ver) if s.txns.get(appId).exists(_ >= ver) => s.version
+      }) { snap =>
+      val v = snap.version
+      val committed = snap.schema.getOrElse(throw new IllegalStateException(
+        s"$op: $table has no committed schema"))
+      plan(snap, committed) match {
+        case None => Done(v)
+        case Some(Rewrite(touched, rowsOf)) =>
+          val idCols: Seq[String] =
+            if (!rowTrackingOn(snap)) Nil
+            else snap.configuration.get(MatRowIdKey).zip(snap.configuration.get(MatRcvKey))
+              .toSeq.flatMap { case (a, b) => Seq(a, b) }
+          val paths = touched.map(_.path).toSet
+          val (batch, cdcRows) = rowsOf(new Touched(
+            if (idCols.nonEmpty) DeltaRead.readFilesForRewrite(spark, table, v, paths)
+            else DeltaRead.readFilesWithLineage(spark, table, v, paths),
+            idCols, cdcEnabled(snap.configuration)))
+          enforceConstraints(batch, snap.configuration, table)
+          enforceInvariants(batch, committed, table)
+          applyGeneratedColumns(batch, committed, table)
+          // the materialized row-id columns are PASSENGERS, not schema
+          // columns: under column mapping they ride physicalizeDf's
+          // passthrough (they already carry their final physical-only
+          // names) instead of being select-dropped with the rename
+          val mapCtx = mappingCtx(table, Some(snap))
+          val stagedDf = mapCtx
+            .map(c => WriteMapping.physicalizeDf(batch, c.schema, passthrough = idCols))
+            .getOrElse(batch)
+          val stagedPartitionBy = mapCtx
+            .map(c => snap.partitionColumns.map(c.physByLogical))
+            .getOrElse(snap.partitionColumns)
+          val staged = shredGuard(spark, Some(snap), stagedDf.schema)(
+            stage(stagedDf, table, stagedPartitionBy))
+          val cdcStaged = shredGuard(spark, Some(snap), stagedDf.schema)(
+            cdcRows.map(stageCdc(_, table, snap)).getOrElse(Nil))
+          val now = System.currentTimeMillis()
+          val lines = Seq(commitInfoAction(commitOp, now)) ++
+            txn.map { case (appId, ver) => txnAction(appId, ver, now) } ++
+            touched.map(f => removeAction(f.path, now)) ++
+            staged.map(s => addAction(s)) ++
+            cdcStaged.map(cdcAction)
+          Publish(lines, v + 1,
+            onLost = () => { dropStaged(table, staged); dropStaged(table, cdcStaged) },
+            // post-commit half of auto optimize (Databricks applies it to
+            // ANY file-adding write, row rewrites included)
+            onLanded = () => maybeAutoCompact(spark, table, snap.configuration, staged))
+      }
+    }
 
   /** Optional MERGE clause conditions, Delta's three-clause surface:
     * `WHEN MATCHED [AND updateWhen] UPDATE SET *`, `WHEN MATCHED AND
@@ -3375,7 +3463,7 @@ object DeltaWrite {
     * mark skips the merge entirely — the primitive incremental view
     * maintenance ([[graft.views.IncrementalView]]) resumes on. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
-      keys: Seq[String], maxRetries: Int = 10,
+      keys: Seq[String],
       clauses: MergeClauses = MergeClauses(),
       txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
@@ -3407,7 +3495,7 @@ object DeltaWrite {
         MergeUpdateWhen(Some(mergeSrc("__m_upd")),
           cols.filterNot(keys.contains).map(c => c -> mergeSrc(c)))),
       notMatched = Seq(MergeInsertWhen(Some(col("__m_ins")), cols.map(c => c -> col(c)))),
-      maxRetries = maxRetries, txn = txn)
+      txn = txn)
   }
 
   /** Source-column prefix for [[mergeAdvanced]] clause expressions:
@@ -3485,24 +3573,20 @@ object DeltaWrite {
     * Cost O(one key scan + source + touched files). Each source-derived
     * frame (pass-1 keys, pass-2 join side, inserts) is evaluated once
     * per attempt; a CDF table's change rows re-read the touched files
-    * and the inserts once more for the cdc staging. Row-tracking ids
-    * are preserved through the rewrite; CDF-obligated tables record
-    * exact update_preimage/update_postimage/delete/insert rows;
-    * constraints, invariants and generated columns are validated on
-    * the staged batch. Duplicate source keys refuse when matched
-    * clauses exist (two source rows updating one target row is
-    * nondeterministic). A lost commit CAS re-plans from
-    * scratch against the winner's snapshot. An optional `txn` (appId,
-    * version) pair rides in the commit as a SetTransaction action; a
-    * pair at or below the table's mark skips the merge (re-checked on
-    * every attempt). Returns the committed version, or the current one
-    * when there is nothing to do. */
+    * and the inserts once more for the cdc staging, as exact
+    * update_preimage/update_postimage/delete/insert rows. Duplicate
+    * source keys refuse when matched clauses exist (two source rows
+    * updating one target row is nondeterministic). Validation,
+    * staging, the commit and its lost-race re-plan are the
+    * copy-on-write core's ([[rewriteOnHead]]), which also carries the
+    * optional `txn` (appId, version) SetTransaction: a pair at or below
+    * the table's mark skips the merge. Returns the committed version,
+    * or the current one when there is nothing to do. */
   def mergeAdvanced(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String],
       matched: Seq[MergeWhen] = Nil,
       notMatched: Seq[MergeInsertWhen] = Nil,
       notMatchedBySource: Seq[MergeWhen] = Nil,
-      maxRetries: Int = 10,
       txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, count => fcount, lit, when}
     import org.apache.spark.sql.Column
@@ -3584,21 +3668,7 @@ object DeltaWrite {
         (if (matchedSrcOnly) matched.map(m => fires(condOf(m))).reduce(_ || _)
          else lit(true)).as(FireCol): _*)
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = DeltaRead.latestVersion(table)
-      val snap = DeltaRead.snapshotAt(spark, table, v)
-      // exactly-once replay guard (same contract as appendOnce): a
-      // (appId, version) already at or below the table's recorded
-      // SetTransaction mark means this batch landed — skip BEFORE
-      // staging anything, re-checked on every CAS retry so two racing
-      // replays cannot both commit
-      txn.foreach { case (appId, ver) =>
-        if (snap.txns.get(appId).exists(_ >= ver)) return v
-      }
-      validateWriterSupport(table, snap, removesData = true)
-      val committed = snap.schema.getOrElse(throw new IllegalStateException(
-        s"mergeAdvanced: $table has no committed schema"))
+    rewriteOnHead(spark, table, "mergeAdvanced", "MERGE", txn) { (snap, committed) =>
       require(committed.fieldNames.forall(!_.startsWith(MergeSrcPrefix)),
         s"mergeAdvanced: table columns may not start with $MergeSrcPrefix")
       updateAssigns.values.flatten.map(_._1).foreach(n =>
@@ -3607,15 +3677,8 @@ object DeltaWrite {
       notMatched.flatMap(_.assignments.map(_._1)).foreach(n =>
         require(committed.fieldNames.exists(_.equalsIgnoreCase(n)),
           s"mergeAdvanced: INSERT names unknown column '$n'"))
-      val mapCtx =
-        if (!DeltaRead.ColumnMapping.active(snap.columnMappingMode)) None
-        else {
-          val startMax = snap.configuration.get(WriteMapping.MaxIdKey)
-            .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(committed))
-          Some(WriteMapping.Ctx(snap.columnMappingMode, committed, startMax))
-        }
       val outCols = committed.fields.toSeq.map(f => col(f.name))
-      val target = DeltaRead.readVersionWithLineage(spark, table, v)
+      val target = DeltaRead.readVersionWithLineage(spark, table, snap.version)
       // --- pass 1: the ONE key scan, materialized as the match set ---
       val matchSet: Option[DataFrame] =
         if (matched.isEmpty && notMatched.isEmpty) None
@@ -3645,11 +3708,6 @@ object DeltaWrite {
       val touched = touchedEntries(table, snap,
         (if (matched.isEmpty) Set.empty[String] else firingFiles) ++ touchedBySource,
         "mergeAdvanced")
-      val matPair: Option[(String, String)] =
-        if (rowTrackingOn(snap))
-          snap.configuration.get(MatRowIdKey).zip(snap.configuration.get(MatRcvKey))
-        else None
-      val matSel = matPair.toSeq.flatMap { case (a, b) => Seq(col(a), col(b)) }
       // --- inserts: source rows an insert clause accepts, minus the
       // match set (O(matched rows): broadcast when its counted size fits)
       val inserts0Opt: Option[DataFrame] = matchSet.filter(_ => notMatched.nonEmpty).map { ms =>
@@ -3677,29 +3735,17 @@ object DeltaWrite {
       }
       // the emptiness probe runs only when no file is touched: otherwise
       // the staged batch is the inserts' one evaluation
-      if (touched.isEmpty && inserts0Opt.forall(_.isEmpty)) return v // nothing to do
-      val insertsOpt = inserts0Opt.map { i0 =>
-        matPair.fold(i0) { case (a, b) =>
-          i0.withColumn(a, lit(null).cast("long"))
-            .withColumn(b, lit(null).cast("long"))
-        }
-      }
-      // --- pass 2: rewrite ONLY the touched files through the fates ---
-      val wantCdc = cdcEnabled(snap.configuration)
-      val ctCol = DeltaRead.ChangeTypeCol
-      def tagged(df: DataFrame, ct: String): DataFrame =
-        df.withColumn(ctCol, lit(ct))
-      val (batch, cdcRows: Option[DataFrame]) =
+      if (touched.isEmpty && inserts0Opt.forall(_.isEmpty)) None // nothing to do
+      else Some(Rewrite(touched, { t =>
+        val insertsOpt = inserts0Opt.map(t.withNullIds)
+        // --- pass 2: rewrite ONLY the touched files through the fates ---
+        val ctCol = DeltaRead.ChangeTypeCol
+        def tagged(df: DataFrame, ct: String): DataFrame =
+          df.withColumn(ctCol, lit(ct))
         if (touched.isEmpty) {
           (insertsOpt.get,
-            if (wantCdc) Some(tagged(inserts0Opt.get, "insert")) else None)
+            if (t.cdc) Some(tagged(inserts0Opt.get, "insert")) else None)
         } else {
-          val tTouched = matPair match {
-            case Some(_) => DeltaRead.readFilesForRewrite(spark, table, v,
-              touched.map(_.path).toSet)
-            case None => DeltaRead.readFilesWithLineage(spark, table, v,
-              touched.map(_.path).toSet)
-          }
           // without matched clauses no expression reads source columns
           // — join against the DISTINCT key set, so a duplicate-keyed
           // source (legal in SQL for BY-SOURCE-only merges) cannot
@@ -3708,7 +3754,7 @@ object DeltaWrite {
           val srcPfx = prefixed(joinSrc).withColumn(PresentCol, lit(true))
           val joinCond = keys.map(k => col(k) === col(MergeSrcPrefix + k))
             .reduce(_ && _)
-          val joined = tTouched.join(Joins.maybeBroadcast(srcPfx), joinCond, "left_outer")
+          val joined = t.rows.join(Joins.maybeBroadcast(srcPfx), joinCond, "left_outer")
             .withColumn(FateCol,
               when(col(PresentCol).isNotNull, whenChain(matched, 0))
                 .otherwise(whenChain(notMatchedBySource, bySourceBase)))
@@ -3728,9 +3774,9 @@ object DeltaWrite {
                 }
             }
           val rewritten = survivors.select(
-            committed.fields.toSeq.map(f => newVal(f).as(f.name)) ++ matSel: _*)
+            committed.fields.toSeq.map(f => newVal(f).as(f.name)) ++ t.ids: _*)
           val cdc =
-            if (!wantCdc) None
+            if (!t.cdc) None
             else {
               def fateIn(fates: Seq[Int]): DataFrame =
                 if (fates.isEmpty) joined.limit(0)
@@ -3748,42 +3794,8 @@ object DeltaWrite {
             }
           (insertsOpt.fold(rewritten)(rewritten.unionByName), cdc)
         }
-      enforceConstraints(batch, snap.configuration, table)
-      enforceInvariants(batch, committed, table)
-      // merge batches always carry every column: generated ones are
-      // validated (never recomputed — the kept rows already conform)
-      applyGeneratedColumns(batch, committed, table)
-      // the materialized row-id columns are PASSENGERS, not schema
-      // columns: under column mapping they ride physicalizeDf's
-      // passthrough (they already carry their final physical-only
-      // names) instead of being select-dropped with the rename
-      val stagedDf = mapCtx.map(c => WriteMapping.physicalizeDf(batch, c.schema,
-          passthrough = matPair.toSeq.flatMap { case (a, b) => Seq(a, b) }))
-        .getOrElse(batch)
-      val stagedPartitionBy = mapCtx.map(c => snap.partitionColumns.map(c.physByLogical))
-        .getOrElse(snap.partitionColumns)
-      val staged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        stage(stagedDf, table, stagedPartitionBy))
-      val cdcStaged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        cdcRows.map(stageCdc(_, table, snap)).getOrElse(Nil))
-      val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction("MERGE", now)) ++
-        txn.map { case (appId, ver) => txnAction(appId, ver, now) } ++
-        touched.map(f => removeAction(f.path, now)) ++
-        staged.map(s => addAction(s)) ++
-        cdcStaged.map(cdcAction)
-      if (publish(table, Some(snap), v + 1, lines)) {
-        // post-commit half of auto optimize (Databricks applies it to
-        // ANY file-adding write, row rewrites included)
-        maybeAutoCompact(spark, table, snap.configuration, staged)
-        return v + 1
-      }
-      dropStaged(table, staged)
-      dropStaged(table, cdcStaged)
-      attempt += 1 // lost the CAS race: replan against the winner
+      }))
     }
-    throw new IllegalStateException(
-      s"mergeAdvanced: lost $maxRetries commit races on $table")
   }
 
   /** Row-level UPDATE — SQL `UPDATE t SET c = expr, ... WHERE cond` as
@@ -3795,8 +3807,8 @@ object DeltaWrite {
     * UPDATE must not touch a row whose condition is unknown) and
     * updated (every assignment evaluated simultaneously over the
     * PRE-image, the SQL contract — `SET a = b, b = a` swaps), and
-    * stages kept ∪ updated. The commit removes the touched files and
-    * adds the staged batch — cost O(touched), never O(table).
+    * stages kept ∪ updated through the copy-on-write core
+    * ([[rewriteOnHead]]) — cost O(touched), never O(table).
     *
     * `predicate` and assignment values must be deterministic (they are
     * evaluated in both passes). Generated columns are refused as
@@ -3804,28 +3816,20 @@ object DeltaWrite {
     * generation-source column fails validation unless the generated
     * column is recomputed consistently, which this writer does not do
     * silently. Deletion vectors on touched files are
-    * honored (masked rows neither update nor resurrect); row-tracking
-    * tables preserve stable row ids through the rewrite; CDF-obligated
+    * honored (masked rows neither update nor resurrect); CDF-obligated
     * tables record exact `update_preimage`/`update_postimage` cdc rows.
     * Returns the committed version — or the current version unchanged
     * when no row matches. */
   def updateWhere(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
-      assignments: Seq[(String, org.apache.spark.sql.Column)],
-      maxRetries: Int = 10): Long = {
+      assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(assignments.nonEmpty, "updateWhere: no assignments")
     val dup = assignments.groupBy(_._1.toLowerCase).collect {
       case (n, as) if as.size > 1 => n }
     require(dup.isEmpty,
       s"updateWhere: duplicate assignment targets ${dup.mkString(",")}")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = DeltaRead.latestVersion(table)
-      val snap = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, snap, removesData = true)
-      val committed = snap.schema.getOrElse(throw new IllegalStateException(
-        s"updateWhere: $table has no committed schema"))
+    rewriteOnHead(spark, table, "updateWhere", "UPDATE") { (snap, committed) =>
       // resolve targets case-insensitively against the committed schema
       val byLower = committed.fieldNames.map(n => n.toLowerCase -> n).toMap
       val assigns: Map[String, org.apache.spark.sql.Column] =
@@ -3841,86 +3845,30 @@ object DeltaWrite {
             s"updateWhere: '$n' is a generated column of $table — its " +
               "value derives from the generation expression")
       }
-      val mapCtx =
-        if (!DeltaRead.ColumnMapping.active(snap.columnMappingMode)) None
-        else {
-          val startMax = snap.configuration.get(WriteMapping.MaxIdKey)
-            .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(committed))
-          Some(WriteMapping.Ctx(snap.columnMappingMode, committed, startMax))
-        }
       val outCols = committed.fields.toSeq.map(f => col(f.name))
       // the SQL three-valued contract in two-valued form: TRUE updates,
       // FALSE and NULL keep
       val hit = coalesce(predicate, lit(false))
       // pass 1: lineage scan — the touched-file set only
-      val touchedAbs = DeltaRead.readVersionWithLineage(spark, table, v)
+      val touchedAbs = DeltaRead.readVersionWithLineage(spark, table, snap.version)
         .where(hit).select(col(DeltaRead.LineageFile)).distinct()
         .collect().map(_.getString(0)).toSet
-      if (touchedAbs.isEmpty) return v // no row matches: no empty commit
-      val touched = touchedEntries(table, snap, touchedAbs, "updateWhere")
-      val matPair: Option[(String, String)] =
-        if (rowTrackingOn(snap))
-          snap.configuration.get(MatRowIdKey).zip(snap.configuration.get(MatRcvKey))
-        else None
-      val matSel = matPair.toSeq.flatMap { case (a, b) => Seq(col(a), col(b)) }
-      // pass 2: re-read ONLY the touched files
-      val tTouched = matPair match {
-        case Some(_) => DeltaRead.readFilesForRewrite(spark, table, v,
-          touched.map(_.path).toSet)
-        case None => DeltaRead.readFilesWithLineage(spark, table, v,
-          touched.map(_.path).toSet)
-      }
-      // every assignment sees the PRE-image: one simultaneous select
-      val postCols = committed.fields.toSeq.map(f =>
-        assigns.getOrElse(f.name, col(f.name)).as(f.name))
-      val kept = tTouched.where(!hit).select(outCols ++ matSel: _*)
-      val pre = tTouched.where(hit)
-      val updated = pre.select(postCols ++ matSel: _*)
-      val batch = kept.unionByName(updated)
-      val wantCdc = cdcEnabled(snap.configuration)
-      val ctCol = DeltaRead.ChangeTypeCol
-      val cdcRows: Option[DataFrame] =
-        if (!wantCdc) None
-        else Some(pre.select(outCols: _*)
-          .withColumn(ctCol, lit("update_preimage"))
-          .unionByName(pre.select(postCols: _*)
-            .withColumn(ctCol, lit("update_postimage"))))
-      enforceConstraints(batch, snap.configuration, table)
-      enforceInvariants(batch, committed, table)
-      // generated columns are validated, never silently recomputed: an
-      // update that breaks source↔generated consistency is refused
-      applyGeneratedColumns(batch, committed, table)
-      // the materialized row-id columns are PASSENGERS, not schema
-      // columns: under column mapping they ride physicalizeDf's
-      // passthrough (they already carry their final physical-only
-      // names) instead of being select-dropped with the rename
-      val stagedDf = mapCtx.map(c => WriteMapping.physicalizeDf(batch, c.schema,
-          passthrough = matPair.toSeq.flatMap { case (a, b) => Seq(a, b) }))
-        .getOrElse(batch)
-      val stagedPartitionBy = mapCtx
-        .map(c => snap.partitionColumns.map(c.physByLogical))
-        .getOrElse(snap.partitionColumns)
-      val staged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        stage(stagedDf, table, stagedPartitionBy))
-      val cdcStaged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        cdcRows.map(stageCdc(_, table, snap)).getOrElse(Nil))
-      val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction("UPDATE", now)) ++
-        touched.map(f => removeAction(f.path, now)) ++
-        staged.map(s => addAction(s)) ++
-        cdcStaged.map(cdcAction)
-      if (publish(table, Some(snap), v + 1, lines)) {
-        // post-commit half of auto optimize (Databricks applies it to
-        // ANY file-adding write, row rewrites included)
-        maybeAutoCompact(spark, table, snap.configuration, staged)
-        return v + 1
-      }
-      dropStaged(table, staged)
-      dropStaged(table, cdcStaged)
-      attempt += 1 // lost the CAS race: replan against the winner
+      if (touchedAbs.isEmpty) None // no row matches: no empty commit
+      else Some(Rewrite(touchedEntries(table, snap, touchedAbs, "updateWhere"), { t =>
+        // every assignment sees the PRE-image: one simultaneous select
+        val postCols = committed.fields.toSeq.map(f =>
+          assigns.getOrElse(f.name, col(f.name)).as(f.name))
+        val pre = t.rows.where(hit)
+        val batch = t.rows.where(!hit).select(outCols ++ t.ids: _*)
+          .unionByName(pre.select(postCols ++ t.ids: _*))
+        val ctCol = DeltaRead.ChangeTypeCol
+        (batch, if (!t.cdc) None
+          else Some(pre.select(outCols: _*)
+            .withColumn(ctCol, lit("update_preimage"))
+            .unionByName(pre.select(postCols: _*)
+              .withColumn(ctCol, lit("update_postimage")))))
+      }))
     }
-    throw new IllegalStateException(
-      s"updateWhere: lost $maxRetries commit races on $table")
   }
 
   /** REPLACE WHERE — `INSERT OVERWRITE t PARTITION (p = 'x')` and
@@ -3932,7 +3880,8 @@ object DeltaWrite {
     * partition-aligned predicate, partition pruning makes this a
     * metadata-sized scan); pass 2 re-reads ONLY those files and keeps
     * their non-matching rows (three-valued: NULL keeps, like UPDATE);
-    * the commit removes the touched files and adds kept ∪ df. Files
+    * the copy-on-write core ([[rewriteOnHead]]) stages kept ∪ df in
+    * their place. Files
     * with no matching row are untouched bytes. The incoming frame must
     * match the committed schema (this is a row-replacement, not the
     * schema-evolution overwrite); CDF-obligated tables record exact
@@ -3940,7 +3889,7 @@ object DeltaWrite {
     * predicate match with an empty `df` is a no-op (current version
     * returned). */
   def replaceWhere(spark: SparkSession, table: String, df: DataFrame,
-      predicate: org.apache.spark.sql.Column, maxRetries: Int = 10): Long = {
+      predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     // every incoming row must SATISFY the predicate (upstream Delta's
     // default-on replaceWhere constraint check): a reload frame carrying
@@ -3960,26 +3909,13 @@ object DeltaWrite {
         "replacement predicate — they would silently land in partitions " +
         "this commit claims to leave untouched. Filter the frame to the " +
         "predicate (or widen the predicate) first.")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = DeltaRead.latestVersion(table)
-      val snap = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, snap, removesData = true)
-      val committed = snap.schema.getOrElse(throw new IllegalStateException(
-        s"replaceWhere: $table has no committed schema"))
+    rewriteOnHead(spark, table, "replaceWhere", "REPLACE WHERE") { (snap, committed) =>
       require(schemaMatches(committed, df.schema),
         s"replaceWhere: frame must match the committed schema — " +
           s"committed ${committed.json}, incoming ${df.schema.json}")
-      val mapCtx =
-        if (!DeltaRead.ColumnMapping.active(snap.columnMappingMode)) None
-        else {
-          val startMax = snap.configuration.get(WriteMapping.MaxIdKey)
-            .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(committed))
-          Some(WriteMapping.Ctx(snap.columnMappingMode, committed, startMax))
-        }
       val outCols = committed.fields.toSeq.map(f => col(f.name))
       val hit = coalesce(predicate, lit(false))
-      val touchedAbs = DeltaRead.readVersionWithLineage(spark, table, v)
+      val touchedAbs = DeltaRead.readVersionWithLineage(spark, table, snap.version)
         .where(hit).select(col(DeltaRead.LineageFile)).distinct()
         .collect().map(_.getString(0)).toSet
       // assert_true returns NULL when the row satisfies the predicate
@@ -3992,68 +3928,19 @@ object DeltaWrite {
           lit("replaceWhere: a materialized row does NOT match the " +
             "replacement predicate — the source frame changed between " +
             "the pre-check and the staged write")).isNull)
-      if (touchedAbs.isEmpty && newRows.isEmpty) return v
-      val touched = touchedEntries(table, snap, touchedAbs, "replaceWhere")
-      val matPair: Option[(String, String)] =
-        if (rowTrackingOn(snap))
-          snap.configuration.get(MatRowIdKey).zip(snap.configuration.get(MatRcvKey))
-        else None
-      val matSel = matPair.toSeq.flatMap { case (a, b) => Seq(col(a), col(b)) }
-      val tTouched = matPair match {
-        case Some(_) => DeltaRead.readFilesForRewrite(spark, table, v,
-          touched.map(_.path).toSet)
-        case None => DeltaRead.readFilesWithLineage(spark, table, v,
-          touched.map(_.path).toSet)
-      }
-      val kept = tTouched.where(!hit).select(outCols ++ matSel: _*)
-      // inserted rows of a row-tracking table carry null materialized
-      // ids and resolve positionally against their new file's block
-      val inserts = matPair.fold(newRows) { case (a, b) =>
-        newRows.withColumn(a, lit(null).cast("long"))
-          .withColumn(b, lit(null).cast("long"))
-      }
-      val batch = kept.unionByName(inserts)
-      val wantCdc = cdcEnabled(snap.configuration)
-      val ctCol = DeltaRead.ChangeTypeCol
-      val cdcRows: Option[DataFrame] =
-        if (!wantCdc) None
-        else Some(tTouched.where(hit).select(outCols: _*)
-          .withColumn(ctCol, lit("delete"))
-          .unionByName(newRows.withColumn(ctCol, lit("insert"))))
-      enforceConstraints(batch, snap.configuration, table)
-      enforceInvariants(batch, committed, table)
-      applyGeneratedColumns(batch, committed, table)
-      // the materialized row-id columns are PASSENGERS, not schema
-      // columns: under column mapping they ride physicalizeDf's
-      // passthrough (they already carry their final physical-only
-      // names) instead of being select-dropped with the rename
-      val stagedDf = mapCtx.map(c => WriteMapping.physicalizeDf(batch, c.schema,
-          passthrough = matPair.toSeq.flatMap { case (a, b) => Seq(a, b) }))
-        .getOrElse(batch)
-      val stagedPartitionBy = mapCtx
-        .map(c => snap.partitionColumns.map(c.physByLogical))
-        .getOrElse(snap.partitionColumns)
-      val staged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        stage(stagedDf, table, stagedPartitionBy))
-      val cdcStaged = shredGuard(spark, Some(snap), stagedDf.schema)(
-        cdcRows.map(stageCdc(_, table, snap)).getOrElse(Nil))
-      val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction("REPLACE WHERE", now)) ++
-        touched.map(f => removeAction(f.path, now)) ++
-        staged.map(s => addAction(s)) ++
-        cdcStaged.map(cdcAction)
-      if (publish(table, Some(snap), v + 1, lines)) {
-        // post-commit half of auto optimize (Databricks applies it to
-        // ANY file-adding write, row rewrites included)
-        maybeAutoCompact(spark, table, snap.configuration, staged)
-        return v + 1
-      }
-      dropStaged(table, staged)
-      dropStaged(table, cdcStaged)
-      attempt += 1 // lost the CAS race: replan against the winner
+      if (touchedAbs.isEmpty && newRows.isEmpty) None
+      else Some(Rewrite(touchedEntries(table, snap, touchedAbs, "replaceWhere"), { t =>
+        // inserted rows of a row-tracking table carry null materialized
+        // ids and resolve positionally against their new file's block
+        val batch = t.rows.where(!hit).select(outCols ++ t.ids: _*)
+          .unionByName(t.withNullIds(newRows))
+        val ctCol = DeltaRead.ChangeTypeCol
+        (batch, if (!t.cdc) None
+          else Some(t.rows.where(hit).select(outCols: _*)
+            .withColumn(ctCol, lit("delete"))
+            .unionByName(newRows.withColumn(ctCol, lit("insert")))))
+      }))
     }
-    throw new IllegalStateException(
-      s"replaceWhere: lost $maxRetries commit races on $table")
   }
 
   /** ALTER TABLE ADD CONSTRAINT: record a CHECK constraint
@@ -4070,15 +3957,11 @@ object DeltaWrite {
       cond: String): Long = {
     require(name.nonEmpty && !name.contains("."),
       s"addCheckConstraint: bad constraint name '$name'")
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+    commitOnHead(spark, table, "addCheckConstraint", removesData = false) { s =>
       val key = s"delta.constraints.$name"
       require(!s.configuration.contains(key),
         s"addCheckConstraint: '$name' already exists on $table")
-      enforceConstraints(DeltaRead.readVersion(spark, table, v),
+      enforceConstraints(DeltaRead.readVersion(spark, table, s.version),
         Map(key -> cond), table)
       val now = System.currentTimeMillis()
       val protoLine =
@@ -4094,10 +3977,8 @@ object DeltaWrite {
           s.schema.map(_.json).getOrElse(throw new IllegalStateException(
             s"addCheckConstraint: $table has no schema")),
           s.partitionColumns, now, s.configuration + (key -> cond)))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"addCheckConstraint: lost 10 races on $table")
   }
 
   /** ALTER TABLE SET TBLPROPERTIES: merge `props` into the table's
@@ -4135,11 +4016,7 @@ object DeltaWrite {
   def setProperties(spark: SparkSession, table: String,
       props: Map[String, String]): Long = {
     refuseObligationKeys(props.keys, "setProperties")
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+    commitOnHead(spark, table, "setProperties", removesData = false) { s =>
       val newConf = s.configuration ++ props
       val protoLine =
         if (!(cdcEnabled(newConf) && !cdcEnabled(s.configuration))) Nil
@@ -4156,10 +4033,8 @@ object DeltaWrite {
           s.schema.map(_.json).getOrElse(throw new IllegalStateException(
             s"setProperties: $table has no schema")),
           s.partitionColumns, now, newConf))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"setProperties: lost 10 races on $table")
   }
 
   /** ALTER TABLE UNSET TBLPROPERTIES — metaData-only commit dropping
@@ -4173,45 +4048,33 @@ object DeltaWrite {
   def unsetProperties(spark: SparkSession, table: String,
       keys: Seq[String]): Long = {
     refuseObligationKeys(keys, "unsetProperties")
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
-      if (!keys.exists(s.configuration.contains)) return v // nothing to drop
-      val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction("UNSET TBLPROPERTIES", now),
-        metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
-          s.schema.map(_.json).getOrElse(throw new IllegalStateException(
-            s"unsetProperties: $table has no schema")),
-          s.partitionColumns, now, s.configuration -- keys))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+    commitOnHead(spark, table, "unsetProperties", removesData = false) { s =>
+      if (!keys.exists(s.configuration.contains)) Done(s.version) // nothing to drop
+      else {
+        val now = System.currentTimeMillis()
+        Publish(Seq(commitInfoAction("UNSET TBLPROPERTIES", now),
+          metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
+            s.schema.map(_.json).getOrElse(throw new IllegalStateException(
+              s"unsetProperties: $table has no schema")),
+            s.partitionColumns, now, s.configuration -- keys)), s.version + 1)
+      }
     }
-    throw new IllegalStateException(s"unsetProperties: lost 10 races on $table")
   }
 
   /** ALTER TABLE DROP CONSTRAINT — metaData-only commit removing the
     * `delta.constraints.<name>` entry. */
-  def dropCheckConstraint(spark: SparkSession, table: String, name: String): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
+  def dropCheckConstraint(spark: SparkSession, table: String, name: String): Long =
+    commitOnHead(spark, table, "dropCheckConstraint", removesData = false) { s =>
       val key = s"delta.constraints.$name"
       require(s.configuration.contains(key),
         s"dropCheckConstraint: no constraint '$name' on $table")
       val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction("DROP CONSTRAINT", now),
+      Publish(Seq(commitInfoAction("DROP CONSTRAINT", now),
         metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
           s.schema.map(_.json).getOrElse(throw new IllegalStateException(
             s"dropCheckConstraint: $table has no schema")),
-          s.partitionColumns, now, s.configuration - key))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+          s.partitionColumns, now, s.configuration - key)), s.version + 1)
     }
-    throw new IllegalStateException(s"dropCheckConstraint: lost 10 races on $table")
-  }
 
   /** Apply `leafOp` to the struct containing `path`'s leaf, walking the
     * nesting prefix through existing STRUCT fields only (shared by the
@@ -4410,69 +4273,44 @@ object DeltaWrite {
                 s"cannot add nested field '${spec.path.mkString(".")}'")
           }
       }
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+    commitOnHead(spark, table, "addColumns", removesData = false) { s =>
       val committed = s.schema.getOrElse(throw new IllegalStateException(
         s"addColumns: $table has no committed schema"))
       val incoming = specs.foldLeft(committed)((sc, sp) => insert(sc, sp.path, sp))
-      val (schema, newConf) =
-        if (!DeltaRead.ColumnMapping.active(s.columnMappingMode))
-          (incoming, s.configuration)
-        else {
-          val startMax = s.configuration.get(WriteMapping.MaxIdKey)
-            .flatMap(_.toLongOption).getOrElse(WriteMapping.maxId(committed))
-          val (mapped, maxId) =
-            WriteMapping.mergeSchema(incoming, Some(committed), startMax)
-          (mapped, s.configuration + (WriteMapping.MaxIdKey -> maxId.toString))
-        }
+      val (schema, newConf) = mappingCtx(table, Some(s), evolve = Some(incoming))
+        .fold((incoming, s.configuration))(ctx => (ctx.schema,
+          s.configuration + (WriteMapping.MaxIdKey -> ctx.maxColumnId.toString)))
       val now = System.currentTimeMillis()
       // a defaulted add lists allowColumnDefaults in the SAME commit —
       // one atomic statement, protocol included (setColumnDefault's
       // upgrade contract)
       val proto =
-        if (foldedBySpec.isEmpty ||
-            (s.minWriterVersion >= 7 &&
-              s.writerFeatures.contains("allowColumnDefaults"))) Nil
-        else Seq(upgradeProtocolAction(table, s, Set.empty,
-          Set("allowColumnDefaults")))
+        if (foldedBySpec.isEmpty) Nil
+        else featureUpgrade(table, s, "allowColumnDefaults")
       val lines = Seq(commitInfoAction(
           if (specs.size == 1) "ADD COLUMN" else "ADD COLUMNS", now)) ++ proto :+
         metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
           schema.json, s.partitionColumns, now, newConf)
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+      Publish(lines, s.version + 1)
     }
-    throw new IllegalStateException(s"addColumns: lost 10 commit races on $table")
   }
 
-  /** Shared CAS loop for metaData-only schema commits on mapped
-    * tables: resolve the head snapshot, derive the new (schema,
-    * partitionColumns), publish; on a lost race re-derive against the
-    * winner. */
+  /** [[commitOnHead]] for metaData-only schema commits on mapped
+    * tables: derive the new (schema, partitionColumns) from the head
+    * snapshot; a lost race re-derives against the winner. */
   private def alterMappedSchema(spark: SparkSession, table: String, op: String)(
-      derive: DeltaRead.DeltaSnapshot => (StructType, Seq[String])): Long = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
-      validateWriterSupport(table, s, removesData = false)
+      derive: DeltaRead.DeltaSnapshot => (StructType, Seq[String])): Long =
+    commitOnHead(spark, table, op, removesData = false) { s =>
       require(DeltaRead.ColumnMapping.active(s.columnMappingMode),
         s"$op: $table is not column-mapped — a logical schema change " +
           "on a plain table would require rewriting every data file " +
           "(create the table via createColumnMapped to get O(1) renames)")
       val (schema, partCols) = derive(s)
       val now = System.currentTimeMillis()
-      val lines = Seq(commitInfoAction(op.takeWhile(_ != ' ') + " COLUMN", now),
+      Publish(Seq(commitInfoAction(op.takeWhile(_ != ' ') + " COLUMN", now),
         metaDataAction(s.metaId.getOrElse(UUID.randomUUID().toString),
-          schema.json, partCols, now, s.configuration))
-      if (publish(table, Some(s), v + 1, lines)) return v + 1
-      attempt += 1
+          schema.json, partCols, now, s.configuration)), s.version + 1)
     }
-    throw new IllegalStateException(s"$op: lost 10 commit races on $table")
-  }
 
   /** OPTIMIZE-style small-file compaction: bin-pack each partition's
     * live files into ~`targetBytes` groups, rewrite every multi-file
@@ -4503,11 +4341,11 @@ object DeltaWrite {
     * files; the other 999 days are never listed into groups, let alone
     * rewritten). Keys must be partition columns (logical names). */
   def compact(spark: SparkSession, table: String, targetBytes: Long = 128L << 20,
-      partitions: Map[String, String] = Map.empty): Int = {
-    var attempt = 0
-    while (attempt < 10) {
-      val v = DeltaRead.latestVersion(table)
-      val s = DeltaRead.snapshotAt(spark, table, v)
+      partitions: Map[String, String] = Map.empty): Int =
+    // dataChange=false reorganization still COMMITS — a table whose
+    // writer features we don't implement must not be touched
+    commitOnHead(spark, table, "compact", removesData = false) { s =>
+      val v = s.version
       require(!s.index.isEmpty, s"nothing to compact under $table")
       // SQL identifiers are case-insensitive: resolve each scope key to
       // the partition column's canonical spelling before matching the
@@ -4561,9 +4399,6 @@ object DeltaWrite {
         case _: DeltaRead.DatasetIndex => false
         case _ => !s.files.exists(f => scopeMatches(f.partitionValues))
       })) vacuousScope()
-      // dataChange=false reorganization still COMMITS — a table whose
-      // writer features we don't implement must not be touched
-      validateWriterSupport(table, s, removesData = false)
       // DV'd files rewrite through a MASKED scan (deleted rows applied,
       // never resurrected) — so compaction doubles as the protocol's
       // PURGE: the rewrite carries only visible rows and drops the
@@ -4657,11 +4492,10 @@ object DeltaWrite {
         case idx: DeltaRead.DatasetIndex =>
           // the pre-filter can hide scope-matching AT-target files —
           // distinguish "scope matches nothing" (refuse) from "scope
-          // matches, nothing to rewrite" (0); scoped listings are
-          // partition-sized
+          // matches, nothing to rewrite" (no groups below: 0); scoped
+          // listings are partition-sized
           if (idx.filterEntries(f => scopeMatches(f.partitionValues)).isEmpty)
             vacuousScope()
-          else return 0
         case _ => () // Seq tier already refused above
       }
       // bin-pack per partition tuple: greedy fill in commit order.
@@ -4699,7 +4533,6 @@ object DeltaWrite {
             .filter(g => g._2.size >= 2 || g._2.exists(_.dv.isDefined))
         }
       }
-      if (groups.isEmpty) return 0
       val now = System.currentTimeMillis()
       // groups stage CONCURRENTLY (bounded pool): each group's rewrite
       // is an independent Spark job over its own immutable input files
@@ -4789,29 +4622,28 @@ object DeltaWrite {
         org.apache.commons.io.FileUtils.deleteDirectory(tmpDir.toFile)
         (outs, fs)
       }
-      val staged: Seq[(Seq[Staged], Seq[DeltaRead.FileEntry])] =
-        if (groups.size <= 1) groups.map(stageGroup)
-        else {
-          import scala.collection.parallel.CollectionConverters._
-          val par = groups.par
-          val pool = new java.util.concurrent.ForkJoinPool(
-            math.min(groups.size, 8))
-          par.tasksupport =
-            new scala.collection.parallel.ForkJoinTaskSupport(pool)
-          try par.map(stageGroup).seq
-          finally pool.shutdown()
-        }
-      val lines = Seq(commitInfoAction("OPTIMIZE", now)) ++
-        staged.flatMap(_._2).map(f => removeAction(f.path, now, dataChange = false)) ++
-        staged.flatMap(_._1).map(st => addAction(st, dataChange = false))
-      if (publish(table, Some(s), v + 1, lines))
-        return staged.map(x => x._2.size - x._1.size).sum
-      staged.flatMap(_._1).foreach(x =>
-        Files.deleteIfExists(Paths.get(table, x.relPath)))
-      attempt += 1 // a writer landed v+1 first: replan on its snapshot
+      if (groups.isEmpty) Done(0)
+      else {
+        val staged: Seq[(Seq[Staged], Seq[DeltaRead.FileEntry])] =
+          if (groups.size <= 1) groups.map(stageGroup)
+          else {
+            import scala.collection.parallel.CollectionConverters._
+            val par = groups.par
+            val pool = new java.util.concurrent.ForkJoinPool(
+              math.min(groups.size, 8))
+            par.tasksupport =
+              new scala.collection.parallel.ForkJoinTaskSupport(pool)
+            try par.map(stageGroup).seq
+            finally pool.shutdown()
+          }
+        val lines = Seq(commitInfoAction("OPTIMIZE", now)) ++
+          staged.flatMap(_._2).map(f => removeAction(f.path, now, dataChange = false)) ++
+          staged.flatMap(_._1).map(st => addAction(st, dataChange = false))
+        // a writer that lands v+1 first: drop the rewrites, replan
+        Publish(lines, staged.map(x => x._2.size - x._1.size).sum,
+          onLost = () => dropStaged(table, staged.flatMap(_._1)))
+      }
     }
-    throw new IllegalStateException(s"compact: lost 10 commit races on $table")
-  }
 
   /** Garbage-collect data files no live snapshot references — crashed
     * writers' staged-then-abandoned part files and files removed by

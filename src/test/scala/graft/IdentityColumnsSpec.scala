@@ -18,12 +18,15 @@ class IdentityColumnsSpec extends SparkTestBase {
   private val rows = (1 to 10).map(i => (i.toLong, s"v$i"))
 
   /** A one-commit table whose commit is rewritten by the `edits`
-    * (each `from` text must occur) into an identity table. */
-  private def identityTable(tag: String, edits: (String, String)*): String = {
+    * (each `from` text must occur) into an identity table. It also
+    * carries CHECK constraint `c`, so dropping it reaches the commit. */
+  private def identityTable(tag: String, edits0: (String, String)*): String = {
     val t = Staging.tempDir(tag)
     DeltaWrite.append(rows.toDF("id", "txt").coalesce(1), t)
     val p = Paths.get(t, "_delta_log", f"${0}%020d.json")
     val lines = Files.readAllLines(p).asScala.toSeq
+    val edits = edits0 :+
+      (""""configuration":{}""" -> """"configuration":{"delta.constraints.c":"id > 0"}""")
     edits.foreach { case (from, _) =>
       assert(lines.exists(_.contains(from)), s"commit lacks $from") }
     Files.write(p, lines.map(l =>
@@ -60,7 +63,16 @@ class IdentityColumnsSpec extends SparkTestBase {
         "updateWhere" -> (() => DeltaWrite.updateWhere(spark, t, $"id" === 1L, Seq("txt" -> lit("u")))),
         "replaceWhere" -> (() => DeltaWrite.replaceWhere(spark, t,
           Seq((2L, "r")).toDF("id", "txt"), $"id" === 2L)),
-        "deleteWhere" -> (() => DeltaWrite.deleteWhere(spark, t, $"id" <= 3L)))
+        "deleteWhere" -> (() => DeltaWrite.deleteWhere(spark, t, $"id" <= 3L)),
+        // metadata-only commits and the layout rewrite refuse the same way
+        "setProperties" -> (() => DeltaWrite.setProperties(spark, t, Map("graft.k" -> "v"))),
+        "addCheckConstraint" -> (() => DeltaWrite.addCheckConstraint(spark, t, "c2", "id > 0")),
+        "dropCheckConstraint" -> (() => DeltaWrite.dropCheckConstraint(spark, t, "c")),
+        "addColumns" -> (() => DeltaWrite.addColumns(spark, t,
+          Seq(DeltaWrite.AddColSpec(Seq("extra"), org.apache.spark.sql.types.StringType)))),
+        "clusterBy" -> (() => DeltaWrite.clusterBy(spark, t, Seq("txt"))),
+        "setDomainMetadata" -> (() => DeltaWrite.setDomainMetadata(spark, t, "graft.test", "{}")),
+        "compact" -> (() => DeltaWrite.compact(spark, t)))
       writes.foreach { case (op, w) =>
         val e = intercept[UnsupportedOperationException](w())
         assert(e.getMessage.contains("identity columns"), s"$op on $t: ${e.getMessage}")
