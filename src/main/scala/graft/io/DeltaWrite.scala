@@ -1776,8 +1776,30 @@ object DeltaWrite {
     mapper.writeValueAsString(root)
   }
 
-  private[io] def commitInfoAction(op: String, ts: Long): String =
-    s"""{"commitInfo":{"timestamp":$ts,"operation":"$op","engineInfo":"graft"}}"""
+  private[io] def commitInfoAction(op: String, ts: Long,
+      metrics: Seq[(String, Long)] = Nil): String = {
+    val root = mapper.createObjectNode()
+    val ci = root.putObject("commitInfo")
+    ci.put("timestamp", ts); ci.put("operation", op); ci.put("engineInfo", "graft")
+    // string values, as Delta writes its operationMetrics map
+    if (metrics.nonEmpty) {
+      val m = ci.putObject("operationMetrics")
+      metrics.foreach { case (k, n) => m.put(k, n.toString) }
+    }
+    mapper.writeValueAsString(root)
+  }
+
+  /** A write's `operationMetrics` from its staged files: the file
+    * count, the footers' `numRecords` (left out when a file carries no
+    * stats) and the bytes written. No data is read. */
+  private def writeMetrics(staged: Seq[Staged]): Seq[(String, Long)] = {
+    val rows = staged.map(_.stats.flatMap(st =>
+      try Option(mapper.readTree(st).get("numRecords")).map(_.asLong())
+      catch { case _: Exception => None }))
+    Seq("numFiles" -> staged.size.toLong) ++
+      (if (rows.forall(_.isDefined)) Seq("numOutputRows" -> rows.flatten.sum) else Nil) :+
+      ("numOutputBytes" -> staged.map(_.size).sum)
+  }
 
   /** Atomic create-if-absent publish of commit `v`: the lines go to a
     * temp file that is hard-linked to the version path, so exactly one
@@ -1903,27 +1925,46 @@ object DeltaWrite {
     *    concurrent commit in between fails this one, and its staged
     *    files are dropped: one loader per table is the supported shape.
     *
+    * `txn = Some((appId, version))` makes the load exactly-once per
+    * batch through the SetTransaction action, as [[appendOnce]] does.
+    * The mark is checked BEFORE `df` is evaluated: when the table
+    * already records `appId` at `version` or later, the call returns
+    * the head version with no build, no key scan and no Spark job.
+    * Otherwise the load runs as above, its commit carries the `txn`
+    * action, and the commit re-checks the mark against the snapshot it
+    * lands on. A batch with no new rows still mints no version, so it
+    * records no mark either: the next call with the same appId repeats
+    * its (empty) build and anti-join rather than paying a version per
+    * no-op run. The caller owns what the appId covers: a batch changed
+    * under an unchanged appId is skipped, never compared.
+    *
     * Surrogate-key caveat, as in the reference: re-running on the SAME
     * bronze input is a no-op (same keys regenerate). For INCREMENTAL
     * loads where new dimension rows must not collide with keys already
     * assigned, use hashKey surrogates (stable under growth) — seqKey
     * renumbers from 1 on every rebuild. */
-  def appendNew(df: DataFrame, table: String, keyCols: Seq[String],
-      partitionBy: Seq[String] = Nil): Long = {
+  def appendNew(df: => DataFrame, table: String, keyCols: Seq[String],
+      partitionBy: Seq[String] = Nil, txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.col
-    val keys = if (keyCols.nonEmpty) keyCols else df.columns.toSeq
-    val incoming = df.dropDuplicates(keys)
+    // `df` is not evaluated yet: the active session reads the snapshot
+    if (txn.exists { case (appId, ver) =>
+          lastTxnVersion(SparkSession.active, table, appId).exists(_ >= ver) })
+      return DeltaRead.latestVersion(table)
+    val batch = df
+    val keys = if (keyCols.nonEmpty) keyCols else batch.columns.toSeq
+    val incoming = batch.dropDuplicates(keys)
     val readAt = if (tableExists(table)) DeltaRead.latestVersion(table) else -1L
     val fresh =
       if (readAt < 0) incoming
       else {
-        val existing = DeltaRead.readVersion(df.sparkSession, table, readAt)
+        val existing = DeltaRead.readVersion(batch.sparkSession, table, readAt)
           .select(keys.map(c => col(c).as(s"__ex_$c")): _*)
         val cond = keys.map(c => incoming(c) <=> col(s"__ex_$c")).reduce(_ && _)
         incoming.join(existing, cond, "left_anti")
       }
-    commit(fresh, table, partitionBy, replaceExisting = false, txn = None,
-      maxRetries = 1, readAt = Some(readAt)).get
+    // None: the mark landed while this batch was built
+    commit(fresh, table, partitionBy, replaceExisting = false, txn = txn,
+      maxRetries = 1, readAt = Some(readAt)).getOrElse(DeltaRead.latestVersion(table))
   }
 
   /** [[append]]/[[appendOnce]] with the batch's physical layout
@@ -2042,23 +2083,24 @@ object DeltaWrite {
       opName: Option[String] = None,
       readAt: Option[Long] = None): Option[Long] = {
     val spark = df.sparkSession
+    val metrics = writeMetrics(staged)
     var attempt = 0
     while (attempt < maxRetries) {
       val exists = tableExists(table)
       val now = System.currentTimeMillis()
       val v = if (exists) DeltaRead.latestVersion(table) + 1 else 0L
-      readAt.foreach { r =>
-        if (v != r + 1) throw new IllegalStateException(
-          s"DeltaWrite: $table moved past version $r, which this batch was derived from")
-      }
       val snap = if (exists) Some(DeltaRead.snapshotAt(spark, table, v - 1)) else None
       // race-safe replay guard: re-checked against the snapshot the CAS
       // will be attempted on, so a concurrent replay of the same batch
-      // cannot double-land
+      // cannot double-land (and skips rather than failing `readAt`)
       txn.foreach { case (appId, ver) =>
         if (snap.exists(_.txns.get(appId).exists(_ >= ver))) {
           dropStaged(table, staged); return None
         }
+      }
+      readAt.foreach { r =>
+        if (v != r + 1) throw new IllegalStateException(
+          s"DeltaWrite: $table moved past version $r, which this batch was derived from")
       }
       snap.foreach { s =>
         validateWriterSupport(table, s, removesData = replaceExisting)
@@ -2125,7 +2167,7 @@ object DeltaWrite {
         else Set.empty
       val header =
         if (!exists)
-          Seq(commitInfoAction("WRITE", now),
+          Seq(commitInfoAction("WRITE", now, metrics),
             // column mapping requires protocol (2, 5); generated
             // columns writer version 4; a feature-gated type anywhere
             // forces the (3, 7) feature form; plain tables stay at the
@@ -2156,7 +2198,7 @@ object DeltaWrite {
           // table properties (appendOnly, retention overrides) do not.
           // A schema evolving INTO a feature-gated type upgrades the
           // protocol in the same commit.
-          Seq(commitInfoAction("OVERWRITE", now)) ++
+          Seq(commitInfoAction("OVERWRITE", now, metrics)) ++
           (snap.toSeq.flatMap { s0 =>
             val missing = typeFeatures -- s0.writerFeatures
             if (missing.isEmpty) Nil
@@ -2166,7 +2208,7 @@ object DeltaWrite {
           Seq(metaDataAction(snap.flatMap(_.metaId).getOrElse(UUID.randomUUID().toString),
               schemaJson, partitionBy, now,
               mappedConf(snap.map(_.configuration).getOrElse(Map.empty))))
-        else Seq(commitInfoAction(opName.getOrElse("APPEND"), now))
+        else Seq(commitInfoAction(opName.getOrElse("APPEND"), now, metrics))
       val removes =
         if (replaceExisting)
           snap.map(_.files.map(f => removeAction(f.path, now))).getOrElse(Nil)

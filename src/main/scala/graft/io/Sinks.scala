@@ -8,7 +8,9 @@ import org.apache.spark.sql.DataFrame
   * `execute_values ... ON CONFLICT DO NOTHING` loads
   * (loader_NeonDB.py:364-371 etc.). A table updated in place (the gold
   * warehouse) is not written here: its offline conflict-skip load is
-  * [[DeltaWrite.appendNew]], one atomic Delta commit per load.
+  * [[DeltaWrite.appendNew]], one atomic Delta commit per load, which
+  * `Main` makes exactly-once per input set with a SetTransaction mark
+  * (a re-run on unchanged bronze skips the build, not just the rows).
   */
 object Sinks {
 

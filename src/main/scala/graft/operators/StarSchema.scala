@@ -298,10 +298,41 @@ object StarSchema {
   case class Bronze(orders: DataFrame, lineitem: DataFrame, part: DataFrame,
       customer: DataFrame, nation: DataFrame, region: DataFrame)
   object Bronze {
-    def apply(spark: SparkSession, sfDir: String): Bronze = Bronze(
-      Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir),
-      Tables.part(spark, sfDir), Tables.customer(spark, sfDir),
-      Tables.nation(spark, sfDir), Tables.region(spark, sfDir))
+    /** The bronze tables the star reads, each `$sfDir/<t>.parquet`, in
+      * the field order of [[Bronze]]. */
+    val tables: Seq[String] = Seq("orders", "lineitem", "part", "customer", "nation", "region")
+
+    def apply(spark: SparkSession, sfDir: String): Bronze = {
+      val Seq(o, l, p, c, n, r) = tables.map(Tables.read(spark, sfDir, _))
+      Bronze(o, l, p, c, n, r)
+    }
+
+    /** A stamp of the star's inputs: SHA-256 (hex) over the absolute
+      * path, size and mtime in ns of every file under each of
+      * [[tables]], walked so a single file and a directory of parts
+      * both work. Equal stamps mean the same files at the same sizes
+      * and mtimes; the bytes themselves are not read. */
+    def stamp(sfDir: String): String = {
+      import java.nio.file.{FileVisitOption, Files, Paths}
+      import java.nio.file.attribute.BasicFileAttributes
+      import scala.jdk.CollectionConverters._
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      tables.foreach { t =>
+        val st = Files.walk(Paths.get(sfDir, s"$t.parquet").toAbsolutePath.normalize(),
+          FileVisitOption.FOLLOW_LINKS)
+        val files =
+          try st.iterator().asScala.filter(Files.isRegularFile(_)).toList.sortBy(_.toString)
+          finally st.close()
+        files.foreach { f =>
+          val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+          val mtimeNs = a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)
+          // NUL ends the path: no path contains one
+          md.update(f.toString.getBytes("UTF-8")); md.update(0.toByte)
+          md.update(s"${a.size} $mtimeNs\n".getBytes("UTF-8"))
+        }
+      }
+      java.util.HexFormat.of().formatHex(md.digest())
+    }
   }
 
   /** Gold table names in build order — lets orchestration iterate the

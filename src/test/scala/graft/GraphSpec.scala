@@ -142,7 +142,7 @@ class GraphSpec extends SparkTestBase {
     val (jobs3, jobs9, out) = try {
       val (_, jobs3, _) = observed(Graph.pagerank(edges, iters = 3))
       val (out, jobs9, _) = observed(Graph.pagerank(edges, iters = 9))
-      (jobs3, jobs9, out)
+      (jobs3.size, jobs9.size, out)
     } finally sc.removeSparkListener(snapshot)
     info(s"Spark jobs: $jobs3 at 3 rounds, $jobs9 at 9 rounds")
     assert(jobs3 == jobs9 && jobs9 <= 6, s"$jobs3 jobs at 3 rounds, $jobs9 at 9")

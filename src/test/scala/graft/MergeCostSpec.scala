@@ -49,7 +49,8 @@ class MergeCostSpec extends SparkTestBase {
       assert(holding.size == 1)
       val src = ((0 until 10).map(i => (i.toLong, "upd", -1L)) ++
         (1000 until 1005).map(i => (i.toLong, "new", 0L))).toDF("id", "txt", "n")
-      val (_, jobs, scans) = observed(DeltaWrite.merge(spark, t, src, Seq("id")))
+      val (_, jobList, scans) = observed(DeltaWrite.merge(spark, t, src, Seq("id")))
+      val jobs = jobList.size
       val data = dataScans(t, scans)
       info(s"$jobs Spark jobs; data scans: ${data.map(_.columns.mkString(",")).mkString(" | ")}")
       val keyScans = data.filter(_.paths == before)

@@ -111,6 +111,38 @@ class PropertySpec extends SparkTestBase {
     assert(DeltaRead.read(spark, s"$dir/null_keys").count() == 2)
   }
 
+  test("gold load txn: a marked batch is never built; other appIds still skip stored keys") {
+    val path = s"${Staging.tempDir("graft_gold_txn")}/fact_orders"
+    val fact = StarSchema.build(spark, sf)("fact_orders")
+    var built = 0
+    def batch(df: org.apache.spark.sql.DataFrame) = { built += 1; df }
+    val v0 = DeltaWrite.appendNew(batch(fact), path, Seq("o_orderkey"), txn = Some("run.a" -> 0L))
+    assert(built == 1 && DeltaWrite.lastTxnVersion(spark, path, "run.a").contains(0L))
+    // the same (appId, 0): the frame is never evaluated, the head returns
+    val shifted = fact.withColumn("o_orderkey", $"o_orderkey" + 10000000L)
+    DeltaWrite.appendOnce(shifted.limit(3), path, "other", 0L)
+    val head = DeltaRead.latestVersion(path)
+    assert(head == v0 + 1)
+    assert(DeltaWrite.appendNew(batch(fact), path, Seq("o_orderkey"),
+      txn = Some("run.a" -> 0L)) == head)
+    assert(built == 1 && DeltaRead.latestVersion(path) == head)
+    // a different appId over the same table appends only new keys
+    val n = DeltaRead.read(spark, path).count()
+    val v1 = DeltaWrite.appendNew(batch(fact.unionAll(shifted)), path, Seq("o_orderkey"),
+      txn = Some("run.b" -> 0L))
+    assert(built == 2 && v1 == head + 1)
+    assert(DeltaRead.read(spark, path).count() - n == fact.count() - 3)
+    assert(DeltaWrite.lastTxnVersion(spark, path, "run.b").contains(0L))
+    // nothing new: no version and no mark, so the next call repeats the work
+    assert(DeltaWrite.appendNew(batch(fact), path, Seq("o_orderkey"),
+      txn = Some("run.c" -> 0L)) == v1)
+    assert(DeltaRead.latestVersion(path) == v1)
+    assert(DeltaWrite.lastTxnVersion(spark, path, "run.c").isEmpty)
+    assert(DeltaWrite.appendNew(batch(fact), path, Seq("o_orderkey"),
+      txn = Some("run.c" -> 0L)) == v1)
+    assert(built == 4)
+  }
+
   test("a failed gold load leaves the prior version whole; a retry converges") {
     val path = s"${Staging.tempDir("graft_gold_fail")}/fact_orders"
     val fact = StarSchema.build(spark, sf)("fact_orders")
